@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration
+from .checkpoints import data_barrier
 from .range_join import workload_at_instants
 
 OUTCOME_ACTIVATE = 1
@@ -82,20 +83,21 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     seconds, matching the reference's final parsed table
     (activation_rules.py:159-164). day_of_week is Monday=0 (F3 shift).
 
-    ``cases``/``inst`` are LAZY localCheckpoints: each is referenced by
+    ``cases``/``inst`` are LAZY barriers: each is referenced by
     four plan branches below (instants, subset, flow, final join), and
     without materialization every branch re-runs the per-case windows
     over the discovery output (the q43 lesson; lazy, so plan building
-    stays execution-free and the blocks are ContextCleaner-reclaimed).
+    stays execution-free). Their blocks live until the enclosing
+    ``checkpoint_scope`` exits.
     Modest at sf0.1 (the upstream discovery frame is already
     checkpointed, so each branch recompute was one window pass) but it
     bounds the fan-out cost at corpus scale, where four re-runs of the
     per-case aggregation are four shuffles.
     """
     ids = config.log_ids
-    cases = _per_case(log, config).localCheckpoint(eager=False)
+    cases = data_barrier(_per_case(log, config), eager=False)
 
-    inst = cases.groupBy(ids.batch_id).agg(
+    inst = data_barrier(cases.groupBy(ids.batch_id).agg(
         F.first(ids.batch_type).alias(ids.batch_type),
         F.first(ids.resource).alias(ids.resource),
         F.max("case_enabled").alias("inst_enabled"),     # last-enabled = batch ready
@@ -107,7 +109,7 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
         "inst_enabled", "inst_first_enabled",
         F.col("_first.case_start").alias("inst_start"),
         "activities",
-    ).localCheckpoint(eager=False)
+    ), eager=False)
 
     # --- candidate instants -------------------------------------------------
     n_ready = config.num_batch_ready_negative_events
@@ -408,7 +410,7 @@ def _group_key_expr(mode: ActivationRulesMode, ids) -> F.Column:
 def get_activation_rules(
     feat: DataFrame,
     config: Configuration,
-    mode: ActivationRulesMode = ActivationRulesMode.PER_BATCH_TYPE,
+    mode: ActivationRulesMode = ActivationRulesMode.PER_BATCH,
 ) -> DataFrame:
     """Group the features table per mode (A15), apply the >30-rows /
     2-outcome guards (A14) JVM-side, then mine rules per group in

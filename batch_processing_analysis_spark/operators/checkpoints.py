@@ -1,5 +1,6 @@
-"""Tracked localCheckpoint: eager lineage truncation WITH release —
-plus the r12 barrier policy (VERDICT r11 task 8).
+"""Tracked localCheckpoint: eager lineage truncation WITH release, the
+request scope that frees a request's barriers, and the r12 barrier
+policy (VERDICT r11 task 8).
 
 ``DataFrame.localCheckpoint(eager=True)`` persists the frame's rows in
 the block manager but exposes no handle to free them — every iterative
@@ -13,8 +14,20 @@ checkpoint has materialized. A localCheckpointed RDD has no lineage to
 recompute from, so releasing one is safe ONLY when nothing will read it
 again — i.e. after every downstream consumer is itself checkpointed.
 
+Request scope: :func:`checkpoint_scope` is the one lifetime mechanism
+for a request's barriers. While a scope is open, every
+:func:`data_barrier` / :func:`checkpoint_tracked` records the RDD ids
+it persists into the innermost open scope, and the scope unpersists
+all of them on exit — also when its body raises. Ids a loop already
+released early (discovery, graph, bpe) are a no-op there. With no scope
+open nothing is recorded and barriers live until the caller releases
+them or the session ends. The rule for callers: nothing created inside
+a scope may be cached beyond it (the module-level plan caches in
+``plans/queries_eventlog.py`` run outside any scope for that reason).
+
 Driver-side bookkeeping only; single-threaded job submission assumed
-(concurrent checkpoint calls could interleave id snapshots).
+(concurrent checkpoint calls could interleave id snapshots, and the
+open scopes are one module-level stack).
 
 Barrier policy (SURVEY §6 policy table): local checkpoints store
 blocks on executors only and are NOT fault-tolerant — on any executor
@@ -36,11 +49,24 @@ from __future__ import annotations
 
 import os
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _MODE_ENV = "SPARK_GRAFT_CHECKPOINT"
 _DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
+
+
+class _Scope:
+    """One open :func:`checkpoint_scope`: the RDD ids it must free and
+    the context that holds them."""
+
+    def __init__(self):
+        self.ids: set[int] = set()
+        self.jsc = None
+
+
+_scopes: list[_Scope] = []  # open scopes, innermost last
 
 
 def _reliable_mode() -> bool:
@@ -55,14 +81,25 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
         sc.setCheckpointDir(ckdir)
 
 
-def data_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Stage a DATA-SIZED frame (see the module docstring's policy):
-    ``localCheckpoint`` under the default local mode, reliable
-    ``checkpoint()`` under ``SPARK_GRAFT_CHECKPOINT=reliable``."""
+def _barrier(df: DataFrame, eager: bool) -> DataFrame:
     if _reliable_mode():
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def _persistent_ids(jsc) -> set[int]:
+    return set(jsc.getPersistentRDDs().keySet().toArray())
+
+
+def data_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Stage a DATA-SIZED frame (see the module docstring's policy):
+    ``localCheckpoint`` under the default local mode, reliable
+    ``checkpoint()`` under ``SPARK_GRAFT_CHECKPOINT=reliable``. Inside
+    a :func:`checkpoint_scope` the scope frees it on exit."""
+    if _scopes:
+        return checkpoint_tracked(df, eager=eager)[0]
+    return _barrier(df, eager)
 
 
 def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
@@ -77,17 +114,41 @@ def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, se
     is a cheap full-scan aggregate anyway, fusing "materialize" and
     "compute" into one job instead of two."""
     jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    out = data_barrier(df, eager=eager)
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    return out, after - before
+    before = _persistent_ids(jsc)
+    out = _barrier(df, eager)
+    new = _persistent_ids(jsc) - before
+    if _scopes:
+        _scopes[-1].ids |= new
+        _scopes[-1].jsc = jsc
+    return out, new
+
+
+@contextmanager
+def checkpoint_scope():
+    """Free every barrier taken inside the block when it exits, also on
+    an exception. Scopes nest; a barrier belongs to the innermost one.
+    Only frames that are no longer read may leave the block: collect
+    what the caller needs before it exits (module docstring)."""
+    scope = _Scope()
+    _scopes.append(scope)
+    try:
+        yield
+    finally:
+        _scopes.pop()
+        if scope.ids:
+            _release(scope.jsc, scope.ids)
 
 
 def release_checkpoints(df: DataFrame, rdd_ids: set[int]) -> None:
     """Drop the block-manager storage of previously localCheckpointed
     intermediates (blocking=False). See module docstring for the safety
-    contract. No-op on ids a reliable checkpoint did not persist."""
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    contract. No-op on ids a reliable checkpoint did not persist, or
+    that were released already."""
+    _release(df.sparkSession.sparkContext._jsc, rdd_ids)
+
+
+def _release(jsc, rdd_ids: set[int]) -> None:
+    jmap = jsc.getPersistentRDDs()
     for rid in rdd_ids:
         rdd = jmap.get(rid)
         if rdd is not None:

@@ -104,9 +104,9 @@ def temperature_mix_weights(docs: DataFrame, alpha: float = 0.3,
     # ``per`` is referenced by the total, the scores, and the
     # normalizer — unstaged, each reference re-scans the corpus. The
     # staged frame is |sources| rows.
-    from .checkpoints import checkpoint_tracked
+    from .checkpoints import data_barrier
 
-    per, _ = checkpoint_tracked(per, eager=False)
+    per = data_barrier(per, eager=False)
     tot = per.agg(F.sum("n_size").alias("_tot"))
     scored = per.join(F.broadcast(tot)).select(
         "source", "n_size",

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import BatchType, Configuration
+from .checkpoints import data_barrier
 
 OVERALL = "__overall__"  # batch_type marker for the type-pooled level
 
@@ -76,8 +77,7 @@ def summarize_batch_waiting_times(log: DataFrame, config: Configuration) -> Data
     # carried 84 Exchanges from exactly this fan-out). One lazy
     # checkpoint of the small O(#instances·cases) frame serves all of
     # them; values are untouched.
-    per_case = batch_instance_summary(log, config).localCheckpoint(
-        eager=False)
+    per_case = data_barrier(batch_instance_summary(log, config), eager=False)
 
     inst = (
         per_case.groupBy("activities", ids.batch_type, ids.batch_id)
@@ -224,10 +224,10 @@ def occurrence_denominators(log: DataFrame, summary: DataFrame,
     # left join — 3 + #lengths re-executions of the log-sized subtree
     # without the barrier (profiled at r11 close: two identical
     # 8 s-executor stages per q34 run from this fan-out alone).
-    keys = (
+    keys = data_barrier(
         summary.select("activities").distinct()
-        .join(pattern, "activities", "left")
-        .localCheckpoint(eager=False)
+        .join(pattern, "activities", "left"),
+        eager=False,
     )
 
     single = keys.filter(F.size("pattern") == 1).select(
@@ -282,7 +282,7 @@ def batch_report(log: DataFrame, config: Configuration,
     # pattern length — each traversal re-executing the upstream
     # enablement/discovery/waiting-time plan. Checkpoint it once
     # (lazily) so every pass reads the materialized event rows.
-    log = log.localCheckpoint(eager=False)
+    log = data_barrier(log, eager=False)
     summary = summarize_batch_waiting_times(log, config)
     denom = occurrence_denominators(log, summary, config, order_col)
     out = summary.join(F.broadcast(denom), "activities", "left")

@@ -1045,9 +1045,9 @@ def embedding_outliers(corpus: DataFrame, k: int = 20,
     # unstaged, each reference re-runs the explode/centroid/distance
     # pipeline. The staged frame is one row per vector (id, label,
     # dist_micro).
-    from .checkpoints import checkpoint_tracked
+    from .checkpoints import data_barrier
 
-    d2, _ = checkpoint_tracked(d2, eager=False)
+    d2 = data_barrier(d2, eager=False)
     mom = d2.groupBy(label_col).agg(
         F.count(F.lit(1)).alias("_gn"),
         F.sum("dist_micro").alias("_gs"),

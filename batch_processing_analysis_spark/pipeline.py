@@ -1,18 +1,29 @@
-"""End-to-end analysis facade (reference: analysis.py:41-49,
-BatchProcessingAnalysis.analyze_batches).
+"""End-to-end analysis (reference: analysis.py:41-49,
+BatchProcessingAnalysis.analyze_batches, and main.py:23-43).
 
-One lazy DataFrame plan: enabled-time estimation -> batch discovery ->
-waiting-time decomposition. The reference materializes between stages
-(temp CSV + R subprocess); here nothing materializes until the caller's
-action, so Catalyst sees the whole pipeline at once.
+:func:`analyze` is the engine's request: an event log in; the
+waiting-time (``*_WTs``) table, the batch report and the activation
+rules out. :func:`analyze_batches` is its lazy core — enabled-time
+estimation -> batch discovery -> waiting-time decomposition as one
+DataFrame plan. The reference materializes between stages (temp CSV +
+R subprocess); here nothing materializes until the caller's action, so
+Catalyst sees the whole pipeline at once.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from .config import Configuration
-from .operators.checkpoints import data_barrier
+from .operators.activation_rules import (
+    features_table,
+    get_activation_rules,
+    render_activation_rules,
+)
+from .operators.checkpoints import checkpoint_scope, data_barrier, release_checkpoints
 from .operators.discovery import discover_batches
 from .operators.enablement import add_enabled_times
 from .operators.reporting import batch_report, render_report
@@ -24,42 +35,53 @@ def analyze_batches(log: DataFrame, config: Configuration | None = None,
     """Event log -> log + batch columns + WT decomposition (the *_WTs
     table of the reference, outputs/*_WTs.csv.gz).
 
-    The result is backed by the discovery pipeline's eager
-    localCheckpoint; when a long-lived session is DONE with the frame,
-    pass it to :func:`release_analysis` — repeated facade invocations
-    otherwise each retain one checkpointed copy of the log until driver
-    GC gets around to it (measured 2.7× slowdown on the second of two
-    back-to-back 1M-event runs)."""
+    The result is backed by the discovery pipeline's eager checkpoint.
+    To free it once every action on the frame has run, call this inside
+    :func:`~.operators.checkpoints.checkpoint_scope` — repeated calls in
+    a long-lived session otherwise each retain one checkpointed copy of
+    the log (measured 2.7× slowdown on the second of two back-to-back
+    1M-event runs)."""
     config = config or Configuration()
     ids = config.log_ids
-    jsc = log.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
     if ids.enabled_time not in log.columns:
         log = add_enabled_times(log, ids)
     batched = discover_batches(log, config, detect_case_level=detect_case_level)
-    out = add_waiting_times(batched, config)
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
-    out._bpa_checkpoint_ids = after - before
-    return out
+    return add_waiting_times(batched, config)
+
+
+class Analysis(NamedTuple):
+    """The three outputs of one request, collected to the driver."""
+    wt: pd.DataFrame
+    report_text: str
+    rules_text: str
+
+
+def analyze(log: DataFrame, config: Configuration | None = None) -> Analysis:
+    """Event log -> the *_WTs table, the rendered batch report and the
+    rendered activation rules (per batch; reference main.py:23-43).
+
+    Runs in one :func:`~.operators.checkpoints.checkpoint_scope`: every
+    checkpoint a layer takes is freed before this returns, also when a
+    layer raises, so nothing the request allocates outlives the call."""
+    config = config or Configuration()
+    with checkpoint_scope():
+        wt_df = analyze_batches(log, config)
+        wt = wt_df.toPandas()
+        report_text = render_report(batch_report(wt_df, config).collect(), config)
+        feat = features_table(wt_df, config)
+        rules = get_activation_rules(feat, config)
+        rules_text = render_activation_rules(feat, rules, config)
+    return Analysis(wt, report_text, rules_text)
 
 
 def release_analysis(df: DataFrame) -> None:
-    """Free the block-manager storage behind an :func:`analyze_batches`
-    result. Call ONLY once every action on the frame (and anything
-    derived from it) has run — localCheckpointed blocks have no lineage
-    to recompute from. No-op for frames without a release handle."""
-    from .operators.checkpoints import release_checkpoints
-
+    """Free the checkpoint ids a caller recorded on ``df`` as
+    ``_bpa_checkpoint_ids``; no-op without them. Exists only for the
+    event-log benchmark harness, which records that handle itself, and
+    goes when the harness moves onto :func:`analyze`."""
     ids = getattr(df, "_bpa_checkpoint_ids", None)
     if ids:
         release_checkpoints(df, ids)
-
-
-def waiting_time_report(log: DataFrame, config: Configuration | None = None) -> str:
-    """Event log -> rendered text report (reference: main.py:23-25)."""
-    config = config or Configuration()
-    analyzed = analyze_batches(log, config)
-    return render_report(batch_report(analyzed, config).collect(), config)
 
 
 def corpus_feature_stage(docs: DataFrame) -> DataFrame:
@@ -271,7 +293,7 @@ def prepare_web_corpus(docs: DataFrame, *, url_col: str = "url",
     # shuffle runs once and both branches read it. Deriving from
     # `base` looks cheaper (no window) but builds a DIFFERENT subtree
     # that re-executes the whole input lineage: measured 11.0 s vs
-    # 6.4 s on the 10x governance facade (tools/ab_webcorpus.py, r11).
+    # 6.4 s on the 10x governance facade (OPTIMIZATION_r11.md).
     out = PSL.with_psl_registered_domain(
         deduped, "host", rules=psl_rules,
         include_private=include_private)

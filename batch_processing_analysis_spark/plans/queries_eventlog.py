@@ -861,9 +861,9 @@ def _features(spark: SparkSession, sf_dir: str):
     disc, cfg = _discovered(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _FEAT_CACHE:
-        from ..operators.checkpoints import checkpoint_tracked
+        from ..operators.checkpoints import data_barrier
 
-        feat, _ = checkpoint_tracked(features_table(disc, cfg), eager=False)
+        feat = data_barrier(features_table(disc, cfg), eager=False)
         _FEAT_CACHE[key] = feat
         for k in [k for k in _FEAT_CACHE if k[0] != key[0]]:
             del _FEAT_CACHE[k]
@@ -1172,7 +1172,7 @@ def q28_prioritization_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _Q28_CACHE:
-        from ..operators.checkpoints import checkpoint_tracked
+        from ..operators.checkpoints import data_barrier
 
         H = 3_600_000_000
         us = F.unix_micros(F.col(IDS.start_time))
@@ -1188,7 +1188,7 @@ def q28_prioritization_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_s_us")
         )
         log = add_enabled_times(log, IDS, concurrency_threshold=0.1)
-        log, _ = checkpoint_tracked(log, eager=False)
+        log = data_barrier(log, eager=False)
         _Q28_CACHE[key] = log
         for k in [k for k in _Q28_CACHE if k[0] != key[0]]:
             del _Q28_CACHE[k]

@@ -362,19 +362,19 @@ def main() -> None:
         # full build+materialize — facades report steady-state like the
         # queries do (a cold-vs-warm delta here is JVM/session noise,
         # measured at 2-4x run-to-run).
-        from batch_processing_analysis_spark.pipeline import release_analysis
+        from batch_processing_analysis_spark.operators.checkpoints import (
+            checkpoint_scope,
+        )
 
         def _mk_runner(fn):
             def run_once() -> float:
-                t0 = time.time()
-                out = fn()
-                out.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                # Drop the run's checkpoint blocks so the next run
-                # measures the pipeline, not this run's block-manager
-                # pressure.
-                release_analysis(out)
-                return dt
+                # The scope drops the run's checkpoint blocks on exit so
+                # the next run measures the pipeline, not this run's
+                # block-manager pressure.
+                with checkpoint_scope():
+                    t0 = time.time()
+                    fn().write.format("noop").mode("overwrite").save()
+                    return time.time() - t0
             return run_once
 
         # Single-run closures kept for the >2x re-measure stage; the

@@ -4,17 +4,22 @@ The r2 judge found discover_batches leaking two full-frame checkpoint
 copies per call and connected_components one label table per superstep.
 These tests pin the fix: after a pipeline call materializes, the block
 manager holds at most the FINAL checkpoint's RDD — intermediates are
-released explicitly.
+released explicitly. The request (``pipeline.analyze``) holds nothing
+after it returns or raises: its ``checkpoint_scope`` frees every
+barrier any layer took.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+import pytest
 
 from batch_processing_analysis_spark.config import Configuration
 from batch_processing_analysis_spark.fixtures import inject_batches, injected_log_df
+from batch_processing_analysis_spark.operators import checkpoints as C
+from batch_processing_analysis_spark.operators import discovery
 from batch_processing_analysis_spark.operators.discovery import discover_batches
 from batch_processing_analysis_spark.operators.graph import connected_components
+from batch_processing_analysis_spark.pipeline import analyze
 
 
 def _persistent_ids(spark):
@@ -50,25 +55,76 @@ def test_connected_components_releases_superstep_checkpoints(spark):
     assert {r["component"] for r in rows} == {0}
 
 
-def test_release_analysis_frees_blocks(spark):
-    from batch_processing_analysis_spark.fixtures import (
-        inject_batches, injected_log_df,
-    )
-    from batch_processing_analysis_spark.pipeline import (
-        analyze_batches, release_analysis,
-    )
+def _spy_release(monkeypatch):
+    """Record every id set a checkpoint scope frees on exit."""
+    freed: list[set[int]] = []
+    real = C._release
 
-    log = injected_log_df(spark, inject_batches(n_batches=3, batch_size=4))
+    def spy(jsc, ids):
+        freed.append(set(ids))
+        real(jsc, ids)
 
-    # Set-based, not count-based: the ContextCleaner reclaims OTHER
-    # tests' dead blocks asynchronously during a full-suite run, so
-    # absolute persistent-RDD counts are racy — only the ids THIS run
-    # created are deterministic.
+    monkeypatch.setattr(C, "_release", spy)
+    return freed
+
+
+def _analysis_log(spark):
+    return injected_log_df(spark, inject_batches(n_batches=3, batch_size=4))
+
+
+# The request tests compare id SETS, not counts: the ContextCleaner
+# reclaims OTHER tests' dead blocks asynchronously during a full-suite
+# run, so absolute persistent-RDD counts are racy — only the ids a call
+# created are deterministic.
+
+def test_analyze_frees_every_checkpoint(spark, monkeypatch):
+    freed = _spy_release(monkeypatch)
+    log = _analysis_log(spark)
     before = _persistent_ids(spark)
-    out = analyze_batches(log)
-    out.count()
-    created = _persistent_ids(spark) - before
-    assert created  # checkpoint-backed while in use
-    release_analysis(out)
-    assert not (_persistent_ids(spark) & created)  # every run block freed
-    release_analysis(out)  # idempotent no-op
+    out = analyze(log)
+    assert not out.wt.empty and out.report_text.strip() and out.rules_text.strip()
+    assert freed and freed[0]  # the request did take checkpoints
+    assert not (_persistent_ids(spark) - before)
+
+
+def test_analyze_frees_checkpoints_when_discovery_raises(spark, monkeypatch):
+    freed = _spy_release(monkeypatch)
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("injected discovery failure")
+
+    monkeypatch.setattr(discovery, "_min_size_filter", boom)
+    log = _analysis_log(spark)
+    before = _persistent_ids(spark)
+    with pytest.raises(RuntimeError, match="injected discovery failure"):
+        analyze(log)
+    # discovery's two eager intermediates existed when it raised
+    assert freed and freed[0]
+    assert not (_persistent_ids(spark) - before)
+
+
+def test_back_to_back_analyze_retains_nothing(spark):
+    log = _analysis_log(spark)
+    before = _persistent_ids(spark)
+    first = analyze(log)
+    second = analyze(log)
+    assert first.report_text == second.report_text
+    assert not (_persistent_ids(spark) - before)
+
+
+def test_scope_frees_barriers_and_nests(spark):
+    df = spark.range(50)
+    before = _persistent_ids(spark)
+    with C.checkpoint_scope():
+        outer = C.data_barrier(df, eager=True)
+        with C.checkpoint_scope():
+            inner = C.data_barrier(df.selectExpr("id * 2 AS x"), eager=True)
+            assert inner.count() == 50
+        alive = _persistent_ids(spark) - before
+        assert outer.count() == 50  # the outer barrier is still readable
+    assert len(alive) == 1  # the inner scope freed its own barrier only
+    assert not (_persistent_ids(spark) - before)
+    # no scope open: a barrier is the caller's to release, as before
+    kept, ids = C.checkpoint_tracked(df)
+    assert ids and ids <= _persistent_ids(spark)
+    C.release_checkpoints(kept, ids)
