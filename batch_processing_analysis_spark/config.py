@@ -119,8 +119,6 @@ class Configuration:
     random_seed: int = 42
 
     # Spark-only knobs
-    shuffle_partitions: int | None = None  # None = leave session setting alone
-    broadcast_dimension_threshold: int = 10_000_000  # rows below this: hint broadcast
     # Workload (J2) range-join strategy: None broadcasts the instant set
     # (right while #instants fits the broadcast budget); a width in
     # seconds switches to the bucketed equi-join in operators/range_join
@@ -130,9 +128,10 @@ class Configuration:
     # With workload_bucket_seconds=None, features_table AUTO-switches to
     # the bucketed join (width = workload_auto_bucket_seconds) when the
     # estimated instant count — #instances × (1 + ready + enabled
-    # negatives), one cheap count over the checkpointed discovery frame
-    # — exceeds this budget. ~500k (resource, epoch) rows ≈ tens of MB
-    # broadcast: the sane ceiling for shipping the point set to every
-    # executor. None disables the probe (always broadcast).
+    # negatives), where #instances is the count that materializes the
+    # features table's per-instance barrier — exceeds this budget. ~500k
+    # (resource, epoch) rows ≈ tens of MB broadcast: the sane ceiling for
+    # shipping the point set to every executor. None disables the probe
+    # (always broadcast).
     workload_auto_bucket_threshold: int | None = 500_000
     workload_auto_bucket_seconds: int = 3_600

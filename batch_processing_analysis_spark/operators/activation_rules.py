@@ -6,21 +6,24 @@ Two stages:
    (batch instance x candidate instant). The reference loops per
    instance in Python, rescanning the full log per instant for the
    workload feature (O(instants x N)); here positives and negatives fan
-   out with ``explode``, subset aggregates come from one join + groupBy,
-   and workload is ONE range join over all instants (J2).
+   out with ``explode``, subset and flow aggregates come from one
+   join + groupBy, and workload is ONE range join over all instants (J2).
 
-2. **Rule induction** (U1): sequential-covering rule miner over each
-   feature group via ``applyInPandas``. The reference calls
+2. **Rule induction** (U1), on the driver: the features table is
+   collected once (it is bounded by the number of batch instances, see
+   :func:`get_activation_rules`), grouped per mode and mined with a
+   sequential-covering rule miner per group — no Python worker, no
+   second execution of the features plan. The reference calls
    ``wittgenstein.RIPPER``; that library is not a runtime dependency
    here, so an equivalent native inducer (IREP/RIPPER-style greedy
    conjunctive rules maximizing FOIL gain, the published algorithm of
-   Cohen 1995) runs inside the pandas UDF. The accept/remove/repeat
-   loop, support/confidence accounting, and the >30-rows / 2-outcome
-   guards (A14) match the reference loop (activation_rules.py:180-240).
+   Cohen 1995) stands in. The accept/remove/repeat loop,
+   support/confidence accounting, and the >30-rows / 2-outcome guards
+   (A14) match the reference loop (activation_rules.py:180-240).
 
 Determinism: the reference samples negatives with unseeded
-``random.sample``; here sampling is ``F.rand(config.random_seed)``
-(SURVEY §7.4 determinism policy).
+``random.sample``; here the sample key is ``md5(config.random_seed,
+case)`` (SURVEY §7.4 determinism policy).
 """
 
 from __future__ import annotations
@@ -28,7 +31,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration
@@ -44,10 +46,15 @@ OUTCOME_NOT_ACTIVATE = 0
 # --------------------------------------------------------------------------
 
 def _per_case(log: DataFrame, config: Configuration) -> DataFrame:
-    """One row per (batch instance, case): enabled/start scalars +
-    the case's first-event activity (for firing_activity)."""
+    """One row per (batch instance, case): enabled/start scalars, the
+    case's first-event activity (for firing_activity) and the case's
+    first start over the FULL log (for t_max_flow, J6)."""
     ids = config.log_ids
-    batched = log.filter(F.col(ids.batch_id).isNotNull())
+    batched = (
+        log.withColumn("_log_first_start", F.min(F.unix_micros(F.col(ids.start_time)))
+                       .over(W.partitionBy(ids.case)))
+        .filter(F.col(ids.batch_id).isNotNull())
+    )
     return (
         batched.groupBy(ids.batch_id, ids.case)
         .agg(
@@ -62,6 +69,7 @@ def _per_case(log: DataFrame, config: Configuration) -> DataFrame:
                 )
             ).alias("_first"),
             F.sort_array(F.collect_set(ids.activity)).alias("_acts"),
+            F.min("_log_first_start").alias("case_log_first_start"),
         )
         .select(
             ids.batch_id,
@@ -72,6 +80,7 @@ def _per_case(log: DataFrame, config: Configuration) -> DataFrame:
             F.col("_first.en").alias("case_enabled"),
             F.col("_first.act").alias("case_first_activity"),
             "_acts",
+            "case_log_first_start",
         )
     )
 
@@ -84,15 +93,14 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     (activation_rules.py:159-164). day_of_week is Monday=0 (F3 shift).
 
     ``cases``/``inst`` are LAZY barriers: each is referenced by
-    four plan branches below (instants, subset, flow, final join), and
-    without materialization every branch re-runs the per-case windows
-    over the discovery output (the q43 lesson; lazy, so plan building
-    stays execution-free). Their blocks live until the enclosing
+    several plan branches below (instants, subset, final join), and
+    without materialization every branch re-runs the per-case
+    aggregation over the discovery output (the q43 lesson). With the
+    workload auto-bucket probe on (the default), ``inst.count()``
+    materializes both barriers while the plan is built; otherwise plan
+    building stays execution-free and the caller's first action
+    materializes them. Their blocks live until the enclosing
     ``checkpoint_scope`` exits.
-    Modest at sf0.1 (the upstream discovery frame is already
-    checkpointed, so each branch recompute was one window pass) but it
-    bounds the fan-out cost at corpus scale, where four re-runs of the
-    per-case aggregation are four shuffles.
     """
     ids = config.log_ids
     cases = data_barrier(_per_case(log, config), eager=False)
@@ -156,9 +164,14 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     instants = pos.unionByName(neg_ready).unionByName(neg_enabled)
 
     # --- subset aggregates: cases enabled at or before each instant --------
+    # t_max_flow (J6) is the min log-wide first start among the subset's
+    # cases: the subset always contains the earliest-enabled case, and
+    # case subsets grow monotonically with the instant, so the min is
+    # over the instance's cases enabled <= instant.
     subset = (
         instants.join(cases.select(ids.batch_id, ids.case, "case_start",
-                                   "case_enabled", "case_first_activity"), ids.batch_id)
+                                   "case_enabled", "case_first_activity",
+                                   "case_log_first_start"), ids.batch_id)
         .filter(F.col("case_enabled") <= F.col("instant"))
         .groupBy(ids.batch_id, "instant", "outcome")
         .agg(
@@ -166,45 +179,25 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
             F.max("case_enabled").alias("last_enabled"),
             F.min("case_enabled").alias("first_enabled"),
             F.min(F.struct("case_start", "case_enabled", "case_first_activity")).alias("_first"),
+            F.min("case_log_first_start").alias("_min_flow_start"),
         )
     )
-
-    # t_max_flow: min first-start over the FULL log among the subset's
-    # cases (J6). The subset always contains the earliest-enabled case,
-    # and case subsets grow monotonically with the instant, so the min is
-    # over the instance's cases enabled <= instant.
-    case_first_start = log.groupBy(ids.case).agg(
-        F.min(F.unix_micros(F.col(ids.start_time))).alias("_log_first_start")
-    )
-    flow = (
-        instants.join(cases.select(ids.batch_id, ids.case, "case_enabled"), ids.batch_id)
-        .filter(F.col("case_enabled") <= F.col("instant"))
-        .join(case_first_start, ids.case)
-        .groupBy(ids.batch_id, "instant", "outcome")
-        .agg(F.min("_log_first_start").alias("_min_flow_start"))
-    )
-
-    feat = (
-        subset.join(flow, [ids.batch_id, "instant", "outcome"])
-        .join(inst.select(ids.batch_id, ids.batch_type, ids.resource, "activities"),
-              ids.batch_id)
-    )
+    feat = subset.join(
+        inst.select(ids.batch_id, ids.batch_type, ids.resource, "activities"),
+        ids.batch_id)
 
     # --- workload: J2 range join over distinct (resource, instant) ---------
     # Strategy: an explicit config.workload_bucket_seconds wins; with
-    # None, a cheap probe (one count-distinct over the checkpointed
-    # discovery frame — NOT the feature plan) estimates the instant set
-    # as #instances × (1 + ready + enabled negatives) and switches to
-    # the bucketed equi-join when it exceeds the broadcast budget.
+    # None, a probe estimates the instant set as #instances × (1 + ready
+    # + enabled negatives) and switches to the bucketed equi-join when it
+    # exceeds the broadcast budget. #instances is ``inst.count()``: the
+    # count materializes the ``inst`` barrier the plan reads anyway, so
+    # the probe adds no pass of its own over the log.
     points = feat.select(ids.resource, "instant").distinct()
     if config.workload_bucket_seconds:
         bucket_us = config.workload_bucket_seconds * 1_000_000
     elif config.workload_auto_bucket_threshold is not None:
-        n_inst = (
-            log.filter(F.col(ids.batch_id).isNotNull())
-            .select(ids.batch_id).distinct().count()
-        )
-        est_instants = n_inst * (1 + n_ready + k)
+        est_instants = inst.count() * (1 + n_ready + k)
         bucket_us = (
             config.workload_auto_bucket_seconds * 1_000_000
             if est_instants > config.workload_auto_bucket_threshold
@@ -386,55 +379,71 @@ def mine_rules_pdf(pdf: pd.DataFrame, features: list[str], max_rules: int,
     }
 
 
-_RULES_SCHEMA = T.StructType([
-    T.StructField("group_key", T.StringType()),
-    T.StructField("num_obs", T.LongType()),
-    T.StructField("model", T.StringType()),
-    T.StructField("confidence", T.DoubleType()),
-    T.StructField("support", T.DoubleType()),
-])
-
 _FEATURES = ["instant", "num_queue", "t_ready", "t_waiting", "t_max_flow",
              "day_of_week", "day_of_month", "hour_of_day", "minute", "workload"]
 
 
-def _group_key_expr(mode: ActivationRulesMode, ids) -> F.Column:
-    """Grouping key per mode (A15; reference activation_rules.py:165-177)."""
+def _group_keys(pdf: pd.DataFrame, mode: ActivationRulesMode, ids) -> list[tuple]:
+    """Grouping key per row and mode (A15; reference
+    activation_rules.py:165-177): the firing activity, the instance's
+    activity tuple, or that tuple plus the batch type. Always a tuple,
+    so distinct activity tuples stay distinct groups whatever the
+    activity names contain."""
     if mode == ActivationRulesMode.PER_ACTIVITY:
-        return F.col("firing_activity")
+        return [(a,) for a in pdf["firing_activity"]]
     if mode == ActivationRulesMode.PER_BATCH:
-        return F.concat_ws("|", "activities")
-    return F.concat_ws("|", F.concat_ws("|", "activities"), ids.batch_type)
+        return [tuple(a) for a in pdf["activities"]]
+    return [(*a, t) for a, t in zip(pdf["activities"], pdf[ids.batch_type])]
 
 
 def get_activation_rules(
     feat: DataFrame,
     config: Configuration,
     mode: ActivationRulesMode = ActivationRulesMode.PER_BATCH,
-) -> DataFrame:
-    """Group the features table per mode (A15), apply the >30-rows /
-    2-outcome guards (A14) JVM-side, then mine rules per group in
-    ``applyInPandas`` (groups are tiny: tens to thousands of rows)."""
+) -> pd.DataFrame:
+    """Mine the activation rules of every group of the features table.
+
+    ONE driver collect of the group columns, the features and the
+    outcome (at most 12 narrow columns), then, per group on the driver,
+    the >30-rows / 2-outcome guards (A14) and :func:`mine_rules_pdf`.
+    The collect is bounded by ``(1 + num_batch_ready_negative_events +
+    num_batch_enabled_negative_events)`` rows per batch instance (the
+    candidate instants of the features table), so the features plan runs
+    exactly once and no Python worker starts.
+
+    Returns a pandas frame with one row per group, guarded groups
+    included, in the order the rules text prints them: ``group_key`` (a
+    tuple, see :func:`_group_keys`), ``num_obs``, ``num_outcomes``,
+    ``model``, ``confidence`` and ``support``. The last three are null
+    when the group is guarded or no rule met the support threshold.
+    """
     ids = config.log_ids
-    feat = feat.withColumn("group_key", _group_key_expr(mode, ids))
+    group_cols = {
+        ActivationRulesMode.PER_ACTIVITY: ["firing_activity"],
+        ActivationRulesMode.PER_BATCH: ["activities"],
+    }.get(mode, ["activities", ids.batch_type])
+    pdf = feat.select(*group_cols, *_FEATURES, "outcome").toPandas()
 
-    w = W.partitionBy("group_key")
-    guarded = (
-        feat.withColumn("_n", F.count(F.lit(1)).over(w))
-        .withColumn("_k", F.size(F.collect_set("outcome").over(w)))
-        .filter((F.col("_n") > config.min_rule_obs) & (F.col("_k") > 1))
-        .select("group_key", *_FEATURES, "outcome")
-    )
-
-    max_rules, min_support = config.max_rules, config.min_rule_support
-
-    def mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = mine_rules_pdf(pdf, _FEATURES, max_rules, min_support)
-        if not res:
-            return pd.DataFrame(columns=[f.name for f in _RULES_SCHEMA.fields])
-        return pd.DataFrame([{"group_key": pdf["group_key"].iloc[0], **res}])
-
-    return guarded.groupBy("group_key").applyInPandas(mine, schema=_RULES_SCHEMA)
+    members: dict[tuple, list[int]] = {}
+    for i, key in enumerate(_group_keys(pdf, mode, ids)):
+        members.setdefault(key, []).append(i)
+    data = pdf[_FEATURES + ["outcome"]]
+    rows = []
+    # The rules text has always listed groups by their "|"-joined key;
+    # the tuple breaks ties between keys whose names contain "|".
+    for key in sorted(members, key=lambda t: ("|".join(t), t)):
+        grp = data.iloc[members[key]]
+        n, k = len(grp), int(grp["outcome"].nunique())
+        res = {}
+        if n > config.min_rule_obs and k > 1:
+            res = mine_rules_pdf(grp, _FEATURES, config.max_rules,
+                                 config.min_rule_support)
+        rows.append({"group_key": key, "num_obs": n, "num_outcomes": k,
+                     "model": res.get("model"),
+                     "confidence": res.get("confidence"),
+                     "support": res.get("support")})
+    return pd.DataFrame(rows, columns=["group_key", "num_obs", "num_outcomes",
+                                       "model", "confidence", "support"])
 
 
 # --------------------------------------------------------------------------
@@ -444,59 +453,42 @@ def get_activation_rules(
 
 def render_activation_rules(
     feat: DataFrame,
-    rules: DataFrame,
+    rules: pd.DataFrame,
     config: Configuration,
     mode: ActivationRulesMode = ActivationRulesMode.PER_BATCH,
 ) -> str:
     """Driver-side text renderer of the mined rules in the reference's
-    ``*_ActivationRules.txt`` layout: per sorted group key either a
-    guard message (low size / one outcome), a rule block
+    ``*_ActivationRules.txt`` layout: per group (in ``rules`` order)
+    either a guard message (low size / one outcome), a rule block
     (# Observations / Confidence / Support / bracketed ruleset with
     ``V``-joined disjuncts), or the no-rules-matched line. Blocks are
     separated by two blank lines with no trailing newline — byte-shaped
     like the golden files (reference main.py:29-43,
     activation_rules.py:185-187).
 
-    Both collects are O(#groups) — group stats and rule rows, never the
-    features table itself — so the sink is log-size-independent.
+    Reads only ``rules`` (the :func:`get_activation_rules` frame, which
+    carries every group's size and outcome count): no Spark job. ``feat``
+    and ``mode`` are unused; they stay for positional callers until the
+    benchmark harness runs the request through ``pipeline.analyze``.
     """
-    ids = config.log_ids
-    stats = (
-        feat.withColumn("group_key", _group_key_expr(mode, ids))
-        .groupBy("group_key")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("outcome").alias("k"),
-        )
-        .collect()
-    )
-    rule_rows = {r["group_key"]: r for r in rules.collect()}
-
-    def key_str(gk: str) -> str:
-        parts = (gk,) if mode == ActivationRulesMode.PER_ACTIVITY else tuple(gk.split("|"))
-        return str(parts)
-
-    blocks = []
     guard_msgs, rule_blocks = [], []
-    for r in sorted(stats, key=lambda r: r["group_key"]):
-        gk, n, k = r["group_key"], r["n"], r["k"]
-        key = key_str(gk)
+    for r in rules.itertuples(index=False):
+        key, n = str(r.group_key), r.num_obs
         # Guard order mirrors the reference: size first, then outcomes
         # (activation_rules.py:181-187). Guard messages print during
         # mining, rule blocks after — hence the two-phase layout.
         if n <= config.min_rule_obs:
             guard_msgs.append(
                 f"Not extracting rules from batch {key} due to low size: {n}")
-        elif k < 2:
+        elif r.num_outcomes < 2:
             guard_msgs.append(
                 f"Not extracting rules from batch {key} due to only one "
                 "outcome in training!")
-        elif gk in rule_rows and rule_rows[gk]["model"]:
-            rr = rule_rows[gk]
+        elif r.model:
             # str(list-of-rule-strings) -> compact -> ' V\n\t' disjuncts
             # (main.py:31-34's exact replace chain).
             ruleset_str = (
-                str(rr["model"].split(" v "))
+                str(r.model.split(" v "))
                 .replace(" ", "")
                 .replace(",", " V\n\t")
                 .replace("'", "")
@@ -505,8 +497,8 @@ def render_activation_rules(
             rule_blocks.append(
                 "Batch: {}:\n\t# Observations: {}\n\tConfidence: {:.2f}"
                 "\n\tSupport: {:.2f}\n\t{}".format(
-                    key, rr["num_obs"], round(rr["confidence"], 2),
-                    round(rr["support"], 2), ruleset_str)
+                    key, n, round(r.confidence, 2),
+                    round(r.support, 2), ruleset_str)
             )
         else:
             rule_blocks.append(

@@ -7,11 +7,10 @@ The reference round-trips the log through a temp CSV into an R subprocess
 and then repairs the result with four pandas passes of per-group driver
 loops. Here detection is native: lag-classification + running-sum
 sessionization per (resource, activity) — one window shuffle — and every
-repair is a window/agg pass. The only procedural piece (the
-enabled-after-start fixpoint split, discovery.py:12-81) runs as
-``applyInPandas`` over per-instance case aggregates: groups are batch
-instances (tens of cases), so the Python loop touches KB-sized groups
-while the heavy lifting stays JVM-side.
+repair is a window/agg pass. The reference's one procedural piece (the
+enabled-after-start fixpoint split, discovery.py:12-81) runs in closed
+form over per-(instance, case) aggregates, JVM-side like the rest: no
+Python worker runs during discovery.
 
 Adjacency semantics (validated against the reference's golden outputs):
 ordered by (start, end, case) within (resource, activity):
@@ -623,46 +622,40 @@ def _unify(df: DataFrame, ids: EventLogIDs) -> DataFrame:
 
     ID labels are dense in global key-string order (SURVEY §7.4:
     equivalence classes match the reference, labels are canonicalized)
-    via :func:`_dense_ids` — no unpartitioned window, and the task-id
-    count offset for subprocess ids is a lazy broadcast scalar, not a
-    plan-build-time ``count()`` action.
+    via :func:`_dense_ids` — no unpartitioned window, no plan-build-time
+    ``count()`` action.
+
+    One dense-id pass serves both levels: each instance key carries a
+    level prefix, ``"0"`` for task and ``"1"`` for subprocess
+    instances. Every task key then sorts before every subprocess key,
+    and a shared prefix keeps the key order within a level, so task
+    instances get 1..T and subprocess instances T+1..T+S — the labels
+    of ranking each level on its own and offsetting the subprocess ids
+    by T, at half the jobs. The levels are disjoint: the detectors and
+    every repair null ``_sub_grp`` and ``_sub_type`` together.
     """
-    is_task_row = F.col("_sub_type").isNull() & F.col("_task_type").isNotNull()
     is_sub_row = F.col("_sub_grp").isNotNull()
-    task_keys = _dense_ids(
-        df.filter(is_task_row).select(F.col("_task_grp").alias("_tk")).distinct(),
-        "_tk", "_tid",
+    is_task_row = F.col("_sub_type").isNull() & F.col("_task_type").isNotNull()
+    inst_key = (
+        F.when(is_sub_row, F.concat(F.lit("1"), F.col("_sub_grp")))
+        .when(is_task_row, F.concat(F.lit("0"), F.col("_task_grp")))
     )
-    sub_keys = _dense_ids(
-        df.filter(is_sub_row).select(F.col("_sub_grp").alias("_sk")).distinct(),
-        "_sk", "_sid",
-    )
-    # max dense task id == #task instances; lazy 1-row broadcast.
-    n_task_df = task_keys.agg(
-        F.coalesce(F.max("_tid"), F.lit(0).cast("long")).alias("_n_task")
-    )
-    out = (
-        df.join(F.broadcast(task_keys), df["_task_grp"] == task_keys["_tk"], "left").drop("_tk")
-        .join(F.broadcast(sub_keys), df["_sub_grp"] == sub_keys["_sk"], "left").drop("_sk")
-        .crossJoin(F.broadcast(n_task_df))
+    df = df.withColumn("_ikey", inst_key)
+    inst_ids = _dense_ids(
+        df.filter(F.col("_ikey").isNotNull()).select("_ikey").distinct(),
+        "_ikey", ids.batch_id,
     )
     raw_type = F.when(is_sub_row, F.col("_sub_type")).otherwise(F.col("_task_type"))
     type_map = F.create_map(
         *[F.lit(x) for kv in {**_RAW_TASK_RENAME, **_RAW_SUB_RENAME}.items() for x in kv]
     )
     return (
-        out.withColumn(
-            ids.batch_id,
-            F.when(is_sub_row, F.col("_sid") + F.col("_n_task")).otherwise(
-                F.when(is_task_row, F.col("_tid"))
-            ).cast("long"),
-        )
+        df.join(F.broadcast(inst_ids), "_ikey", "left")
         .withColumn(
             ids.batch_type,
             F.when(F.col(ids.batch_id).isNotNull(), type_map[raw_type]),
         )
-        .drop("_task_grp", "_task_type", "_sub_grp", "_sub_type",
-              "_tid", "_sid", "_n_task")
+        .drop("_ikey", "_task_grp", "_task_type", "_sub_grp", "_sub_type")
     )
 
 
@@ -704,8 +697,8 @@ def discover_batches(log: DataFrame, config: Configuration,
     # FROM that same frame (a lineage diamond), and downstream consumers
     # (WT decomposition, reporting) fork it several more times. Plain
     # persist() caches the DATA but Catalyst still re-analyzes the full
-    # logical plan — two detection window stacks + applyInPandas — at
-    # every fork, which dominates wall-clock once the plan is this deep.
+    # logical plan — two detection window stacks — at every fork, which
+    # dominates wall-clock once the plan is this deep.
     # A checkpoint barrier truncates the lineage so each fork starts
     # from a flat cached scan (SPARK_GRAFT_CHECKPOINT=reliable makes it
     # durable on a real cluster; the plan-truncation effect is the same).

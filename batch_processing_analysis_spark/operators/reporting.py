@@ -276,13 +276,13 @@ def occurrence_denominators(log: DataFrame, summary: DataFrame,
 
 def batch_report(log: DataFrame, config: Configuration,
                  order_col: str | None = None) -> DataFrame:
-    """Full report table: summary + occurrence denominators + frequency."""
-    # The log is traversed by the summary, the pattern extraction, the
-    # single-activity counts, and one rolling-window pass per distinct
-    # pattern length — each traversal re-executing the upstream
-    # enablement/discovery/waiting-time plan. Checkpoint it once
-    # (lazily) so every pass reads the materialized event rows.
-    log = data_barrier(log, eager=False)
+    """Full report table: summary + occurrence denominators + frequency.
+
+    The log is traversed by the summary, the pattern extraction, the
+    single-activity counts, and one rolling-window pass per distinct
+    pattern length. Pass the staged frame
+    :func:`~.waiting_time.add_waiting_times` returns, so every pass
+    reads materialized rows; a lazy input re-runs its plan per pass."""
     summary = summarize_batch_waiting_times(log, config)
     denom = occurrence_denominators(log, summary, config, order_col)
     out = summary.join(F.broadcast(denom), "activities", "left")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import Configuration, EventLogIDs
+from .checkpoints import data_barrier
 
 
 def add_waiting_times(log: DataFrame, config: Configuration) -> DataFrame:
@@ -96,4 +97,12 @@ def add_waiting_times(log: DataFrame, config: Configuration) -> DataFrame:
                 F.when(batched, F.timestamp_micros(F.col("_inst_start"))),
             )
         )
-    return out.drop("_case_first", "_case_end", "_inst_start", "_inst_enabled", "_inst_key")
+    # The WT table feeds several consumers (the collected table, the
+    # report's passes, the features table); unstaged, each re-runs the
+    # repartition and both window passes. Lazy barrier: the first
+    # action stores the rows, later ones read them, and an enclosing
+    # checkpoint_scope frees them.
+    return data_barrier(
+        out.drop("_case_first", "_case_end", "_inst_start", "_inst_enabled", "_inst_key"),
+        eager=False,
+    )

@@ -35,8 +35,9 @@ def analyze_batches(log: DataFrame, config: Configuration | None = None,
     """Event log -> log + batch columns + WT decomposition (the *_WTs
     table of the reference, outputs/*_WTs.csv.gz).
 
-    The result is backed by the discovery pipeline's eager checkpoint.
-    To free it once every action on the frame has run, call this inside
+    The result is staged: backed by the discovery pipeline's eager
+    checkpoint, its own rows stored by the first action on it. To free
+    both once every action on the frame has run, call this inside
     :func:`~.operators.checkpoints.checkpoint_scope` — repeated calls in
     a long-lived session otherwise each retain one checkpointed copy of
     the log (measured 2.7× slowdown on the second of two back-to-back
@@ -62,7 +63,9 @@ def analyze(log: DataFrame, config: Configuration | None = None) -> Analysis:
 
     Runs in one :func:`~.operators.checkpoints.checkpoint_scope`: every
     checkpoint a layer takes is freed before this returns, also when a
-    layer raises, so nothing the request allocates outlives the call."""
+    layer raises, so nothing the request allocates outlives the call.
+    The features plan runs once, in the rule miner's driver collect;
+    mining and rendering run on the driver."""
     config = config or Configuration()
     with checkpoint_scope():
         wt_df = analyze_batches(log, config)

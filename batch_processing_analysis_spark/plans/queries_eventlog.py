@@ -930,16 +930,16 @@ def q36_activation_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q37_activation_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Activation-rule mining end-to-end (U1 + A14/A15 guards):
-    features table → group per batch type → sequential-covering rule
-    induction (FOIL-gain grower, accept/remove/repeat with the
-    reference's support threshold) inside ``applyInPandas``.
+    features table → group per firing activity → sequential-covering
+    rule induction (FOIL-gain grower, accept/remove/repeat with the
+    reference's support threshold) on the driver.
 
     The covering loop is iterative (not SQL-expressible) but
     deterministic — every statistic in the grower is an order-
     independent reduction and ties break on a total key — so the
     correctness gate pins the sf0.01 result as a golden snapshot (see
-    the oracle above). Groups are tiny (≤ thousands of rows), so the
-    pandas hop is O(#groups), not O(log).
+    the oracle above). The miner returns one pandas row per group; the
+    groups that mined a rule become this query's rows.
     """
     feat, _ = _features(spark, sf_dir)
     # Reference guard is >30 rows/group; at sf0.01 the largest group has
@@ -947,7 +947,13 @@ def q37_activation_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercise the full induction path at test scale.
     mine_cfg = Configuration(min_rule_obs=10)
     rules = get_activation_rules(feat, mine_cfg, ActivationRulesMode.PER_ACTIVITY)
-    return rules.orderBy("group_key")
+    mined = rules[rules["model"].notna()].assign(
+        group_key=lambda d: d["group_key"].str[0])
+    return spark.createDataFrame(
+        mined[["group_key", "num_obs", "model", "confidence", "support"]],
+        "group_key string, num_obs bigint, model string, "
+        "confidence double, support double",
+    ).orderBy("group_key")
 
 
 @query(

@@ -35,6 +35,11 @@ def get_spark(
         # type for; read as long nanos and convert in sources/tables.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # Off: PySpark's DataFrame error-context capture. On, every
+        # Column function call reads a conf, looks up a JVM class and
+        # walks the Python stack (a failed optional import included);
+        # one event-log request builds ~600 Column expressions.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -82,7 +82,8 @@ def test_recovers_planted_activation_rule(spark):
     feat = features_table(disc, CFG)
     rules = get_activation_rules(
         feat, Configuration(min_rule_obs=10), ActivationRulesMode.PER_ACTIVITY
-    ).collect()
+    )
+    rules = rules[rules["model"].notna()].to_dict("records")
     assert rules, "no rule mined from planted log"
     model = rules[0]["model"]
     # The planted activation is jointly determined by weekday/hour and
