@@ -73,8 +73,10 @@ class ActivationRulesMode(enum.Enum):
 class Configuration:
     """Pipeline knobs (reference: src/batch_processing_analysis/config.py:54-89).
 
-    Defaults match the reference. Extra Spark-only knobs are grouped at
-    the bottom and have conservative defaults.
+    Defaults match the reference. The few knobs the reference does not
+    have (subsequence enumeration bounds, ``min_rule_obs``,
+    ``random_seed``, ``truncate_timestamps_to_seconds``) sit beside the
+    stage they steer.
     """
 
     log_ids: EventLogIDs = field(default_factory=EventLogIDs)
@@ -117,21 +119,3 @@ class Configuration:
     # Determinism policy (SURVEY §7.4): the reference samples unseeded;
     # we always seed (rule outputs match in distribution, not bytes).
     random_seed: int = 42
-
-    # Spark-only knobs
-    # Workload (J2) range-join strategy: None broadcasts the instant set
-    # (right while #instants fits the broadcast budget); a width in
-    # seconds switches to the bucketed equi-join in operators/range_join
-    # for instant sets too large to broadcast (scale dial — both
-    # strategies produce identical pairs, see tests/test_range_join.py).
-    workload_bucket_seconds: int | None = None
-    # With workload_bucket_seconds=None, features_table AUTO-switches to
-    # the bucketed join (width = workload_auto_bucket_seconds) when the
-    # estimated instant count — #instances × (1 + ready + enabled
-    # negatives), where #instances is the count that materializes the
-    # features table's per-instance barrier — exceeds this budget. ~500k
-    # (resource, epoch) rows ≈ tens of MB broadcast: the sane ceiling for
-    # shipping the point set to every executor. None disables the probe
-    # (always broadcast).
-    workload_auto_bucket_threshold: int | None = 500_000
-    workload_auto_bucket_seconds: int = 3_600

@@ -95,12 +95,11 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     ``cases``/``inst`` are LAZY barriers: each is referenced by
     several plan branches below (instants, subset, final join), and
     without materialization every branch re-runs the per-case
-    aggregation over the discovery output (the q43 lesson). With the
-    workload auto-bucket probe on (the default), ``inst.count()``
-    materializes both barriers while the plan is built; otherwise plan
-    building stays execution-free and the caller's first action
-    materializes them. Their blocks live until the enclosing
-    ``checkpoint_scope`` exits.
+    aggregation over the discovery output (the q43 lesson). This
+    function runs no action of its own: the caller's first action fills
+    the barriers (under adaptive execution, taking each one already runs
+    the shuffle stage below it), and their blocks live until the
+    enclosing ``checkpoint_scope`` exits.
     """
     ids = config.log_ids
     cases = data_barrier(_per_case(log, config), eager=False)
@@ -187,24 +186,10 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
         ids.batch_id)
 
     # --- workload: J2 range join over distinct (resource, instant) ---------
-    # Strategy: an explicit config.workload_bucket_seconds wins; with
-    # None, a probe estimates the instant set as #instances × (1 + ready
-    # + enabled negatives) and switches to the bucketed equi-join when it
-    # exceeds the broadcast budget. #instances is ``inst.count()``: the
-    # count materializes the ``inst`` barrier the plan reads anyway, so
-    # the probe adds no pass of its own over the log.
+    # The instant set is broadcast: it has at most one row per feature
+    # row, and get_activation_rules collects every feature row to the
+    # driver anyway.
     points = feat.select(ids.resource, "instant").distinct()
-    if config.workload_bucket_seconds:
-        bucket_us = config.workload_bucket_seconds * 1_000_000
-    elif config.workload_auto_bucket_threshold is not None:
-        est_instants = inst.count() * (1 + n_ready + k)
-        bucket_us = (
-            config.workload_auto_bucket_seconds * 1_000_000
-            if est_instants > config.workload_auto_bucket_threshold
-            else None
-        )
-    else:
-        bucket_us = None
     workload = workload_at_instants(
         log.select(
             ids.resource,
@@ -218,7 +203,6 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
         enabled="_en_us",
         end="_end_us",
         case=ids.case,
-        bucket=bucket_us,
     )
     feat = feat.join(workload, [ids.resource, "instant"], "left")
 

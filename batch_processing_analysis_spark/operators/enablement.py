@@ -24,24 +24,13 @@ this exact combination (start-ordered df, threshold in the [0.05, 0.12]
 plateau, self-exclusion, first-start fallback) reproduces 70,162/70,162
 values; end-ordered df or thresholds outside the plateau do not.
 
-Scale: the df matrix is |activities|² — collected and broadcast as a
-literal set. Two physical strategies for the per-event max:
-
-- ``array`` (default): windowed collect of the case's own events
-  filtered with a higher-order function (JVM-side, no self-join, no
-  Python). Right for process logs — traces are tens of events — but the
-  per-row array copy is O(trace_len²) memory per case.
-- ``join``: sort-merge self-join on the case key (predecessor end ≤
-  event start, non-concurrent, non-self) + partial-aggregated max.
-  O(trace_len²) *compute* but streamed — memory stays bounded however
-  long the trace, so this is the fallback for pathological traces.
-- ``auto``: one cheap max-trace-length probe (single groupBy count —
-  an action, documented) picks ``join`` above ``long_trace_threshold``.
-
-Both strategies produce identical values by construction (the join's
-self-exclusion predicate mirrors the array path's triple equality);
-tests/test_enablement.py asserts equality including on a 10k-event
-trace.
+Scale: the df matrix is |activities|² rows, collected once. The
+per-event max is a windowed collect of the case's own events filtered
+with a higher-order function (JVM-side, no self-join, no Python):
+right for process logs, whose traces are tens of events. The per-row
+array copy is O(trace_len²) memory per case. The concurrency relation
+reaches that filter as a literal map or, on large alphabets, as a
+broadcast table (see :func:`add_enabled_times`).
 """
 
 from __future__ import annotations
@@ -51,6 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import EventLogIDs
+
+# Heuristics-Miner dependency threshold of the concurrency relation: the
+# value inside the reference-validated [0.05, 0.12] plateau (see above).
+CONCURRENCY_THRESHOLD = 0.1
+# Most directed concurrent pairs carried as literals in the plan; above
+# it the relation is a broadcast table (see add_enabled_times).
+_LITERAL_PAIRS_LIMIT = 512
 
 
 def directly_follows_matrix(log: DataFrame, ids: EventLogIDs) -> DataFrame:
@@ -67,7 +63,8 @@ def directly_follows_matrix(log: DataFrame, ids: EventLogIDs) -> DataFrame:
     )
 
 
-def concurrency_pairs(df_matrix: DataFrame, threshold: float = 1.0) -> set[tuple[str, str]]:
+def concurrency_pairs(df_matrix: DataFrame,
+                      threshold: float = CONCURRENCY_THRESHOLD) -> set[tuple[str, str]]:
     """Concurrent activity pairs from the directly-follows matrix
     (driver-side: |activities|² rows, tiny).
 
@@ -92,86 +89,51 @@ def concurrency_pairs(df_matrix: DataFrame, threshold: float = 1.0) -> set[tuple
 def add_enabled_times(
     log: DataFrame,
     ids: EventLogIDs,
-    concurrency_threshold: float = 0.1,
-    strategy: str = "array",
-    long_trace_threshold: int = 2_000,
-    literal_pairs_limit: int = 512,
+    concurrency_threshold: float = CONCURRENCY_THRESHOLD,
 ) -> DataFrame:
     """Add ``ids.enabled_time`` to every event (reference: analysis.py:43).
 
-    ``strategy``: ``"array"`` (HOF over per-case collected events),
-    ``"join"`` (sort-merge self-join — the long-trace fallback), or
-    ``"auto"`` (probe max trace length once, pick accordingly).
-
-    The concurrency relation rides along in one of two shapes. Up to
-    ``literal_pairs_limit`` directed pairs it is a literal in-expression
-    map activity → partner array, resolved into a ``_conc`` column once
-    per row — zero extra joins, right for process logs (|A| ≈ tens).
-    Above the limit it becomes DATA: a broadcast-joined per-activity
-    partner table, because Catalyst analysis cost grows with every
-    literal in the expression tree (|A|² pairs on a 2k-activity log
-    froze plan build — same failure mode as the SRP plane literals,
-    same remedy). Both shapes produce identical values;
-    tests/test_enablement.py asserts it.
+    The concurrency relation rides along in one of two shapes, picked
+    from the pair count. Up to ``_LITERAL_PAIRS_LIMIT`` directed pairs
+    it is a literal in-expression map activity → partner array,
+    resolved into a ``_conc`` column once per row — zero extra joins,
+    right for process logs (|A| ≈ tens). Above the limit it becomes
+    DATA: a broadcast-joined per-activity partner table, because
+    Catalyst analysis cost grows with every literal in the expression
+    tree (|A|² pairs on a 2k-activity log froze plan build — same
+    failure mode as the SRP plane literals, same remedy). Both shapes
+    produce identical values; tests/test_enablement.py asserts it.
     """
     pairs = concurrency_pairs(directly_follows_matrix(log, ids), concurrency_threshold)
-    if len(pairs) <= literal_pairs_limit:
-        # Literal per-activity partner map: partners_map[b] = sorted
-        # [a : (a, b) in pairs]. The r11 shape was one flat literal
-        # array of "a\x1fb" keys probed per (event, predecessor) with
-        # a string concat + a linear scan over ALL directed pairs —
-        # measured as the hottest CPU in the detection stages (guide
-        # §1.2 per-task work: 100k events x ~67 predecessors x
-        # |pairs| string compares). The map is resolved ONCE PER ROW
-        # into a `_partners` column below, so the per-predecessor
-        # check collapses to membership in this activity's (usually
-        # tiny) partner list. Identical relation, identical values.
-        partners_lit: dict[str, list[str]] = {}
-        for a, b in pairs:
-            partners_lit.setdefault(b, []).append(a)
+    # partners[b] = sorted [a : (a, b) in pairs]: the activities that
+    # cannot enable b. Resolved once per ROW into ``_conc``, so the
+    # per-predecessor check in the HOF below is membership in this
+    # activity's (usually tiny) partner list, not a scan of all pairs.
+    partners: dict[str, list[str]] = {}
+    for a, b in pairs:
+        partners.setdefault(b, []).append(a)
+    if len(pairs) <= _LITERAL_PAIRS_LIMIT:
         pair_keys = (
             F.create_map(*[
                 x
-                for act, ps in sorted(partners_lit.items())
+                for act, ps in sorted(partners.items())
                 for x in (F.lit(act),
                           F.array(*[F.lit(p) for p in sorted(ps)]))
             ])
             if pairs else
             F.create_map().cast("map<string,array<string>>")
         )
-        conc_df = None
+        log = log.withColumn("_conc", F.element_at(pair_keys, F.col(ids.activity)))
     else:
-        pair_keys = None
-        partners: dict[str, list[str]] = {}
-        for a, b in pairs:
-            partners.setdefault(b, []).append(a)
         conc_df = log.sparkSession.createDataFrame(
             [(k, sorted(v)) for k, v in sorted(partners.items())],
             "_conc_act string, _conc array<string>",
         )
-
-    if strategy == "auto":
-        longest = (
-            log.groupBy(ids.case).agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("m")).first()["m"]
-        ) or 0
-        strategy = "join" if longest > long_trace_threshold else "array"
-    if strategy == "join":
-        return _enabled_times_join(log, ids, pair_keys, conc_df)
-
-    if conc_df is not None:
-        # Partner list for THIS event's activity; the HOF below tests
-        # predecessor membership in it. Null (activity without any
-        # concurrent partner) ⇒ empty list.
+        # Null (activity without any concurrent partner) ⇒ empty list.
         log = log.join(
             F.broadcast(conc_df),
             F.col(ids.activity) == F.col("_conc_act"), "left",
         ).drop("_conc_act")
-    else:
-        # Literal path: resolve the partner list once per ROW (not per
-        # predecessor) — the HOF then probes a short array.
-        log = log.withColumn(
-            "_conc", F.element_at(pair_keys, F.col(ids.activity)))
 
     w_case = W.partitionBy(ids.case)
     # All (start, end, activity) triples of the case, then per row: max
@@ -209,81 +171,3 @@ def add_enabled_times(
         ids.enabled_time,
         F.timestamp_micros(F.coalesce(enabler_end, F.col("_case_first_start"))),
     ).drop("_case_events", "_case_first_start", "_conc")
-
-
-def _enabled_times_join(log: DataFrame, ids: EventLogIDs, pair_keys,
-                        conc_df: DataFrame | None = None) -> DataFrame:
-    """Sort-merge self-join enablement: for each distinct event triple
-    (start, end, activity) of a case, max predecessor end among events
-    with ``end ≤ start``, a different triple (mirrors the array path's
-    self-exclusion exactly), and a non-concurrent activity.
-
-    The concurrency relation arrives either as ``pair_keys`` (literal
-    array, small alphabets) or ``conc_df`` (broadcast partner table,
-    large alphabets — see add_enabled_times).
-
-    Scale: every join/groupBy keys on the case id (plus the triple), so
-    a long trace streams through sort-merge + partial agg instead of
-    materializing an O(trace_len²) array copy per row.
-    """
-    s_us = F.unix_micros(F.col(ids.start_time))
-    e_us = F.unix_micros(F.col(ids.end_time))
-    ev = log.select(
-        F.col(ids.case).alias("_c"),
-        s_us.alias("_s"),
-        e_us.alias("_e"),
-        F.col(ids.activity).alias("_a"),
-    ).distinct()
-    if conc_df is not None:
-        ev = ev.join(
-            F.broadcast(conc_df), F.col("_a") == F.col("_conc_act"), "left"
-        ).drop("_conc_act")
-    else:
-        # Literal path: per-activity partner array resolved once per
-        # distinct event triple (see add_enabled_times).
-        ev = ev.withColumn("_conc", F.element_at(pair_keys, F.col("_a")))
-    pred = log.select(
-        F.col(ids.case).alias("_pc"),
-        s_us.alias("_ps"),
-        e_us.alias("_pe"),
-        F.col(ids.activity).alias("_pa"),
-    )
-    not_self = ~(
-        (F.col("_ps") == F.col("_s"))
-        & (F.col("_pe") == F.col("_e"))
-        & (F.col("_pa") == F.col("_a"))
-    )
-    is_conc = F.array_contains(
-        F.coalesce(F.col("_conc"), F.array().cast("array<string>")),
-        F.col("_pa"),
-    )
-    enab = (
-        ev.join(
-            pred,
-            (F.col("_pc") == F.col("_c"))
-            & (F.col("_pe") <= F.col("_s"))
-            & not_self
-            & ~is_conc,
-            "left",
-        )
-        .groupBy("_c", "_s", "_e", "_a")
-        .agg(F.max("_pe").alias("_enabler_end"))
-    )
-    first_start = log.groupBy(F.col(ids.case).alias("_fc")).agg(
-        F.min(s_us).alias("_first_start")
-    )
-    return (
-        log.join(
-            enab,
-            (F.col(ids.case) == F.col("_c"))
-            & (s_us == F.col("_s"))
-            & (e_us == F.col("_e"))
-            & (F.col(ids.activity) == F.col("_a")),
-        )
-        .join(first_start, F.col(ids.case) == F.col("_fc"))
-        .withColumn(
-            ids.enabled_time,
-            F.timestamp_micros(F.coalesce(F.col("_enabler_end"), F.col("_first_start"))),
-        )
-        .drop("_c", "_s", "_e", "_a", "_conc", "_enabler_end", "_fc", "_first_start")
-    )

@@ -30,8 +30,7 @@ from .operators.reporting import batch_report, render_report
 from .operators.waiting_time import add_waiting_times
 
 
-def analyze_batches(log: DataFrame, config: Configuration | None = None,
-                    detect_case_level: bool = True) -> DataFrame:
+def analyze_batches(log: DataFrame, config: Configuration | None = None) -> DataFrame:
     """Event log -> log + batch columns + WT decomposition (the *_WTs
     table of the reference, outputs/*_WTs.csv.gz).
 
@@ -46,7 +45,7 @@ def analyze_batches(log: DataFrame, config: Configuration | None = None,
     ids = config.log_ids
     if ids.enabled_time not in log.columns:
         log = add_enabled_times(log, ids)
-    batched = discover_batches(log, config, detect_case_level=detect_case_level)
+    batched = discover_batches(log, config)
     return add_waiting_times(batched, config)
 
 

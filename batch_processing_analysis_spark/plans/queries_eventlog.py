@@ -17,7 +17,11 @@ from pyspark.sql import Window as W
 
 from ..config import ActivationRulesMode, Configuration, EventLogIDs
 from ..operators.activation_rules import features_table, get_activation_rules
-from ..operators.enablement import add_enabled_times, directly_follows_matrix
+from ..operators.enablement import (
+    CONCURRENCY_THRESHOLD,
+    add_enabled_times,
+    directly_follows_matrix,
+)
 from ..operators.discovery import detect_task_batches, discover_batches
 from ..operators.reporting import batch_report
 from ..operators.waiting_time import add_waiting_times
@@ -109,7 +113,7 @@ def q30_enabled_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     not data. The SQL twin uses the equivalent self-join formulation.
     """
     log = _event_log(spark, sf_dir)
-    out = add_enabled_times(log, IDS, concurrency_threshold=0.1)
+    out = add_enabled_times(log, IDS)
     return out.select(
         "event_id",
         F.col(IDS.case).alias("case_id"),
@@ -135,7 +139,7 @@ def q35_concurrency_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         x.join(y, (F.col("x.a") == F.col("y.b")) & (F.col("x.b") == F.col("y.a")))
         .filter(
             F.abs(F.col("x.n") - F.col("y.n")) / (F.col("x.n") + F.col("y.n") + 1)
-            < 0.1
+            < CONCURRENCY_THRESHOLD
         )
         .select(
             F.col("x.a").alias("a"),
@@ -483,9 +487,7 @@ def _discovered(spark: SparkSession, sf_dir: str, checkpoints: bool = False):
     key = (spark.sparkContext.applicationId, sf_dir, checkpoints)
     if key not in _DISC_CACHE:
         cfg = Configuration(report_batch_checkpoints=checkpoints)
-        log = add_enabled_times(
-            _event_log(spark, sf_dir), IDS, concurrency_threshold=0.1
-        )
+        log = add_enabled_times(_event_log(spark, sf_dir), IDS)
         _DISC_CACHE[key] = discover_batches(log, cfg), cfg
         # Sessions come and go (tests, bench, driver); drop entries from
         # dead applications so stale JVM references don't accumulate.
@@ -991,7 +993,7 @@ def q38_interval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.kernels import interval_sweep_pt_wt
 
-    log = add_enabled_times(_event_log(spark, sf_dir), IDS, concurrency_threshold=0.1)
+    log = add_enabled_times(_event_log(spark, sf_dir), IDS)
     return interval_sweep_pt_wt(log, IDS, [IDS.case]).select(
         F.col(IDS.case).alias("case_id"), "sweep_pt", "sweep_wt"
     )
@@ -1193,7 +1195,7 @@ def q28_prioritization_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn(IDS.start_time, F.timestamp_micros(F.col("_s_us")))
             .drop("_s_us")
         )
-        log = add_enabled_times(log, IDS, concurrency_threshold=0.1)
+        log = add_enabled_times(log, IDS)
         log = data_barrier(log, eager=False)
         _Q28_CACHE[key] = log
         for k in [k for k in _Q28_CACHE if k[0] != key[0]]:

@@ -2,7 +2,8 @@
 invariance under input row order and shuffle-partition count, the WT
 invariant, the activation-rule mode defaults it relies on, and the
 rule miner's contract (one row per group, rendering without Spark
-jobs, one group per activity tuple)."""
+jobs, one group per activity tuple) and a features table that runs
+no Spark action of its own."""
 
 from __future__ import annotations
 
@@ -82,8 +83,13 @@ def test_digest_invariant_under_one_shuffle_partition(spark, base):
 
 
 @pytest.fixture(scope="module")
-def feat(spark):
-    return features_table(discover_batches(injected_log_df(spark, INJECTED), CFG), CFG)
+def disc(spark):
+    return discover_batches(injected_log_df(spark, INJECTED), CFG)
+
+
+@pytest.fixture(scope="module")
+def feat(disc):
+    return features_table(disc, CFG)
 
 
 def test_default_rule_modes_agree(feat):
@@ -116,6 +122,27 @@ def test_render_runs_no_spark_job(spark, feat):
                           lambda: render_activation_rules(feat, rules, CFG))
     assert "# Observations" in text
     assert jobs == 0
+
+
+def test_features_table_runs_no_action(spark, disc):
+    """features_table only builds a plan; its caller's first action runs
+    it. Without adaptive execution that takes no Spark job. With it,
+    each of the two lazy barriers runs the shuffle stage under it when
+    it is taken (``localCheckpoint`` plans its input), and nothing more."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        jobs, feat = _jobs_in(spark, "test-analyze-features",
+                              lambda: features_table(disc, CFG))
+    finally:
+        spark.conf.set(key, old)
+    assert old == "true"
+    assert jobs == 0
+    assert _jobs_in(spark, "test-analyze-features-count", feat.count)[0] >= 1
+    jobs, _ = _jobs_in(spark, "test-analyze-features-aqe",
+                       lambda: features_table(disc, CFG))
+    assert jobs <= 2
 
 
 @pytest.mark.parametrize("mode", list(ActivationRulesMode))

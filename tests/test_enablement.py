@@ -11,6 +11,7 @@ from __future__ import annotations
 from datetime import datetime
 
 from batch_processing_analysis_spark.config import EventLogIDs
+from batch_processing_analysis_spark.operators import enablement
 from batch_processing_analysis_spark.operators.enablement import (
     add_enabled_times,
     concurrency_pairs,
@@ -81,60 +82,12 @@ def _as_rows(df):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
 
-def test_join_strategy_matches_array_on_handcrafted(spark):
-    log = make_log(spark, [
-        ("c1", "A", "r1", ts(8), ts(9)),
-        ("c1", "X", "r1", ts(9), ts(10)),
-        ("c1", "Y", "r1", ts(10, 12), ts(11)),
-        ("c2", "Y", "r1", ts(8), ts(9)),
-        ("c2", "X", "r1", ts(9), ts(10)),
-        ("c3", "A", "r1", ts(9), ts(11)),
-        ("c3", "B", "r2", ts(10), ts(12)),
-    ])
-    arr = _as_rows(add_enabled_times(log, IDS, strategy="array"))
-    jn = _as_rows(add_enabled_times(log, IDS, strategy="join"))
-    assert arr == jn
-
-
-def test_join_strategy_long_trace(spark):
-    # A pathological 10k-event single trace: the array path would copy a
-    # 10k-struct array onto every row; the join path must agree on a
-    # sampled subset (full array-path comparison at this length is the
-    # exact memory blowup the fallback exists to avoid).
-    from datetime import timedelta
-
-    base = datetime(2024, 1, 1)
-    n = 10_000
-    rows = []
-    for i in range(n):
-        s = base + timedelta(seconds=10 * i)
-        rows.append(("big", f"act{i % 5}", "r1", s, s + timedelta(seconds=8)))
-    log = make_log(spark, rows)
-    out = add_enabled_times(log, IDS, strategy="auto", long_trace_threshold=1_000)
-    got = {r[IDS.start_time]: r[IDS.enabled_time] for r in out.collect()}
-    assert len(got) == n
-    # Sequential non-concurrent trace: enabled(i) = end(i-1); first = own start.
-    assert got[base] == base
-    for i in (1, 17, 4_242, n - 1):
-        s = base + timedelta(seconds=10 * i)
-        assert got[s] == base + timedelta(seconds=10 * (i - 1) + 8), i
-
-
-def test_auto_picks_array_below_threshold(spark):
-    log = make_log(spark, [
-        ("c1", "A", "r1", ts(9), ts(10)),
-        ("c1", "B", "r1", ts(10, 30), ts(11)),
-    ])
-    out = {r[IDS.activity]: r[IDS.enabled_time]
-           for r in add_enabled_times(log, IDS, strategy="auto").collect()}
-    assert out["B"] == ts(10)
-
-
-def test_partner_table_matches_literal_on_large_alphabet(spark):
-    # ~800 activities, ~400 symmetric concurrent pairs (1600 directed):
-    # above the default literal_pairs_limit the relation must become a
-    # broadcast partner TABLE (literals in the expression tree made
-    # Catalyst analysis quadratic in |A|), with identical values.
+def test_partner_table_matches_literal_on_large_alphabet(spark, monkeypatch):
+    # ~800 activities, 400 symmetric concurrent pairs (800 directed):
+    # above _LITERAL_PAIRS_LIMIT the relation must become a broadcast
+    # partner TABLE (literals in the expression tree made Catalyst
+    # analysis quadratic in |A|), with identical values. Each shape is
+    # forced through the limit.
     from datetime import timedelta
 
     base = datetime(2024, 1, 1)
@@ -153,9 +106,12 @@ def test_partner_table_matches_literal_on_large_alphabet(spark):
             rows.append((c, "END", "r1", s + timedelta(minutes=4),
                          s + timedelta(minutes=5)))
     log = make_log(spark, rows)
-    for strategy in ("array", "join"):
-        lit = _as_rows(add_enabled_times(
-            log, IDS, strategy=strategy, literal_pairs_limit=10**9))
-        tab = _as_rows(add_enabled_times(
-            log, IDS, strategy=strategy, literal_pairs_limit=0))
-        assert lit == tab, strategy
+    n_pairs = len(concurrency_pairs(directly_follows_matrix(log, IDS)))
+    assert n_pairs == 800 > enablement._LITERAL_PAIRS_LIMIT
+    monkeypatch.setattr(enablement, "_LITERAL_PAIRS_LIMIT", 10**9)
+    lit = _as_rows(add_enabled_times(log, IDS))
+    monkeypatch.setattr(enablement, "_LITERAL_PAIRS_LIMIT", 0)
+    tab = _as_rows(add_enabled_times(log, IDS))
+    assert lit == tab
+    # the shared successor is enabled by its case's second event
+    assert {r[4] - r[2] for r in tab if r[1] == "END"} == {timedelta(minutes=-1)}

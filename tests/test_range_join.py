@@ -81,40 +81,6 @@ def test_workload_both_strategies(data):
     assert broadcast  # non-degenerate
 
 
-def test_features_table_workload_strategies_agree(spark):
-    # q36-level guarantee: broadcast, forced-bucketed, and auto-switched
-    # workload joins produce the SAME features table (the auto probe
-    # estimates instants from the instance count; threshold 0 forces the
-    # bucketed path through the auto branch).
-    from dataclasses import replace
-
-    from batch_processing_analysis_spark.config import Configuration
-    from batch_processing_analysis_spark.fixtures import (
-        inject_batches,
-        injected_log_df,
-    )
-    from batch_processing_analysis_spark.operators.activation_rules import (
-        features_table,
-    )
-    from batch_processing_analysis_spark.operators.discovery import (
-        discover_batches,
-    )
-
-    cfg = Configuration()
-    injected = inject_batches(n_batches=6, batch_size=4)
-    disc = discover_batches(injected_log_df(spark, injected), cfg)
-
-    def rows(c):
-        df = features_table(disc, c).drop("activities")
-        return sorted(tuple(r) for r in df.collect())
-
-    broadcast = rows(replace(cfg, workload_auto_bucket_threshold=None))
-    bucketed = rows(replace(cfg, workload_bucket_seconds=3_600))
-    auto = rows(replace(cfg, workload_auto_bucket_threshold=0))
-    assert broadcast == bucketed == auto
-    assert broadcast  # non-degenerate
-
-
 # ---------------------------------------------------------------------------
 # interval_overlap_join (M56): exactly-once anchored-bucket emission
 # ---------------------------------------------------------------------------
