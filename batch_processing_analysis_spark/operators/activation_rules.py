@@ -36,6 +36,7 @@ from pyspark.sql import Window as W
 from ..config import ActivationRulesMode, Configuration
 from .checkpoints import data_barrier
 from .range_join import workload_at_instants
+from .waiting_time import batch_cases
 
 OUTCOME_ACTIVATE = 1
 OUTCOME_NOT_ACTIVATE = 0
@@ -45,46 +46,6 @@ OUTCOME_NOT_ACTIVATE = 0
 # Stage 1: features table
 # --------------------------------------------------------------------------
 
-def _per_case(log: DataFrame, config: Configuration) -> DataFrame:
-    """One row per (batch instance, case): enabled/start scalars, the
-    case's first-event activity (for firing_activity) and the case's
-    first start over the FULL log (for t_max_flow, J6)."""
-    ids = config.log_ids
-    batched = (
-        log.withColumn("_log_first_start", F.min(F.unix_micros(F.col(ids.start_time)))
-                       .over(W.partitionBy(ids.case)))
-        .filter(F.col(ids.batch_id).isNotNull())
-    )
-    return (
-        batched.groupBy(ids.batch_id, ids.case)
-        .agg(
-            F.first(ids.batch_type).alias(ids.batch_type),
-            F.first(ids.resource).alias(ids.resource),
-            # min (start, enabled, activity) = argmin-row start w/ enabled tiebreak
-            F.min(
-                F.struct(
-                    F.unix_micros(F.col(ids.start_time)).alias("s"),
-                    F.unix_micros(F.col(ids.enabled_time)).alias("en"),
-                    F.col(ids.activity).alias("act"),
-                )
-            ).alias("_first"),
-            F.sort_array(F.collect_set(ids.activity)).alias("_acts"),
-            F.min("_log_first_start").alias("case_log_first_start"),
-        )
-        .select(
-            ids.batch_id,
-            ids.case,
-            ids.batch_type,
-            ids.resource,
-            F.col("_first.s").alias("case_start"),
-            F.col("_first.en").alias("case_enabled"),
-            F.col("_first.act").alias("case_first_activity"),
-            "_acts",
-            "case_log_first_start",
-        )
-    )
-
-
 def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     """The features table (activation_rules.py:33-150) as one lazy plan.
 
@@ -92,31 +53,25 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     seconds, matching the reference's final parsed table
     (activation_rules.py:159-164). day_of_week is Monday=0 (F3 shift).
 
-    ``cases``/``inst`` are LAZY barriers: each is referenced by
-    several plan branches below (instants, subset, final join), and
-    without materialization every branch re-runs the per-case
-    aggregation over the discovery output (the q43 lesson). This
-    function runs no action of its own: the caller's first action fills
-    the barriers (under adaptive execution, taking each one already runs
-    the shuffle stage below it), and their blocks live until the
-    enclosing ``checkpoint_scope`` exits.
+    ``cases`` (the :func:`~.waiting_time.batch_cases` rows plus the
+    instance's enabled and start instants, from a window on the key's
+    layout) is a LAZY barrier read by several plan branches (instants,
+    subset, final join); unstaged, each re-runs the per-case rollup (the
+    q43 lesson). ``inst`` is one flagged row per instance of it. No
+    action runs here, but under adaptive execution taking the barrier
+    runs the two shuffle stages below it (case window, instance rollup).
+    Its blocks live until the enclosing ``checkpoint_scope`` exits.
     """
     ids = config.log_ids
-    cases = data_barrier(_per_case(log, config), eager=False)
-
-    inst = data_barrier(cases.groupBy(ids.batch_id).agg(
-        F.first(ids.batch_type).alias(ids.batch_type),
-        F.first(ids.resource).alias(ids.resource),
-        F.max("case_enabled").alias("inst_enabled"),     # last-enabled = batch ready
-        F.min("case_enabled").alias("inst_first_enabled"),
-        F.min(F.struct("case_start", "case_enabled", "case_first_activity")).alias("_first"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("_acts")))).alias("activities"),
-    ).select(
-        ids.batch_id, ids.batch_type, ids.resource,
-        "inst_enabled", "inst_first_enabled",
-        F.col("_first.case_start").alias("inst_start"),
-        "activities",
+    w_inst = W.partitionBy(ids.batch_id)
+    cases = data_barrier(batch_cases(log, config).select(
+        ids.batch_id, ids.case, ids.batch_type, ids.resource, "case_start",
+        "case_enabled", "case_first_activity", "case_log_first_start", "activities",
+        F.max("case_enabled").over(w_inst).alias("inst_enabled"),  # last-enabled = batch ready
+        F.min("case_start").over(w_inst).alias("inst_start"),
+        (F.row_number().over(w_inst.orderBy(ids.case)) == 1).alias("_inst_row"),
     ), eager=False)
+    inst = cases.filter("_inst_row")
 
     # --- candidate instants -------------------------------------------------
     n_ready = config.num_batch_ready_negative_events
@@ -151,8 +106,7 @@ def features_table(log: DataFrame, config: Configuration) -> DataFrame:
     )
     w_samp = W.partitionBy(ids.batch_id).orderBy(samp_key, ids.case)
     neg_enabled = (
-        cases.join(inst.select(ids.batch_id, "inst_start"), ids.batch_id)
-        .filter(F.col("case_enabled") < F.col("inst_start"))
+        cases.filter(F.col("case_enabled") < F.col("inst_start"))
         .withColumn("_rn", F.row_number().over(w_samp))
         .filter(F.col("_rn") <= k)
         .select(

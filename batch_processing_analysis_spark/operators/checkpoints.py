@@ -108,11 +108,16 @@ def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, se
     never re-reads earlier checkpoints, so the caller may release those
     once this one exists.
 
-    ``eager=False`` defers materialization to the caller's NEXT action
-    on the returned frame (the persist marker is registered
-    immediately, so id tracking still works) — use it when that action
-    is a cheap full-scan aggregate anyway, fusing "materialize" and
-    "compute" into one job instead of two."""
+    ``eager=False`` stores the rows in the caller's NEXT action on the
+    returned frame (the persist marker is registered immediately, so id
+    tracking still works) — use it when that action is a cheap
+    full-scan aggregate anyway, fusing "materialize" and "compute" into
+    one job instead of two. Under adaptive query execution (the
+    engine's session default) the call itself is NOT free: it plans
+    its input, and that runs every shuffle stage below the barrier (one
+    Spark job each) before it returns. Only the last stage waits for
+    the next action. With adaptive execution off, the call runs no
+    job."""
     jsc = df.sparkSession.sparkContext._jsc
     before = _persistent_ids(jsc)
     out = _barrier(df, eager)

@@ -2,13 +2,14 @@
 
 The reference walks the batched log with nested Python loops building a
 dict of per-(batch key, type) stat lists, then pretty-prints it. Here the
-whole summary is ONE aggregate pipeline:
+whole report is ONE lazy plan:
 
-    batched rows
-      -> per-(instance, case) scalars          (WT cols are constant per case)
+    WT rows
+      -> waiting_time.batch_cases: per-(instance, case) scalars and
+         the batch key (WT cols are constant per case)
       -> per-instance scalars (key, type, size)
       -> groupBy(activities, batch_type) + groupBy(activities) union
-      -> join occurrence denominators
+      -> join occurrence denominators (one matching pass over the log)
       -> tiny DataFrame (one row per key x type + one per key)
 
 collected at the driver only for text rendering. Everything upstream is
@@ -24,63 +25,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from ..config import BatchType, Configuration
 from .checkpoints import data_barrier
+from .waiting_time import batch_cases
 
 OVERALL = "__overall__"  # batch_type marker for the type-pooled level
 
 
-def batch_instance_summary(log: DataFrame, config: Configuration) -> DataFrame:
-    """One row per batch instance: id, activities key, type, size, and
-    per-case duration sums (for pooled averages)."""
-    ids = config.log_ids
-    batched = log.filter(F.col(ids.batch_id).isNotNull())
-    per_case = (
-        batched.groupBy(ids.batch_id, ids.case)
-        .agg(
-            F.first(ids.batch_type).alias(ids.batch_type),
-            F.sort_array(F.collect_set(ids.activity)).alias("_acts"),
-            # WT cols are constant per (instance, case) by construction.
-            F.first(ids.batch_pt).alias("pt"),
-            F.first(ids.batch_wt).alias("wt"),
-            F.first(ids.batch_total_wt).alias("total_wt"),
-            F.first(ids.batch_creation_wt).alias("creation_wt"),
-            F.first(ids.batch_ready_wt).alias("ready_wt"),
-            F.first(ids.batch_other_wt).alias("other_wt"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    # Batch key = union of activities across the whole instance
-    # (utils.py:14-27: sorted tuple of the instance's activity names).
-    w_inst = W.partitionBy(ids.batch_id)
-    per_case = per_case.withColumn(
-        "activities",
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("_acts").over(w_inst)))),
-    ).drop("_acts")
-    return per_case
-
-
-def summarize_batch_waiting_times(log: DataFrame, config: Configuration) -> DataFrame:
-    """Per (activities, batch_type) + per (activities, OVERALL) summary.
+def summarize_batch_waiting_times(cases: DataFrame, config: Configuration) -> DataFrame:
+    """Per (activities, batch_type) + per (activities, OVERALL) summary
+    of the :func:`~.waiting_time.batch_cases` rows.
 
     Columns: activities array<string>, batch_type, num_instances,
     num_cases, num_events, avg/sum of each duration component (µs,
     doubles for avgs), cte, size_distribution map<int,long>.
     """
     ids = config.log_ids
-    # per_case feeds BOTH report levels (per-type + pooled) and the
-    # instance-size rollup — five aggregate consumers that otherwise
-    # each re-execute the whole per-case summarization subtree (and,
-    # under q34, the waiting-time pipeline beneath it; the q34 plan
-    # carried 84 Exchanges from exactly this fan-out). One lazy
-    # checkpoint of the small O(#instances·cases) frame serves all of
-    # them; values are untouched.
-    per_case = data_barrier(batch_instance_summary(log, config), eager=False)
-
     inst = (
-        per_case.groupBy("activities", ids.batch_type, ids.batch_id)
+        cases.groupBy("activities", ids.batch_type, ids.batch_id)
         .agg(F.count(F.lit(1)).alias("size"))
     )
     # Counter-rendering tie order (reference reporting.py:150-171): the
@@ -120,26 +83,26 @@ def summarize_batch_waiting_times(log: DataFrame, config: Configuration) -> Data
         stats = df_case.groupBy("activities", type_col).agg(
             F.count(F.lit(1)).alias("num_cases"),
             F.sum("n_events").alias("num_events"),
-            F.avg("pt").alias("avg_pt"),
-            F.avg("wt").alias("avg_wt"),
-            F.avg("total_wt").alias("avg_total_wt"),
-            F.avg("creation_wt").alias("avg_creation_wt"),
-            F.avg("ready_wt").alias("avg_ready_wt"),
-            F.avg("other_wt").alias("avg_other_wt"),
-            F.sum("pt").alias("sum_pt"),
-            F.sum("wt").alias("sum_wt"),
+            F.avg(ids.batch_pt).alias("avg_pt"),
+            F.avg(ids.batch_wt).alias("avg_wt"),
+            F.avg(ids.batch_total_wt).alias("avg_total_wt"),
+            F.avg(ids.batch_creation_wt).alias("avg_creation_wt"),
+            F.avg(ids.batch_ready_wt).alias("avg_ready_wt"),
+            F.avg(ids.batch_other_wt).alias("avg_other_wt"),
+            F.sum(ids.batch_pt).alias("sum_pt"),
+            F.sum(ids.batch_wt).alias("sum_wt"),
             # Exact integer sums (long µs): reproducible avg = sum/count in
             # any engine, immune to float-summation order differences.
-            F.sum("total_wt").alias("sum_total_wt"),
-            F.sum("creation_wt").alias("sum_creation_wt"),
-            F.sum("ready_wt").alias("sum_ready_wt"),
-            F.sum("other_wt").alias("sum_other_wt"),
+            F.sum(ids.batch_total_wt).alias("sum_total_wt"),
+            F.sum(ids.batch_creation_wt).alias("sum_creation_wt"),
+            F.sum(ids.batch_ready_wt).alias("sum_ready_wt"),
+            F.sum(ids.batch_other_wt).alias("sum_other_wt"),
         )
         return stats.join(sizes, ["activities", type_col])
 
-    per_type = level(per_case, inst, ids.batch_type)
+    per_type = level(cases, inst, ids.batch_type)
     pooled = level(
-        per_case.withColumn(ids.batch_type, F.lit(OVERALL)),
+        cases.withColumn(ids.batch_type, F.lit(OVERALL)),
         inst.withColumn(ids.batch_type, F.lit(OVERALL)),
         ids.batch_type,
     )
@@ -153,138 +116,109 @@ def summarize_batch_waiting_times(log: DataFrame, config: Configuration) -> Data
     )
 
 
-def occurrence_denominators(log: DataFrame, summary: DataFrame,
+def occurrence_denominators(log: DataFrame, cases: DataFrame,
                             config: Configuration,
                             order_col: str | None = None) -> DataFrame:
-    """total_occurrences per batch key — reference-faithful semantics
-    (reporting.py:36-37, utils.py:199-229):
+    """total_occurrences per batch key of ``cases`` (the
+    :func:`~.waiting_time.batch_cases` rows) — reference-faithful
+    semantics (reporting.py:36-37, utils.py:199-229):
 
     The reference derives a PATTERN per key from the first batch
     instance encountered (min batch id) — specifically the ordered
-    activity list of that instance's first case, duplicates included.
-    A 1-activity pattern counts plain activity executions in the whole
-    log; a longer pattern counts exact ORDERED rolling-window matches
-    per case (so a key whose first case executed its activity twice is
-    counted as the 2-gram ['A','A'], the quirk the reference itself
-    warns about when the count lands on 0).
+    activity list of that instance's first case, duplicates included —
+    and counts its exact ORDERED contiguous matches in every case of the
+    log. A 1-activity pattern thus counts plain activity executions; a
+    key whose first case executed its activity twice is counted as the
+    2-gram ['A','A'] (the quirk the reference itself warns about when
+    the count lands on 0). A match never spans a null activity.
 
     ``order_col``: explicit row-order column standing in for the
     reference's DataFrame row order (its iloc[0] / stable sorts). When
     None, the canonical order (start, end, activity) is used — same
     result whenever timestamps are unique.
 
-    Scale: pattern extraction is one aggregation over batched rows
-    (O(#instances) output); each distinct pattern length adds one
-    rolling window pass over the log.
+    Scale: one lazy plan, no driver action. Pattern extraction reads
+    only the pattern instances' rows (O(#keys) output). Counting is ONE
+    pass over the log for every pattern and length at once
+    (multi-pattern detection): each case's ordered activity sequence is
+    exploded to its positions, each position is equi-joined against the
+    broadcast pattern set on the pattern's first activity, and the
+    candidate keeps only when the slice from there equals the pattern.
+    No per-length pass, no nested-loop join. Each position row carries
+    its case's sequence, so the pass moves O(Σ trace length²) array
+    elements.
     """
     ids = config.log_ids
-    ord_cols = (
-        [F.col(order_col)] if order_col
-        else [F.col(ids.start_time), F.col(ids.end_time), F.col(ids.activity)]
+    first_row = ([F.col(order_col)] if order_col else
+                 [F.col(ids.start_time), F.col(ids.end_time), F.col(ids.activity)])
+    # Ordered activity list of a group's rows, sorted by (start, end)
+    # with row-order tiebreak (the reference's stable sort over file
+    # order, utils.py:210-211). Nulls sort first, like an ascending
+    # window; a null activity stays in the list as a null element.
+    ordered_acts = F.transform(
+        F.array_sort(F.collect_list(F.struct(
+            F.col(ids.start_time).alias("s"), F.col(ids.end_time).alias("e"),
+            F.col(order_col or ids.activity).alias("o"),
+            F.col(ids.activity).alias("a"),
+        ))),
+        lambda x: x["a"],
     )
-    batched = log.filter(F.col(ids.batch_id).isNotNull())
 
-    # Instance -> (key, first case by row order); key's pattern instance
-    # = min batch id (reference iterates groupby(batch_id) ascending).
-    inst = batched.groupBy(ids.batch_id).agg(
-        F.sort_array(F.collect_set(ids.activity)).alias("activities"),
-        F.min(F.struct(*[c.alias(f"o{i}") for i, c in enumerate(ord_cols)],
-                       F.col(ids.case).alias("c")))["c"].alias("_first_case"),
-    )
-    w_key = W.partitionBy("activities").orderBy(ids.batch_id)
-    pat_inst = (
-        inst.withColumn("_rn", F.row_number().over(w_key))
-        .filter(F.col("_rn") == 1)
-        .select(ids.batch_id, "activities", "_first_case")
-    )
-    # Pattern = ordered activity list of that (instance, case)'s rows,
-    # sorted by (start, end) with row-order tiebreak (the reference's
-    # stable sort over file order, utils.py:210-211).
-    pattern = (
-        batched.join(
-            F.broadcast(pat_inst.withColumnRenamed("_first_case", ids.case)),
-            [ids.batch_id, ids.case],
-        )
+    # Key -> pattern instance = min batch id (the reference iterates
+    # groupby(batch_id) ascending) -> its first case by row order
+    # (ties to the smaller case id) -> that case's ordered rows.
+    pat_inst = cases.groupBy("activities").agg(F.min(ids.batch_id).alias(ids.batch_id))
+    patterns = (
+        log.join(F.broadcast(pat_inst), ids.batch_id)
+        .groupBy("activities", ids.case)
+        .agg(F.min(F.struct(*first_row)).alias("_first"),
+             ordered_acts.alias("pattern"))
         .groupBy("activities")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(
-                    F.col(ids.start_time).alias("s"), F.col(ids.end_time).alias("e"),
-                    *[c.alias(f"o{i}") for i, c in enumerate(ord_cols)],
-                    F.col(ids.activity).alias("a"),
-                ))),
-                lambda x: x["a"],
-            ).alias("pattern"),
-        )
-    )
-    # Stage the tiny (activities, pattern) frame: its subtree is a
-    # full pass over the batched log (window + two aggregations), and
-    # it is consumed by the singles filter, the length-collect below,
-    # one broadcast join per distinct pattern length, and the final
-    # left join — 3 + #lengths re-executions of the log-sized subtree
-    # without the barrier (profiled at r11 close: two identical
-    # 8 s-executor stages per q34 run from this fan-out alone).
-    keys = data_barrier(
-        summary.select("activities").distinct()
-        .join(pattern, "activities", "left"),
-        eager=False,
+        .agg(F.min(F.struct("_first", ids.case, "pattern"))["pattern"].alias("pattern"))
     )
 
-    single = keys.filter(F.size("pattern") == 1).select(
-        "activities", F.element_at("pattern", 1).alias("_act")
+    # Every contiguous match in every case (utils.py:218-227): each
+    # position joins the patterns that start with its activity, and the
+    # slice of the pattern's length from there must equal the pattern.
+    # A pattern with a null element never matches, nor does a slice
+    # holding one.
+    matchable = patterns.filter(F.forall("pattern", lambda a: a.isNotNull()))
+    counts = (
+        log.groupBy(ids.case).agg(ordered_acts.alias("_seq"))
+        .select("_seq", F.posexplode("_seq").alias("_i", "_act"))
+        .join(F.broadcast(matchable.withColumn("_act", F.col("pattern")[0])), "_act")
+        .filter(F.slice("_seq", F.col("_i") + 1, F.size("pattern")) == F.col("pattern"))
+        .groupBy("activities")
+        .agg(F.count(F.lit(1)).alias("total_occurrences"))
     )
-    act_counts = log.groupBy(F.col(ids.activity).alias("_act")).agg(
-        F.count(F.lit(1)).alias("total_occurrences")
-    )
-    single_out = (
-        single.join(act_counts, "_act", "left")
-        .select("activities",
-                F.coalesce("total_occurrences", F.lit(0)).alias("total_occurrences"))
-    )
-
-    multi = keys.filter(F.size("pattern") > 1).select("activities", "pattern")
-    lengths = [r["k"] for r in
-               multi.select(F.size("pattern").alias("k")).distinct().collect()]
-    if not lengths:
-        return single_out
-    # Ordered rolling windows of each pattern length over every case
-    # (utils.py:218-227), matched by exact array equality.
-    w_case = W.partitionBy(ids.case).orderBy(
-        ids.start_time, ids.end_time, *([order_col] if order_col else [ids.activity])
-    )
-    parts = []
-    for k in lengths:
-        wk = w_case.rowsBetween(0, k - 1)
-        rolled = (
-            log.withColumn("_win", F.collect_list(ids.activity).over(wk))
-            .filter(F.size("_win") == k)
-            .select(F.col("_win").alias("pattern"))
-        )
-        parts.append(
-            rolled.join(F.broadcast(multi.filter(F.size("pattern") == k)), "pattern")
-            .groupBy("activities")
-            .agg(F.count(F.lit(1)).alias("total_occurrences"))
-        )
-    multi_out = parts[0]
-    for p in parts[1:]:
-        multi_out = multi_out.unionByName(p)
-    multi_out = multi.select("activities").join(multi_out, "activities", "left").select(
+    return pat_inst.join(counts, "activities", "left").select(
         "activities", F.coalesce("total_occurrences", F.lit(0)).alias("total_occurrences")
     )
-    return single_out.unionByName(multi_out)
 
 
 def batch_report(log: DataFrame, config: Configuration,
                  order_col: str | None = None) -> DataFrame:
     """Full report table: summary + occurrence denominators + frequency.
 
-    The log is traversed by the summary, the pattern extraction, the
-    single-activity counts, and one rolling-window pass per distinct
-    pattern length. Pass the staged frame
+    Builds a plan and runs no Spark job of its own. The log is read by
+    the per-case rollup, the pattern extraction and the one matching pass
+    of the denominators. Pass the staged frame
     :func:`~.waiting_time.add_waiting_times` returns, so every pass
     reads materialized rows; a lazy input re-runs its plan per pass."""
-    summary = summarize_batch_waiting_times(log, config)
-    denom = occurrence_denominators(log, summary, config, order_col)
+    ids = config.log_ids
+    # The per-case rows feed both report levels, the instance-size
+    # rollup and the pattern-instance choice; unstaged, each re-runs the
+    # rollup (the q34 plan once carried 84 Exchanges from this fan-out).
+    # Only the columns read here are staged, which keeps the features'
+    # log-wide window out. Lazy barrier: the first action fills it, but
+    # under adaptive execution taking it runs the rollup's shuffle stage.
+    cases = data_barrier(batch_cases(log, config).select(
+        "activities", ids.batch_id, ids.batch_type, "n_events",
+        ids.batch_pt, ids.batch_wt, ids.batch_total_wt, ids.batch_creation_wt,
+        ids.batch_ready_wt, ids.batch_other_wt,
+    ), eager=False)
+    summary = summarize_batch_waiting_times(cases, config)
+    denom = occurrence_denominators(log, cases, config, order_col)
     out = summary.join(F.broadcast(denom), "activities", "left")
     # Zero-guard: clamp to 1 with the reference's warning semantics
     # (reporting.py:38-42) — frequency vs a 0 denominator is undefined.

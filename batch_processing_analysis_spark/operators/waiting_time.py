@@ -16,6 +16,10 @@ The reference loops per batch instance × case with masked write-backs
 joins. Durations are long MICROSECONDS (the reference data is µs
 precision); non-batched rows get 0 like the reference's timedelta(0)
 initialization (analysis.py:53-58).
+
+:func:`batch_cases` rolls the batched WT rows up to the (instance,
+case) grain and defines the batch key the report and the activation
+rules group by.
 """
 
 from __future__ import annotations
@@ -24,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..config import Configuration, EventLogIDs
+from ..config import Configuration
 from .checkpoints import data_barrier
 
 
@@ -100,9 +104,57 @@ def add_waiting_times(log: DataFrame, config: Configuration) -> DataFrame:
     # The WT table feeds several consumers (the collected table, the
     # report's passes, the features table); unstaged, each re-runs the
     # repartition and both window passes. Lazy barrier: the first
-    # action stores the rows, later ones read them, and an enclosing
-    # checkpoint_scope frees them.
+    # action stores the rows and later ones read them (under adaptive
+    # execution, taking it already runs the repartition's shuffle
+    # stage); an enclosing checkpoint_scope frees them.
     return data_barrier(
         out.drop("_case_first", "_case_end", "_inst_start", "_inst_enabled", "_inst_key"),
         eager=False,
+    )
+
+
+def batch_cases(wt: DataFrame, config: Configuration) -> DataFrame:
+    """One row per (batch instance, case) of the batched rows with the
+    instance's batch key ``activities``, the sorted set of every activity
+    it ran (reference utils.py:14-27): batch type, resource, the WT
+    columns ``wt`` carries (constant per case), ``n_events``, the case's
+    first event (``case_start``/``case_enabled`` µs, ties to the smaller
+    enabled; ``case_first_activity``) and its first start over the FULL
+    log (``case_log_first_start``, for t_max_flow). A lazy plan: each
+    consumer selects what it reads, and column pruning drops the rest
+    (the log-wide window included)."""
+    ids = config.log_ids
+    us = F.unix_micros
+    durations = [c for c in (ids.batch_pt, ids.batch_wt, ids.batch_total_wt,
+                             ids.batch_creation_wt, ids.batch_ready_wt,
+                             ids.batch_other_wt) if c in wt.columns]
+    # One exchange on the instance serves the (instance, case) rollup
+    # and the per-instance key window below.
+    cases = (
+        wt.withColumn("_log_first_start",
+                      F.min(us(F.col(ids.start_time))).over(W.partitionBy(ids.case)))
+        .filter(F.col(ids.batch_id).isNotNull())
+        .repartition(ids.batch_id)
+        .groupBy(ids.batch_id, ids.case)
+        .agg(
+            F.first(ids.batch_type).alias(ids.batch_type),
+            F.first(ids.resource).alias(ids.resource),
+            *[F.first(c).alias(c) for c in durations],
+            F.count(F.lit(1)).alias("n_events"),
+            F.min(F.struct(us(F.col(ids.start_time)).alias("s"),
+                           us(F.col(ids.enabled_time)).alias("en"),
+                           F.col(ids.activity).alias("act"))).alias("_first"),
+            F.sort_array(F.collect_set(ids.activity)).alias("_acts"),
+            F.min("_log_first_start").alias("case_log_first_start"),
+        )
+    )
+    return cases.select(
+        ids.batch_id, ids.case, ids.batch_type, ids.resource, *durations, "n_events",
+        F.col("_first.s").alias("case_start"),
+        F.col("_first.en").alias("case_enabled"),
+        F.col("_first.act").alias("case_first_activity"),
+        "case_log_first_start",
+        F.array_sort(F.array_distinct(F.flatten(
+            F.collect_list("_acts").over(W.partitionBy(ids.batch_id))
+        ))).alias("activities"),
     )

@@ -681,11 +681,13 @@ def q33_waiting_time_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
 def q34_waiting_time_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Report aggregation (§3.2; reference reporting.py:11-206): per
     (batch key, type) + type-pooled stats, occurrence denominators
-    (single-activity count / W5 rolling-subsequence count), CTE with the
-    reference's zero-guard, frequency with the clamp-to-1 guard.
+    (W5 count of each key's ordered pattern; a 1-activity pattern counts
+    plain executions), CTE with the reference's zero-guard, frequency
+    with the clamp-to-1 guard.
 
     Scale: output is O(#batch keys) — independent of log size; the
-    rolling-window denominator is the only full-log pass. Averages and
+    one matching pass of the denominators is the only full-log pass
+    besides the per-case rollup. Averages and
     ratios are SINGLE IEEE divisions of exact integer sums (no decimal
     round()), so Spark and the oracle produce bitwise-identical doubles.
     """

@@ -2,8 +2,8 @@
 invariance under input row order and shuffle-partition count, the WT
 invariant, the activation-rule mode defaults it relies on, and the
 rule miner's contract (one row per group, rendering without Spark
-jobs, one group per activity tuple) and a features table that runs
-no Spark action of its own."""
+jobs, one group per activity tuple), and a features table and a batch
+report that run no Spark action of their own."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import random
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 from batch_processing_analysis_spark.config import ActivationRulesMode, Configuration
 from batch_processing_analysis_spark.fixtures import inject_batches, injected_log_df
@@ -22,6 +23,8 @@ from batch_processing_analysis_spark.operators.activation_rules import (
     render_activation_rules,
 )
 from batch_processing_analysis_spark.operators.discovery import discover_batches
+from batch_processing_analysis_spark.operators.reporting import batch_report
+from batch_processing_analysis_spark.operators.waiting_time import add_waiting_times
 from batch_processing_analysis_spark.pipeline import Analysis, analyze
 
 CFG = Configuration(min_rule_obs=10)
@@ -127,8 +130,9 @@ def test_render_runs_no_spark_job(spark, feat):
 def test_features_table_runs_no_action(spark, disc):
     """features_table only builds a plan; its caller's first action runs
     it. Without adaptive execution that takes no Spark job. With it,
-    each of the two lazy barriers runs the shuffle stage under it when
-    it is taken (``localCheckpoint`` plans its input), and nothing more."""
+    its one lazy barrier runs the two shuffle stages under it (the case
+    window and the instance rollup) when it is taken (``localCheckpoint``
+    plans its input), and nothing more."""
     key = "spark.sql.adaptive.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -143,6 +147,34 @@ def test_features_table_runs_no_action(spark, disc):
     jobs, _ = _jobs_in(spark, "test-analyze-features-aqe",
                        lambda: features_table(disc, CFG))
     assert jobs <= 2
+
+
+def test_batch_report_runs_no_action(spark, disc):
+    """batch_report only builds a plan, occurrence denominators
+    included (no driver collect of the pattern lengths). Without
+    adaptive execution that takes no Spark job. With it, its one lazy
+    barrier (the per-case rollup) runs the shuffle stage under it when
+    it is taken, and nothing more."""
+    # Every event of a batched case joins its batch: 3-activity keys.
+    per_case = Window.partitionBy(IDS.case)
+    wt = add_waiting_times(
+        disc.withColumn(IDS.batch_id, F.max(IDS.batch_id).over(per_case))
+        .withColumn(IDS.batch_type, F.max(IDS.batch_type).over(per_case)), CFG)
+    assert wt.count() > 0
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        jobs, rep = _jobs_in(spark, "test-analyze-report",
+                             lambda: batch_report(wt, CFG))
+    finally:
+        spark.conf.set(key, old)
+    assert old == "true"
+    assert jobs == 0
+    assert rep.filter(F.size("activities") > 1).count() >= 1
+    jobs, _ = _jobs_in(spark, "test-analyze-report-aqe",
+                       lambda: batch_report(wt, CFG))
+    assert jobs <= 1
 
 
 @pytest.mark.parametrize("mode", list(ActivationRulesMode))
