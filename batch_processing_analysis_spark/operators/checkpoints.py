@@ -19,7 +19,7 @@ for a request's barriers. While a scope is open, every
 :func:`data_barrier` / :func:`checkpoint_tracked` records the RDD ids
 it persists into the innermost open scope, and the scope unpersists
 all of them on exit — also when its body raises. Ids a loop already
-released early (discovery, graph, bpe) are a no-op there. With no scope
+released early (discovery, graph) are a no-op there. With no scope
 open nothing is recorded and barriers live until the caller releases
 them or the session ends. The rule for callers: nothing created inside
 a scope may be cached beyond it (the module-level plan caches in

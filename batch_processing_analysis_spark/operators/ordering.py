@@ -780,7 +780,7 @@ def greedy_coverage_select(docs: DataFrame, k: int,
     or eval-set builder runs.
 
     Iterative BY NATURE (each pick changes every marginal gain), so
-    this is a driver-coordinated loop like M46 BPE / M68 PageRank:
+    this is a driver-coordinated loop like M68 PageRank:
     ``k`` rounds, each ONE distributed anti-join + count + a 1-row
     argmax collect; the covered set lives as a (token-hash) DataFrame,
     checkpointed per round to cut lineage. Never materializes doc

@@ -38,8 +38,9 @@ def summarize_batch_waiting_times(cases: DataFrame, config: Configuration) -> Da
     of the :func:`~.waiting_time.batch_cases` rows.
 
     Columns: activities array<string>, batch_type, num_instances,
-    num_cases, num_events, avg/sum of each duration component (µs,
-    doubles for avgs), cte, size_distribution map<int,long>.
+    num_cases, num_events, the exact sum of each duration component
+    (long µs; readers derive averages as sum / num_cases), cte,
+    size_distribution map<int,long>, size_first_seen map<int,long>.
     """
     ids = config.log_ids
     inst = (
@@ -83,16 +84,10 @@ def summarize_batch_waiting_times(cases: DataFrame, config: Configuration) -> Da
         stats = df_case.groupBy("activities", type_col).agg(
             F.count(F.lit(1)).alias("num_cases"),
             F.sum("n_events").alias("num_events"),
-            F.avg(ids.batch_pt).alias("avg_pt"),
-            F.avg(ids.batch_wt).alias("avg_wt"),
-            F.avg(ids.batch_total_wt).alias("avg_total_wt"),
-            F.avg(ids.batch_creation_wt).alias("avg_creation_wt"),
-            F.avg(ids.batch_ready_wt).alias("avg_ready_wt"),
-            F.avg(ids.batch_other_wt).alias("avg_other_wt"),
-            F.sum(ids.batch_pt).alias("sum_pt"),
-            F.sum(ids.batch_wt).alias("sum_wt"),
             # Exact integer sums (long µs): reproducible avg = sum/count in
             # any engine, immune to float-summation order differences.
+            F.sum(ids.batch_pt).alias("sum_pt"),
+            F.sum(ids.batch_wt).alias("sum_wt"),
             F.sum(ids.batch_total_wt).alias("sum_total_wt"),
             F.sum(ids.batch_creation_wt).alias("sum_creation_wt"),
             F.sum(ids.batch_ready_wt).alias("sum_ready_wt"),

@@ -5,7 +5,7 @@ parse record text into typed columns — the ingestion edge in front
 of the crawl→corpus pipeline (M169 html_to_text consumes the
 response payloads, M164/M166 governance consumes the target URIs).
 
-Two layers, split the same way the WebDataset source is:
+Two layers:
 
 - :func:`read_warc` — the BINARY path: ``binaryFile`` →
   ``mapInPandas``; per-record gzip members decompress via stdlib

@@ -1,10 +1,9 @@
 """Property-based invariants (hypothesis).
 
-Fast pure-python properties exercise the streaming sessionization
-kernel against a naive reference implementation; a small number of
-Spark examples check end-to-end pipeline invariants the reference's
-design guarantees (WT decomposition additivity, batch partition
-consistency, enablement bounds).
+A small number of Spark examples check end-to-end pipeline invariants
+the reference's design guarantees (WT decomposition additivity, batch
+partition consistency, enablement bounds), plus randomized operator
+invariants.
 """
 
 from __future__ import annotations
@@ -19,49 +18,8 @@ from batch_processing_analysis_spark.config import Configuration, EventLogIDs
 from batch_processing_analysis_spark.operators.discovery import discover_batches
 from batch_processing_analysis_spark.operators.enablement import add_enabled_times
 from batch_processing_analysis_spark.operators.waiting_time import add_waiting_times
-from batch_processing_analysis_spark.streaming.stateful import _chains, _emit_prefix
 
 IDS = EventLogIDs()
-
-# ---------------------------------------------------------------------------
-# Pure-python kernel properties (cheap: hundreds of examples)
-# ---------------------------------------------------------------------------
-
-events = st.lists(
-    st.tuples(
-        st.integers(0, 50),            # start offset
-        st.integers(0, 20),            # duration
-        st.sampled_from(["c1", "c2", "c3"]),
-    ),
-    min_size=0, max_size=20,
-).map(lambda rs: sorted((s, s + d, c) for s, d, c in rs))
-
-
-@given(events, st.sampled_from([0, 2, 5]))
-@settings(max_examples=200, deadline=None)
-def test_chains_partition_preserves_events(rows, gap):
-    gap_us = gap
-    chains = _chains(rows, gap_us)
-    # Chains concatenate back to the input (a partition, order kept).
-    flat = [r for c, _ in chains for r in c]
-    assert flat == rows
-    # Each chain's type is one of the three classes or None.
-    for _, t in chains:
-        assert t in (None, "simultaneous", "sequential", "concurrent")
-
-
-@given(events, st.sampled_from([0, 3]), st.integers(0, 80))
-@settings(max_examples=200, deadline=None)
-def test_emit_prefix_soundness(rows, gap, wm):
-    emitted, kept, _ = _emit_prefix(rows, gap, wm)
-    flat = [r for c, _ in emitted for r in c] + kept
-    assert sorted(flat) == rows
-    # Every emitted chain is frozen: all starts below the watermark and
-    # the tail cannot be extended by any event at/after the watermark.
-    for c, _ in emitted:
-        assert max(r[0] for r in c) < wm
-        assert wm > c[-1][1] + gap
-
 
 # ---------------------------------------------------------------------------
 # Spark end-to-end invariants (few examples: session round-trips cost)

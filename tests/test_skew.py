@@ -1,66 +1,12 @@
-"""Salted join: result parity with the plain join on a skewed fixture,
-salt participation in the join keys, and retry-safe determinism."""
+"""Spark's adaptive skew join re-plans a hot key at runtime."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from batch_processing_analysis_spark.operators.skew import salted_join
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # one hot key (90% of rows) + a tail; small side has extra + missing keys
-    big = spark.range(2000).select(
-        F.when(F.col("id") < 1800, F.lit("hot")).otherwise(
-            F.concat(F.lit("k"), (F.col("id") % 7).cast("string"))
-        ).alias("key"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame(
-        [("hot", 1.0), ("k0", 2.0), ("k3", 3.0), ("absent", 9.0)],
-        "key string, weight double",
-    )
-    return big, small
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_salted_join_matches_plain(spark, skewed, how):
-    big, small = skewed
-    want = sorted(map(tuple, big.join(small, "key", how).collect()))
-    got = sorted(map(tuple, salted_join(big, small, "key", salt=8,
-                                        how=how).collect()))
-    assert got == want
-    assert want  # non-degenerate
-
-
-def test_salt_is_in_the_join_keys(spark, skewed):
-    big, small = skewed
-    plan = (
-        salted_join(big, small, "key", salt=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "_salt" in plan
-
-
-def test_salted_join_deterministic_across_runs(spark, skewed):
-    big, small = skewed
-    a = sorted(map(tuple, salted_join(big, small, "key", salt=8).collect()))
-    b = sorted(map(tuple, salted_join(big, small, "key", salt=8).collect()))
-    assert a == b
-
-
-def test_salted_join_rejects_other_hows(spark, skewed):
-    big, small = skewed
-    with pytest.raises(ValueError):
-        salted_join(big, small, "key", how="right")
-
 
 def test_aqe_splits_skewed_partition_at_runtime(spark):
-    """Platform-evidence test for the 100 TB skew posture: beyond the
-    content-salt operator above, AQE itself must re-plan a skewed
-    sort-merge join at runtime (the engine's bench/session default).
+    """Platform-evidence test for the 100 TB skew posture: AQE itself
+    must re-plan a skewed sort-merge join at runtime (the engine's
+    bench/session default).
     Thresholds are lowered so the local fixture trips the same code
     path a hot production key would."""
     import pyspark.sql.functions as F
