@@ -12,6 +12,14 @@ enabled-after-start fixpoint split, discovery.py:12-81) runs in closed
 form over per-(instance, case) aggregates, JVM-side like the rest: no
 Python worker runs during discovery.
 
+Discovery takes two checkpoint barriers: one after detection and one at
+its output. The enabled-time split, the min-size filter and the id
+assignment need only each (instance, case)'s first (start, enabled), so
+they run together on that small table and join back onto the event
+frame once (:func:`_label_instances`); no repair needs a barrier of its
+own. The detection barrier stays because the repairs fork the detection
+frame (see :func:`discover_batches`).
+
 Adjacency semantics (validated against the reference's golden outputs):
 ordered by (start, end, case) within (resource, activity):
 - *simultaneous*: identical start AND end as previous;
@@ -422,46 +430,47 @@ def _split_mixed_type_subprocess(df: DataFrame) -> DataFrame:
     )
 
 
-def _split_wrong_enabled_both(df: DataFrame, ids: EventLogIDs) -> DataFrame:
-    """Repair pass 3 (discovery.py:12-81): iteratively split off batch
-    cases whose enabled time is after the instance's first start (they
-    could not have been part of that batch accumulation).
+def _label_instances(df: DataFrame, ids: EventLogIDs, min_size: int) -> DataFrame:
+    """Repair passes 3-5 (discovery.py:12-81, 128-209) over one
+    (instance, case) table: the enabled-after-start split, the min-size
+    filter and the id assignment.
 
-    The reference is a driver-side fixpoint loop over the whole frame;
-    here the loop's closed form runs JVM-side over per-(instance, case)
-    aggregates (see the threshold-chain derivation below), and the
-    resulting sub-index joins back in one pass.
+    Nothing in the three rules needs the event rows, only each
+    (instance, case)'s first (start, enabled), so they run together on
+    that table (the multi-pattern spirit of *Real-Time Multi-Pattern
+    Detection over Event Streams*, SIGMOD 2019) and one broadcast
+    join-back labels the frame:
 
-    BOTH levels in ONE aggregate pass (r12): the task-level analysis
-    rows (``_sub_type`` null, ``_task_grp`` set) and the subprocess
-    rows (``_sub_type`` set — null-synchronized with ``_sub_grp`` by
-    the detectors) are disjoint, so a class-tagged key aggregates both
-    levels in a single full-frame pass where the r11 shape ran the
-    identical aggregate twice (guide §2.1). The per-level join-backs
-    and the rename semantics are byte-identical to the sequential
-    form: splits are computed per (instance, case) and applied to
-    every row of that (instance, case), whatever the row's own class.
+    - the level key is ``"0"`` + ``_task_grp`` on task rows (``_sub_type``
+      null) and ``"1"`` + ``_sub_grp`` on subprocess rows — the levels are
+      disjoint, as the detectors and the mixed-type repair null
+      ``_sub_grp`` and ``_sub_type`` together;
+    - the instance key is level key + ``"\\x1d"`` + split index;
+    - an instance survives with at least ``min_size`` (key, case) rows,
+      i.e. distinct cases. A subprocess instance that is too small
+      leaves its rows unbatched (discovery.py:140-143), and a task
+      instance counts only the rows outside subprocess instances
+      (discovery.py:148), because those are the rows its key labels;
+    - ids are dense 1..B in instance-key order via :func:`_dense_ids`
+      (SURVEY §7.4: equivalence classes match the reference, labels are
+      canonicalized). The level prefix sorts every task instance before
+      every subprocess instance and keeps the key order within a level:
+      task instances get 1..T and subprocess instances T+1..T+S.
     """
-    t_key = F.concat(F.lit("t\x1e"), F.col("_task_grp"))
-    s_key = F.concat(F.lit("s\x1e"), F.col("_sub_grp"))
-    rows = df.withColumn(
-        "_wkey",
-        F.when(F.col("_sub_type").isNull(), t_key).otherwise(s_key),
-    ).filter(F.col("_wkey").isNotNull())
-    grp_col = "_wkey"
+    is_sub_row = F.col("_sub_type").isNotNull()
+    df = df.withColumn(
+        "_lkey",
+        F.when(is_sub_row, F.concat(F.lit("1"), F.col("_sub_grp")))
+        .otherwise(F.concat(F.lit("0"), F.col("_task_grp"))),
+    )
     # Batch-case enabled = min enabled among rows at the case's min start
     # (utils.py:93-106); batch-case start = min start.
     per_case = (
-        rows.groupBy(grp_col, ids.case)
+        df.filter(F.col("_lkey").isNotNull())
+        .groupBy("_lkey", ids.case)
         .agg(
             F.min(F.struct(F.unix_micros(F.col(ids.start_time)).alias("s"),
                            F.unix_micros(F.col(ids.enabled_time)).alias("en"))).alias("_first"),
-        )
-        .select(
-            grp_col,
-            ids.case,
-            F.col("_first.s").alias("_case_start"),
-            F.col("_first.en").alias("_case_enabled"),
         )
     )
 
@@ -489,11 +498,11 @@ def _split_wrong_enabled_both(df: DataFrame, ids: EventLogIDs) -> DataFrame:
     # (matching the pandas fallback this replaces: stop splitting).
     empty = F.array().cast("array<bigint>")
     last = lambda acc: F.element_at(acc, -1)  # noqa: E731
-    grouped = per_case.groupBy(grp_col).agg(
+    grouped = per_case.groupBy("_lkey").agg(
         F.sort_array(
             F.collect_list(F.struct(
-                F.col("_case_start").alias("s"),
-                F.col("_case_enabled").alias("en"),
+                F.col("_first.s").alias("s"),
+                F.col("_first.en").alias("en"),
                 F.col(ids.case).alias("case"),
             ))
         ).alias("_cs")
@@ -507,84 +516,45 @@ def _split_wrong_enabled_both(df: DataFrame, ids: EventLogIDs) -> DataFrame:
             .otherwise(acc)
         ),
     )
-    splits = (
+    labels = (
         grouped.withColumn("_t", thresholds)
         .select(
-            grp_col,
+            "_lkey",
             F.explode(F.transform(
                 F.col("_cs"),
                 lambda x: F.struct(
                     x["case"].alias("case"),
                     F.size(F.filter(F.col("_t"), lambda t: t < x["en"]))
-                    .cast("int").alias("_sub_idx"),
+                    .alias("_sub_idx"),
                 ),
             )).alias("_e"),
         )
-        .select(grp_col, F.col("_e.case").alias(ids.case),
-                F.col("_e._sub_idx").alias("_sub_idx"))
-    )
-    # Per-level join-backs, identical to running the pass per level:
-    # the splits frame is tiny (one row per (instance, case)), so the
-    # two broadcast joins cost nothing next to the saved full pass.
-    out = df
-    for level_tag, level_col in (("t\x1e", "_task_grp"),
-                                 ("s\x1e", "_sub_grp")):
-        level_splits = (
-            splits.filter(F.col(grp_col).startswith(level_tag))
-            .select(
-                F.expr(f"substring({grp_col}, 3)").alias(level_col),
-                ids.case, "_sub_idx",
-            )
+        .select(
+            "_lkey",
+            F.col("_e.case").alias(ids.case),
+            F.concat_ws("\x1d", "_lkey", F.col("_e._sub_idx").cast("string")).alias("_ikey"),
         )
-        out = out.join(level_splits, [level_col, ids.case], "left")
-        out = out.withColumn(
-            level_col,
-            F.when(
-                F.col(level_col).isNotNull(),
-                F.concat_ws("\x1d", level_col,
-                            F.coalesce(F.col("_sub_idx"),
-                                       F.lit(0)).cast("string")),
-            ),
-        ).drop("_sub_idx")
-    return out
-
-
-def _min_size_filter(df: DataFrame, ids: EventLogIDs, min_size: int) -> DataFrame:
-    """Repair pass 4 (discovery.py:128-158): drop instances with fewer
-    than ``min_size`` distinct cases. Subprocess level first — removing a
-    subprocess batch clears the task-level info of its rows too
-    (discovery.py:140-143) — then task level over the remaining rows."""
-    small_sub = (
-        df.filter(F.col("_sub_grp").isNotNull())
-        .groupBy("_sub_grp")
-        .agg(F.countDistinct(ids.case).alias("_n"))
-        .filter(F.col("_n") < min_size)
-        .select("_sub_grp", F.lit(True).alias("_small_sub"))
     )
-    df = df.join(F.broadcast(small_sub), "_sub_grp", "left")
-    keep = F.col("_small_sub").isNull()
-    df = (
-        df.withColumn("_task_grp", F.when(keep, F.col("_task_grp")))
-        .withColumn("_task_type", F.when(keep, F.col("_task_type")))
-        .withColumn("_sub_grp", F.when(keep, F.col("_sub_grp")))
-        .withColumn("_sub_type", F.when(keep, F.col("_sub_type")))
-        .drop("_small_sub")
+    # One row per (key, case): an instance's row count is its distinct
+    # case count, and the kept keys are the distinct set the ids rank.
+    kept = (
+        labels.groupBy("_ikey").agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= min_size)
+        .select("_ikey")
     )
-    # Task level: size counted over rows NOT in a surviving subprocess batch
-    # (reference filters sub-isna rows before grouping, discovery.py:148).
-    small_task = (
-        df.filter(F.col("_task_grp").isNotNull() & F.col("_sub_type").isNull())
-        .groupBy("_task_grp")
-        .agg(F.countDistinct(ids.case).alias("_n"))
-        .filter(F.col("_n") < min_size)
-        .select("_task_grp", F.lit(True).alias("_small_task"))
+    labels = labels.join(F.broadcast(_dense_ids(kept, "_ikey", ids.batch_id)), "_ikey")
+    raw_type = F.when(is_sub_row, F.col("_sub_type")).otherwise(F.col("_task_type"))
+    type_map = F.create_map(
+        *[F.lit(x) for kv in {**_RAW_TASK_RENAME, **_RAW_SUB_RENAME}.items() for x in kv]
     )
-    df = df.join(F.broadcast(small_task), "_task_grp", "left")
-    keep_t = F.col("_small_task").isNull()
     return (
-        df.withColumn("_task_grp", F.when(keep_t, F.col("_task_grp")))
-        .withColumn("_task_type", F.when(keep_t, F.col("_task_type")))
-        .drop("_small_task")
+        df.join(F.broadcast(labels.select("_lkey", ids.case, ids.batch_id)),
+                ["_lkey", ids.case], "left")
+        .withColumn(
+            ids.batch_type,
+            F.when(F.col(ids.batch_id).isNotNull(), type_map[raw_type]),
+        )
+        .drop("_lkey", "_task_grp", "_task_type", "_sub_grp", "_sub_type")
     )
 
 
@@ -613,49 +583,6 @@ def _dense_ids(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     return (
         ranked.join(F.broadcast(offsets), "_pid")
         .select(key_col, (F.col("_ofs") + F.col("_lrank")).cast("long").alias(id_col))
-    )
-
-
-def _unify(df: DataFrame, ids: EventLogIDs) -> DataFrame:
-    """Repair pass 5 (discovery.py:161-209): one id space 1..B (task
-    instances then subprocess instances) + canonical type names.
-
-    ID labels are dense in global key-string order (SURVEY §7.4:
-    equivalence classes match the reference, labels are canonicalized)
-    via :func:`_dense_ids` — no unpartitioned window, no plan-build-time
-    ``count()`` action.
-
-    One dense-id pass serves both levels: each instance key carries a
-    level prefix, ``"0"`` for task and ``"1"`` for subprocess
-    instances. Every task key then sorts before every subprocess key,
-    and a shared prefix keeps the key order within a level, so task
-    instances get 1..T and subprocess instances T+1..T+S — the labels
-    of ranking each level on its own and offsetting the subprocess ids
-    by T, at half the jobs. The levels are disjoint: the detectors and
-    every repair null ``_sub_grp`` and ``_sub_type`` together.
-    """
-    is_sub_row = F.col("_sub_grp").isNotNull()
-    is_task_row = F.col("_sub_type").isNull() & F.col("_task_type").isNotNull()
-    inst_key = (
-        F.when(is_sub_row, F.concat(F.lit("1"), F.col("_sub_grp")))
-        .when(is_task_row, F.concat(F.lit("0"), F.col("_task_grp")))
-    )
-    df = df.withColumn("_ikey", inst_key)
-    inst_ids = _dense_ids(
-        df.filter(F.col("_ikey").isNotNull()).select("_ikey").distinct(),
-        "_ikey", ids.batch_id,
-    )
-    raw_type = F.when(is_sub_row, F.col("_sub_type")).otherwise(F.col("_task_type"))
-    type_map = F.create_map(
-        *[F.lit(x) for kv in {**_RAW_TASK_RENAME, **_RAW_SUB_RENAME}.items() for x in kv]
-    )
-    return (
-        df.join(F.broadcast(inst_ids), "_ikey", "left")
-        .withColumn(
-            ids.batch_type,
-            F.when(F.col(ids.batch_id).isNotNull(), type_map[raw_type]),
-        )
-        .drop("_ikey", "_task_grp", "_task_type", "_sub_grp", "_sub_type")
     )
 
 
@@ -693,31 +620,26 @@ def discover_batches(log: DataFrame, config: Configuration,
         df = df.withColumn("_sub_grp", F.lit(None).cast("string")).withColumn(
             "_sub_type", F.lit(None).cast("string")
         )
-    # Every repair pass below joins the frame against aggregates derived
-    # FROM that same frame (a lineage diamond), and downstream consumers
-    # (WT decomposition, reporting) fork it several more times. Plain
-    # persist() caches the DATA but Catalyst still re-analyzes the full
-    # logical plan — two detection window stacks — at every fork, which
-    # dominates wall-clock once the plan is this deep.
-    # A checkpoint barrier truncates the lineage so each fork starts
+    # Two barriers: one after detection, one at the output.
+    # The repairs fork the detection frame (the mixed-type aggregate and
+    # the labeling table are each derived from it and joined back onto
+    # it), and Catalyst would re-analyze both detection window stacks at
+    # every fork. The barrier truncates the lineage so each fork starts
     # from a flat cached scan (SPARK_GRAFT_CHECKPOINT=reliable makes it
     # durable on a real cluster; the plan-truncation effect is the same).
-    df, mid1 = checkpoint_tracked(df)
+    # On the loan_batched seed-1 input with the bench's session settings,
+    # discovery took 4.8 s without it instead of 2.2-2.6 s.
+    df, mid = checkpoint_tracked(df)
     df = _split_mixed_type_subprocess(df)
     # Resource split (discovery.py:84-114) is a no-op here: both detectors
     # already partition by resource, so an instance can never span two.
-    df = _split_wrong_enabled_both(df, ids)
-    # Same reasoning: min-size (2 forks) + unify (2 forks + a count
-    # action) all branch off the post-split frame.
-    df, mid2 = checkpoint_tracked(df)
-    df = _min_size_filter(df, ids, config.min_batch_instance_size)
     # Consumers (features table, WT decomposition, reporting) fork the
     # returned frame up to 5 ways; without truncation each fork re-runs
-    # min-size + unify (agg + join-back) from the checkpoint above.
-    # Eager checkpoint = one execution — the same work a single consumer
-    # would trigger anyway — so multi-fork callers get it 1× not 5×.
-    out = data_barrier(_unify(df, ids), eager=True)
-    # The two intermediates above exist only to serve THIS pipeline;
-    # once `out` is materialized nothing can reference them again.
-    release_checkpoints(out, mid1 | mid2)
+    # the repairs from the barrier above. Eager checkpoint = one
+    # execution — the same work a single consumer would trigger anyway —
+    # so multi-fork callers get it 1× not 5×.
+    out = data_barrier(_label_instances(df, ids, config.min_batch_instance_size), eager=True)
+    # The intermediate above exists only to serve THIS pipeline; once
+    # `out` is materialized nothing can reference it again.
+    release_checkpoints(out, mid)
     return out

@@ -1,88 +1,20 @@
-"""Core event-log kernels (SURVEY §2.4 A3-A5, §2.3 J1).
+"""Lifecycle-sweep kernel (SURVEY §2.5 W4): per-group processing vs
+waiting time from a merged enabled/start/end timeline.
 
-The reference computes per-group scalars inside Python loops over
-``groupby`` and writes them back with masked updates — O(#groups × N)
-re-scans (reference: utils.py:30-106, analysis.py:66-105). Here every
-kernel is a window aggregate: one shuffle on the partition key, values
-broadcast back to member rows with no join and no driver iteration.
+The reference walks each case's events in a Python loop (reference:
+utils.py:127-176); here the sweep is one explode and a window pass,
+JVM-side. Discovery and the waiting-time decomposition compute their
+per-case and per-instance aggregates inline; this module keeps only the
+sweep, which ``q38_interval_sweep`` runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import EventLogIDs
-
-
-def case_start(ids: EventLogIDs, *extra_keys: str) -> Column:
-    """Batch-case start = min start over (batch, case) (utils.py:69-78)."""
-    w = W.partitionBy(ids.batch_id, ids.case, *extra_keys)
-    return F.min(ids.start_time).over(w)
-
-
-def case_end(ids: EventLogIDs, *extra_keys: str) -> Column:
-    """Batch-case end = max end over (batch, case) (utils.py:81-90)."""
-    w = W.partitionBy(ids.batch_id, ids.case, *extra_keys)
-    return F.max(ids.end_time).over(w)
-
-
-def case_enabled(ids: EventLogIDs, case_start_col: str) -> Column:
-    """Batch-case enabled = min enabled among the rows that share the
-    case's min start (utils.py:93-106: argmin-row then min enabled).
-
-    Expects ``case_start_col`` already materialized (window-over-window
-    needs two projections).
-    """
-    w = W.partitionBy(ids.batch_id, ids.case)
-    return F.min(
-        F.when(F.col(ids.start_time) == F.col(case_start_col), F.col(ids.enabled_time))
-    ).over(w)
-
-
-def instance_start(ids: EventLogIDs) -> Column:
-    """Batch-instance start = min start over the instance (utils.py:30-39)."""
-    return F.min(ids.start_time).over(W.partitionBy(ids.batch_id))
-
-
-def instance_end(ids: EventLogIDs) -> Column:
-    """Batch-instance end = max end over the instance (utils.py:42-51)."""
-    return F.max(ids.end_time).over(W.partitionBy(ids.batch_id))
-
-
-def instance_enabled(ids: EventLogIDs, case_enabled_col: str) -> Column:
-    """Batch-instance enabled = max over cases of case-enabled
-    (utils.py:54-66) — the two-level nested aggregate A4."""
-    return F.max(F.col(case_enabled_col)).over(W.partitionBy(ids.batch_id))
-
-
-def argmin_row(partition_keys: list[str], order_cols: list) -> Column:
-    """row_number()==1 marker for the first row per group (A5) — the
-    scalable form of the reference's sort-then-iloc[0] idiom."""
-    w = W.partitionBy(*partition_keys).orderBy(*order_cols)
-    return F.row_number().over(w) == 1
-
-
-def sessionize(
-    df: DataFrame,
-    partition_keys: list[str],
-    order_cols: list[str],
-    new_group: Column,
-    out_col: str = "session_id",
-) -> DataFrame:
-    """Generic sessionization: running sum of boundary flags → group ids
-    within each partition (the W1 chaining primitive).
-
-    ``new_group`` must evaluate true on the first row of each group
-    (lag-based conditions are null there — wrap with coalesce/isNull).
-    """
-    w = (
-        W.partitionBy(*partition_keys)
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return df.withColumn(out_col, F.sum(new_group.cast("long")).over(w))
 
 
 def interval_sweep_pt_wt(

@@ -113,7 +113,6 @@ def workload_at_instants(
     enabled: str,
     end: str,
     case: str,
-    bucket: int | None = None,
 ) -> DataFrame:
     """#distinct cases a resource is busy with at each instant
     (reference: utils.py:179-196): count cases whose
@@ -133,7 +132,6 @@ def workload_at_instants(
         start="__rj_en",
         end="__rj_end",
         keys=[resource],
-        bucket=bucket,
     )
     return pairs.groupBy(resource, instant).agg(
         F.countDistinct("__rj_case").alias("workload")

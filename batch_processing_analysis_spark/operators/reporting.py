@@ -258,22 +258,6 @@ def mean_timedelta_ns(sum_us: int, n: int) -> int:
     return int(float(sum_us * 1000) / n)
 
 
-def format_timedelta_us(us: float | int | None) -> str:
-    """pandas.Timedelta-style rendering of a µs duration:
-    'D days HH:MM:SS[.ffffff]' (reference report format)."""
-    if us is None:
-        return "NaT"
-    total = int(round(us))
-    sign = "-" if total < 0 else ""
-    total = abs(total)
-    days, rem = divmod(total, 86_400_000_000)
-    hours, rem = divmod(rem, 3_600_000_000)
-    minutes, rem = divmod(rem, 60_000_000)
-    seconds, micros = divmod(rem, 1_000_000)
-    frac = f".{micros:06d}" if micros else ""
-    return f"{sign}{days} days {hours:02d}:{minutes:02d}:{seconds:02d}{frac}"
-
-
 def render_report(report_rows, config: Configuration) -> str:
     """Driver-side text renderer (reference layout, reporting.py:142-198;
     golden-diffed byte-for-byte against outputs/Production_Report.txt in

@@ -93,12 +93,12 @@ def test_analyze_frees_checkpoints_when_discovery_raises(spark, monkeypatch):
     def boom(*_args, **_kwargs):
         raise RuntimeError("injected discovery failure")
 
-    monkeypatch.setattr(discovery, "_min_size_filter", boom)
+    monkeypatch.setattr(discovery, "_label_instances", boom)
     log = _analysis_log(spark)
     before = _persistent_ids(spark)
     with pytest.raises(RuntimeError, match="injected discovery failure"):
         analyze(log)
-    # discovery's two eager intermediates existed when it raised
+    # discovery's detection barrier existed when it raised
     assert freed and freed[0]
     assert not (_persistent_ids(spark) - before)
 

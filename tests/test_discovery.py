@@ -253,3 +253,88 @@ def test_subsequence_mode_mined_requires_pattern_support(spark):
     g_mined2 = groups(discover_batches(log, Configuration(
         subsequence_mode="mined", subsequence_min_support=2)))
     assert pq in g_mined2.get(BatchType.parallel, set())
+
+
+# ---------------------------------------------------------------------------
+# Labeling: split index, min-size filter and ids evaluated together over
+# one (instance, case) table — the interactions between the three rules.
+# ---------------------------------------------------------------------------
+
+def _subprocess_xy_rows(cases, resource="r1"):
+    """Each case runs X then Y on ``resource`` at identical times, so the
+    [X, Y] envelopes chain into one Parallel subprocess instance and the
+    X rows also form one Parallel task chain."""
+    return [
+        row
+        for c in cases
+        for row in (
+            (c, "X", resource, ts(10), ts(10, 30), ts(9)),
+            (c, "Y", resource, ts(10, 30), ts(11), ts(9)),
+        )
+    ]
+
+
+def _x_only_rows(cases, resource="r1"):
+    # Same X execution as the subprocess cases, but the case's run on
+    # the resource is [X] alone: no envelope, task level only.
+    return [(c, "X", resource, ts(10), ts(10, 30), ts(9)) for c in cases]
+
+
+def test_small_subprocess_instance_leaves_rows_unbatched(spark):
+    # The [X, Y] instance has 2 cases < 3, so it goes; its rows are NOT
+    # demoted to the X task chain (c1, c2, c3: 3 cases, which would
+    # pass). With them out, the X chain outside subprocesses is c3 alone.
+    rows = _subprocess_xy_rows(["c1", "c2"]) + _x_only_rows(["c3"])
+    out = discover_batches(make_log(spark, rows),
+                           Configuration(min_batch_instance_size=3))
+    assert all(r[IDS.batch_id] is None for r in out.collect())
+
+
+def test_task_instance_size_counts_rows_outside_subprocesses(spark):
+    # The [X, Y] instance (c1-c3) survives; the X task chain spans
+    # c1-c5, but only c4 and c5 lie outside the subprocess instance:
+    # 2 cases < 3, so their rows stay unbatched.
+    rows = _subprocess_xy_rows(["c1", "c2", "c3"]) + _x_only_rows(["c4", "c5"])
+    out = discover_batches(make_log(spark, rows),
+                           Configuration(min_batch_instance_size=3))
+    assert groups(out) == {BatchType.parallel: {
+        frozenset({(c, a) for c in ["c1", "c2", "c3"] for a in ["X", "Y"]})}}
+
+
+def test_wrong_enabled_split_drops_small_later_part(spark):
+    # c3 is enabled after the instance's first start, so it splits off;
+    # the later part {c3} is under the min size and goes, the earlier
+    # part {c1, c2} stays a batch.
+    rows = [
+        ("c1", "A", "r1", ts(10), ts(10, 10), ts(9)),
+        ("c2", "A", "r1", ts(10, 10), ts(10, 20), ts(9, 30)),
+        ("c3", "A", "r1", ts(10, 20), ts(10, 30), ts(10, 5)),
+    ]
+    out = discover_batches(make_log(spark, rows), Configuration(min_batch_instance_size=2),
+                           detect_case_level=False)
+    assert groups(out) == {BatchType.task_sequential: {
+        frozenset({("c1", "A"), ("c2", "A")})}}
+    assert [r[IDS.batch_id] for r in out.collect() if r[IDS.case] == "c3"] == [None]
+
+
+def test_ids_dense_task_instances_before_subprocess_instances(spark):
+    # The subprocess instance lives on r1 and the task instances on r2
+    # and r3, so ordering by resource alone would number the subprocess
+    # first; the level comes first: task ids 1..2, subprocess id 3.
+    rows = []
+    for i, c in enumerate(["c1", "c2", "c3"]):
+        base = 10 + i  # back-to-back [X, Y] envelopes on r1
+        rows += [
+            (c, "X", "r1", ts(base), ts(base, 30), ts(9)),
+            (c, "Y", "r1", ts(base, 30), ts(base + 1), ts(9)),
+            (c, "B", "r2", ts(14, 10 * i), ts(14, 10 * i + 10), ts(9)),
+            (c, "C", "r3", ts(15), ts(15, 30), ts(9)),
+        ]
+    out = discover_batches(make_log(spark, rows), Configuration())
+    types = {r[IDS.batch_id]: r[IDS.batch_type]
+             for r in out.collect() if r[IDS.batch_id] is not None}
+    assert types == {
+        1: BatchType.task_sequential,  # B on r2
+        2: BatchType.parallel,  # C on r3
+        3: BatchType.case_sequential,  # [X, Y] on r1
+    }

@@ -1,5 +1,6 @@
-"""Bucketed vs broadcast point-in-interval join equivalence (J2;
-reference workload semantics: utils.py:179-196)."""
+"""Bucketed vs broadcast point-in-interval join equivalence, and the
+workload count against a pure-Python reference (J2; reference workload
+semantics: utils.py:179-196)."""
 
 from __future__ import annotations
 
@@ -65,20 +66,26 @@ def test_span_guard_routes_long_intervals(data):
     assert got == base
 
 
-def test_workload_both_strategies(data):
+def test_workload_counts_distinct_busy_cases(data):
     p, iv = data
     log = iv.select("res", F.col("s").alias("en_us"), F.col("e").alias("end_us"), "cid")
     pts = p.select("res", F.col("t").alias("instant")).distinct()
+    out = workload_at_instants(
+        log, pts, resource="res", instant="instant",
+        enabled="en_us", end="end_us", case="cid")
+    got = sorted(map(tuple, out.collect()))
 
-    def rows(bucket):
-        out = workload_at_instants(
-            log, pts, resource="res", instant="instant",
-            enabled="en_us", end="end_us", case="cid", bucket=bucket)
-        return sorted(map(tuple, out.collect()))
-
-    broadcast, bucketed = rows(None), rows(100)
-    assert broadcast == bucketed
-    assert broadcast  # non-degenerate
+    intervals = log.collect()
+    want = sorted(
+        (r["res"], r["instant"], n)
+        for r in pts.collect()
+        if (n := len({
+            i["cid"] for i in intervals
+            if i["res"] == r["res"] and i["en_us"] <= r["instant"] <= i["end_us"]
+        }))
+    )
+    assert got == want
+    assert want  # non-degenerate
 
 
 # ---------------------------------------------------------------------------

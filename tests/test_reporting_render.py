@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 from batch_processing_analysis_spark.config import Configuration
 from batch_processing_analysis_spark.operators.reporting import (
     OVERALL,
-    format_timedelta_us,
+    format_timedelta_ns,
     render_report,
 )
 from batch_processing_analysis_spark.sources.event_log import (
@@ -23,14 +23,14 @@ IDS = Configuration().log_ids
 
 def test_format_timedelta_pandas_style():
     # pandas renders Timedelta as 'D days HH:MM:SS[.ffffff]'
-    assert format_timedelta_us(0) == "0 days 00:00:00"
-    assert format_timedelta_us(1_000_000) == "0 days 00:00:01"
-    assert format_timedelta_us(86_400_000_000 + 3_661_000_123) == "1 days 01:01:01.000123"
-    assert format_timedelta_us(-5_000_000) == "-0 days 00:00:05"
-    assert format_timedelta_us(None) == "NaT"
+    assert format_timedelta_ns(0) == "0 days 00:00:00"
+    assert format_timedelta_ns(1_000_000_000) == "0 days 00:00:01"
+    assert format_timedelta_ns(86_400_000_000_000 + 3_661_000_123_000) == "1 days 01:01:01.000123"
+    assert format_timedelta_ns(-5_000_000_000) == "-0 days 00:00:05"
+    assert format_timedelta_ns(None) == "NaT"
     # reference report example magnitude: '8 days 03:42:45.918367'
-    us = ((8 * 24 + 3) * 3600 + 42 * 60 + 45) * 1_000_000 + 918_367
-    assert format_timedelta_us(us) == "8 days 03:42:45.918367"
+    ns = (((8 * 24 + 3) * 3600 + 42 * 60 + 45) * 1_000_000 + 918_367) * 1000
+    assert format_timedelta_ns(ns) == "8 days 03:42:45.918367"
 
 
 def test_render_report_layout():
