@@ -6,14 +6,14 @@ Two engine-grade rules, both enforced here:
   struct — schema inference over a 100 TB JSON column is a full extra
   scan, and silently widens types when dirty rows appear. Rows that
   don't parse yield NULL struct fields (tracked, not dropped).
-- **Stay in codegen**: ``from_json`` / ``get_json_object`` are JVM
-  expressions — no Python, no UDF; extraction composes with pushdown
-  (the JSON column prunes away if only extracted fields survive).
+- **Stay in codegen**: ``from_json`` is a JVM expression — no Python,
+  no UDF; extraction composes with pushdown (the JSON column prunes
+  away if only extracted fields survive).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,9 +23,3 @@ def parse_json_col(df: DataFrame, col: str = "props",
     """Typed parse of a JSON-string column: ``out`` is a struct with
     the declared fields; malformed rows parse to NULL fields."""
     return df.withColumn(out, F.from_json(F.col(col), schema))
-
-
-def json_field(col: str, path: str) -> Column:
-    """One-field extraction without declaring a schema —
-    ``get_json_object`` returns a string (cast at the call site)."""
-    return F.get_json_object(F.col(col), path)

@@ -1,6 +1,6 @@
 """Distributed linear algebra for embedding columns (M115 scale
-extension): integer-exact Gram/second-moment accumulation and the PCA
-whitening transform built on it.
+extension): integer-exact Gram/second-moment accumulation, the one
+distributed pass of PCA whitening.
 
 Published recipe: centering + whitening (x → Λ^(-1/2) Uᵀ (x − μ))
 improves isotropy of sentence/document embeddings and the behavior of
@@ -10,9 +10,7 @@ representations"; the classical PCA/ZCA whitening of Kessy et al.
 partial sums — the d×d second-moment matrix, the d column sums and the
 count are all map-side-combinable — after which the eigendecomposition
 is a driver-local numpy call on a d×d matrix (d = 64 here; even
-d = 4096 is a trivial local solve), and the transform itself is one
-Arrow-batched matmul per partition, the [[operators/similarity.py]]
-SRP/IVF kernel shape.
+d = 4096 is a trivial local solve).
 
 Exactness: embeddings are quantized through ``floor(v·Q + 0.5)``
 (the repo's JL/SRP convention — identical in Spark, numpy and DuckDB)
@@ -44,7 +42,7 @@ def gram_accumulate(emb: DataFrame, vec_col: str = "embedding",
     ``s = Σ_rows vq[i]·vq[j]`` over quantized components
     ``vq = floor(v·quant + 0.5)`` (int64), plus the first-moment rows
     ``(i, -1, Σ vq[i])`` and the count row ``(-1, -1, N)`` — everything
-    :func:`pca_whitener` needs to center AND decompose, in one pass.
+    a PCA whitener needs to center AND decompose, in one pass.
 
     Vectors are right-padded with zeros to the batch's max dimension;
     rows with a NULL vector are skipped (and excluded from N).
@@ -91,84 +89,3 @@ def gram_accumulate(emb: DataFrame, vec_col: str = "embedding",
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
     )
-
-
-def pca_whitener(gram_rows: list, quant: int = 1_000_000,
-                 k: int | None = None, eps: float = 1e-9):
-    """Driver-local solve (M115 pass 2): turn collected
-    :func:`gram_accumulate` rows into ``(mu, W)`` — the mean vector
-    and the d×k whitening matrix ``W = U_k Λ_k^(-1/2)`` so that
-    ``(x − mu) @ W`` has identity covariance on the top-k principal
-    components.
-
-    Covariance from integer sums (exact until the final float divide):
-    ``cov = (S/N − outer(m, m)) / quant²`` with ``m = colsum/N``.
-    Eigenvalues below ``eps`` are dropped (rank-deficient directions
-    cannot be whitened); components are sign-fixed (largest-|loading|
-    coordinate positive) so the decomposition is deterministic.
-    """
-    by = {(int(r["i"]), int(r["j"])): int(r["s"]) for r in gram_rows}
-    n = by.pop((-1, -1), 0)
-    if n <= 1:
-        raise ValueError(f"need at least 2 vectors, got {n}")
-    dim = 1 + max(i for i, _ in by)
-    colsum = np.array([by.pop((i, -1), 0) for i in range(dim)],
-                      dtype=np.float64)
-    S = np.zeros((dim, dim), dtype=np.float64)
-    for (i, j), s in by.items():
-        S[i, j] = s
-        S[j, i] = s
-    m = colsum / n
-    cov = (S / n - np.outer(m, m)) / (float(quant) ** 2)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1]
-    vals, vecs = vals[order], vecs[:, order]
-    keep = vals > eps
-    if k is not None:
-        keep[k:] = False
-    vals, vecs = vals[keep], vecs[:, keep]
-    flip = np.sign(vecs[np.abs(vecs).argmax(axis=0),
-                        np.arange(vecs.shape[1])])
-    vecs = vecs * flip
-    mu = m / float(quant)
-    W = vecs / np.sqrt(vals)
-    return mu, W
-
-
-def whiten_embeddings(emb: DataFrame, mu, W, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      out_col: str = "whitened") -> DataFrame:
-    """Apply the whitening transform (M115 pass 3): one float64
-    ``(X − mu) @ W`` matmul per Arrow batch — no shuffle, no state;
-    ``mu``/``W`` ride the closure as plain numpy (d·k doubles,
-    broadcast-sized by construction). Vectors are right-padded with
-    zeros to the transform's input dim; NULL vectors pass through as
-    NULL."""
-    mu = np.asarray(mu, dtype=np.float64)
-    W = np.asarray(W, dtype=np.float64)
-    dim, k = W.shape
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField(out_col, T.ArrayType(T.DoubleType())),
-    ])
-
-    def _apply(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            vs = pdf[vec_col]
-            ok = vs.notna().to_numpy()
-            out = np.empty(len(vs), dtype=object)
-            out[~ok] = None
-            if ok.any():
-                X = np.zeros((int(ok.sum()), dim), dtype=np.float64)
-                for r, v in enumerate(vs[ok]):
-                    w = np.asarray(v, dtype=np.float64)[:dim]
-                    X[r, : len(w)] = w
-                Y = (X - mu) @ W
-                for pos, row in zip(np.nonzero(ok)[0], Y):
-                    out[pos] = row
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(),
-                                out_col: out})
-
-    return emb.select(id_col, vec_col).mapInPandas(_apply, out_schema)

@@ -12,15 +12,10 @@ The design contract for image/audio/video at 100 TB:
   upstream if skewed) so one 4 GB video cannot straggle a task that
   also holds ten thousand thumbnails.
 
-Decode is a codec LADDER (r7-r9): PIL/soundfile when importable
-(every format), else the vendored pure-Python decoders — PNG
-(full spec-valid matrix), baseline+progressive JPEG, stdlib-wave
-RIFF PCM — so the decoded paths (``image_features``,
-``perceptual_hashes``, ``audio_fingerprints``) run UNSKIPPED in a
-codec-less container. Only formats no rung covers raise the
-``NotImplementedError`` install-hint gate; byte-level stand-in
-features (``binary_features``) remain for oracle-checkable plumbing
-demos.
+No codec runs here: byte-level stand-ins (``binary_features``,
+``sample_frames``, ``resize_payload``) and codec-free payload SimHash
+keep the plumbing oracle-checkable; ``REAL CODEC POINT`` comments mark
+where a real decoder slots in.
 """
 
 from __future__ import annotations
@@ -41,118 +36,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature_dim", T.IntegerType()),
     ]
 )
-
-
-def decode_image(payload: bytes) -> "object":
-    """Decode an image payload to an HxWx3 uint8 RGB array.
-
-    Codec ladder (VERDICT r6 stretch 8 + r7 task 6 + r8 task 6): PIL
-    when importable (every format), else the vendored pure-Python
-    decoders — PNG (operators/png_codec.py — stdlib zlib+struct, the
-    FULL spec-valid matrix: gray/RGB/palette/gray-alpha/RGBA at every
-    legal bit depth incl. 16-bit and sub-byte, Adam7 interlace,
-    CRC-checked) and JPEG (operators/jpeg_codec.py — T.81 sequential
-    huffman AND progressive SOF2 incl. successive approximation,
-    grayscale/YCbCr, any sampling, restart markers); tests run the
-    decoded ``mapInPandas`` path UNSKIPPED through both. Other
-    formats in a codec-less environment still raise
-    ``NotImplementedError`` with the install hint, and unsupported
-    JPEG subsets (arithmetic/lossless/hierarchical/12-bit) raise
-    ``ValueError`` naming the feature — loud gates, never a silent
-    fake decode. cv2.imdecode is the drop-in native alternative.
-    """
-    import io
-
-    import numpy as np
-
-    try:
-        from PIL import Image
-    except ImportError as e:  # codec-less container: vendored decoders
-        from .jpeg_codec import MAGIC as JPEG_MAGIC, decode_jpeg
-        from .png_codec import MAGIC, decode_png
-
-        if bytes(payload[:8]) == MAGIC:
-            h, w, rgb = decode_png(bytes(payload))
-        elif bytes(payload[:2]) == JPEG_MAGIC:
-            h, w, rgb = decode_jpeg(bytes(payload))
-        else:
-            raise NotImplementedError(
-                "image codec not available in this environment for "
-                "non-PNG/JPEG payloads (pip install Pillow to enable "
-                "decode_image for every format)"
-            ) from e
-        return np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-
-    return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-
-
-def decode_audio(payload: bytes) -> "object":
-    """Decode an audio payload to (samples float32, sample_rate).
-
-    Codec ladder like :func:`decode_image`: soundfile when importable
-    (every format), else stdlib ``wave`` for RIFF/WAVE PCM payloads
-    (8/16/32-bit integer PCM → float32 in [-1, 1)) — so the decoded
-    audio path also runs UNSKIPPED in a codec-less container. Non-WAV
-    payloads without soundfile raise ``NotImplementedError`` with the
-    install hint.
-
-    Channel contract (ADVICE r7): BOTH rungs return the FIRST channel
-    as a 1-D array — multichannel payloads decode to the same shape
-    regardless of which codec is installed (soundfile's native 2-D
-    (frames, channels) output is sliced to channel 0 to match the
-    stdlib rung).
-    """
-    import io
-
-    try:
-        import soundfile
-    except ImportError as e:
-        if bytes(payload[:4]) != b"RIFF":
-            raise NotImplementedError(
-                "audio codec not available in this environment for "
-                "non-WAV payloads (pip install soundfile to enable "
-                "decode_audio for every format)"
-            ) from e
-        import wave
-
-        import numpy as np
-
-        try:
-            with wave.open(io.BytesIO(bytes(payload))) as wf:
-                rate = wf.getframerate()
-                nch = wf.getnchannels()
-                width = wf.getsampwidth()
-                frames = wf.readframes(wf.getnframes())
-        except (wave.Error, EOFError) as werr:
-            # RIFF payloads stdlib wave can't parse (IEEE-float WAV,
-            # compressed formats, truncation) are exactly what
-            # soundfile WOULD decode — keep the ladder's contract: a
-            # loud install hint, not an opaque wave.Error from inside
-            # a mapInPandas task.
-            raise NotImplementedError(
-                f"stdlib wave cannot decode this RIFF payload ({werr}); "
-                f"pip install soundfile to enable decode_audio for "
-                f"non-PCM WAV formats"
-            ) from werr
-        if width == 2:
-            arr = np.frombuffer(frames, dtype="<i2").astype("float32")
-            arr /= 32768.0
-        elif width == 4:
-            arr = np.frombuffer(frames, dtype="<i4").astype("float32")
-            arr /= 2147483648.0
-        elif width == 1:  # WAV 8-bit is unsigned
-            arr = np.frombuffer(frames, dtype="u1").astype("float32")
-            arr = (arr - 128.0) / 128.0
-        else:
-            raise NotImplementedError(
-                f"unsupported WAV sample width {width} (soundfile "
-                f"handles it)")
-        return arr[::nch], rate
-
-    samples, rate = soundfile.read(io.BytesIO(payload), dtype="float32")
-    if getattr(samples, "ndim", 1) == 2:  # (frames, channels) → ch 0
-        samples = samples[:, 0]
-    return samples, rate
 
 
 def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -254,50 +137,6 @@ def resize_payload(media: DataFrame, factor: int = 4) -> DataFrame:
     return media.mapInPandas(_resize, RESIZE_SCHEMA)
 
 
-IMAGE_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("mean_pixel_milli", T.LongType()),
-    ]
-)
-
-
-def image_features(media: DataFrame) -> DataFrame:
-    """DECODED image features through the same Arrow ``mapInPandas``
-    plumbing as :func:`binary_features` — this is the stage that makes
-    :func:`decode_image` load-bearing: each payload is decoded to
-    pixels and summarized as (height, width, channels, mean pixel in
-    integer millis). Runs UNSKIPPED in codec-less environments on the
-    vendored PNG and baseline-JPEG decoders (tests/test_multimodal.py,
-    tests/test_jpeg_codec.py); other formats surface the
-    NotImplementedError install hint at task level, and the PIL-gated
-    test proves the every-format path where the library exists.
-    """
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs, ws, cs, means = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                arr = decode_image(bytes(payload))
-                ids.append(doc_id)
-                hs.append(arr.shape[0])
-                ws.append(arr.shape[1])
-                cs.append(arr.shape[2] if arr.ndim == 3 else 1)
-                # integer millis: quantize-then-sum, engine-reproducible
-                means.append(int(arr.sum()) * 1000 // arr.size)
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"),
-                 "height": pd.Series(hs, dtype="int32"),
-                 "width": pd.Series(ws, dtype="int32"),
-                 "channels": pd.Series(cs, dtype="int32"),
-                 "mean_pixel_milli": pd.Series(means, dtype="int64")}
-            )
-
-    return media.mapInPandas(_decode, IMAGE_FEATURE_SCHEMA)
-
-
 def as_binary_payloads(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """(doc_id, modality, payload binary) adapter — UTF-8 bytes of
@@ -333,7 +172,7 @@ def payload_simhash(media: DataFrame, id_col: str = "doc_id",
 
     This is the media-dedup primitive that needs NO decoder: re-encoded
     or resized variants won't collide (that needs perceptual hashing on
-    decoded pixels — slot it behind the decode stubs), but exact and
+    decoded pixels), but exact and
     near-exact blobs — truncated downloads, metadata-stripped copies,
     watermark-appended variants — share most byte grams and land within
     small Hamming distance. All expression work is JVM-side; one
@@ -364,206 +203,3 @@ def payload_neardup_pairs(media: DataFrame, id_col: str = "doc_id",
     sigs = payload_simhash(media, id_col, payload_col, bits)
     return simhash_pairs(sigs, id_col, bits, max_hamming=max_hamming,
                          max_bucket=max_bucket)
-
-
-def dhash_bits(img) -> int:
-    """64-bit difference hash (dHash — the classic perceptual hash:
-    Krawetz's "kind of like that" gradient variant, public algorithm)
-    over a decoded HxWx3 uint8 array, INTEGER-EXACT end to end so the
-    hash is bit-reproducible on any platform:
-
-    - luma = 77R + 150G + 29B per pixel (integer Rec.601 weights,
-      un-normalized — scaling by a constant cannot flip comparisons);
-    - the image partitions into an 8-row × 9-column grid by integer
-      boundaries (``i·H//8`` / ``j·W//9``); per-cell SUMS replace the
-      float block-mean resize;
-    - bit (row, j) = 1 iff mean(cell j) > mean(cell j+1), compared as
-      the exact cross-product ``S_l·n_r > S_r·n_l`` — no division.
-
-    Uniform brightness shifts cancel exactly in the comparison, so the
-    hash is invariant to them by construction (test-pinned). Images
-    smaller than the grid raise ``ValueError`` (no silent upscale)."""
-    import numpy as np
-
-    a = np.asarray(img)
-    h, w = a.shape[0], a.shape[1]
-    if h < 8 or w < 9:
-        raise ValueError(f"dhash needs at least 8x9 pixels, got {h}x{w}")
-    a64 = a.astype(np.int64)
-    luma = 77 * a64[:, :, 0] + 150 * a64[:, :, 1] + 29 * a64[:, :, 2]
-    rb = [i * h // 8 for i in range(9)]
-    cb = [j * w // 9 for j in range(10)]
-    bits = 0
-    for i in range(8):
-        rows = luma[rb[i]:rb[i + 1]]
-        sums = [int(rows[:, cb[j]:cb[j + 1]].sum()) for j in range(9)]
-        cnts = [(rb[i + 1] - rb[i]) * (cb[j + 1] - cb[j])
-                for j in range(9)]
-        for j in range(8):
-            if sums[j] * cnts[j + 1] > sums[j + 1] * cnts[j]:
-                bits |= 1 << (i * 8 + j)
-    return bits
-
-
-def perceptual_hashes(media: DataFrame, id_col: str = "doc_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """(id, dhash long) over DECODED payloads — the cross-codec
-    near-dup signature: the same picture saved as PNG and as JPEG
-    hashes to (nearly) the same 64 bits, which no byte-level signature
-    (M51 payload SimHash) can see. Decode runs through the
-    :func:`decode_image` codec ladder in the same Arrow ``mapInPandas``
-    shape as :func:`image_features`."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("dhash", T.LongType()),
-    ])
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = decode_image(bytes(payload))
-                ids.append(doc_id)
-                # two's-complement into a signed 64-bit column
-                v = dhash_bits(arr)
-                hashes.append(v - (1 << 64) if v >= (1 << 63) else v)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "dhash": pd.Series(hashes,
-                                                   dtype="int64")})
-
-    return media.select(id_col, payload_col).mapInPandas(_hash, schema)
-
-
-def _banded_neardup_pairs(sigs: DataFrame, max_hamming: int,
-                          max_bucket: int | None, id_col: str) -> DataFrame:
-    """Shared EXACT Hamming ≤ ``max_hamming`` pair core for the
-    perceptual (image) and energy-contour (audio) fingerprints:
-    ``sigs`` is (id, simhash long). The band count is the smallest
-    divisor of 64 that is ≥ max(2, max_hamming+1) — pigeonhole needs
-    only n_bands ≥ radius+1 for a proven candidate superset, and ≥2
-    keeps every band mask inside a signed 64-bit literal; candidates
-    verify with JVM-side ``bit_count(xor)`` through the SimHash
-    band/bucket/skew-guard machinery.
-
-    The skew cap must not silently void the exactness claim: at
-    max_hamming ≥ 4 a band carries ≤ 8 bits (≤ 256 bucket keys), so a
-    fixed cap on a corpus much larger than cap·keyspace would drop
-    essentially EVERY bucket and quietly miss pairs. ``max_bucket``
-    therefore auto-scales when None (4× the uniform per-bucket load,
-    floor 1000 — real skew still drops, a merely-big corpus doesn't),
-    and an explicit cap below half the uniform load REFUSES loudly
-    (the caller's cap would structurally drop the median bucket, which
-    is a mis-sizing, not skew). Either path costs one count() of
-    ``sigs`` before the pair join — the house guard-before-join
-    discipline (decode runs once more; pre-persist ``sigs`` upstream
-    if the decode pass dominates)."""
-    from .dedup import simhash_pairs
-
-    if not 0 <= max_hamming <= 63:
-        raise ValueError(
-            f"max_hamming {max_hamming} outside [0, 63] — the exact "
-            f"pigeonhole guarantee needs a clean band inside the 64 "
-            f"signature bits")
-    n_bands = next(d for d in (2, 4, 8, 16, 32, 64)
-                   if d >= max(2, max_hamming + 1))
-    band_bits = 64 // n_bands
-    key_space = 1 << min(band_bits, 62)
-    n_rows = sigs.count()
-    uniform = n_rows / key_space
-    if max_bucket is None:
-        max_bucket = max(1000, int(4 * uniform) + 1)
-    elif max_bucket < uniform / 2:
-        raise ValueError(
-            f"max_bucket {max_bucket} is below half the uniform "
-            f"per-bucket load ({uniform:.0f} = {n_rows} rows / "
-            f"{key_space} keys per {band_bits}-bit band) — the cap "
-            f"would drop the median bucket and silently void the "
-            f"exact Hamming<={max_hamming} claim; raise max_bucket "
-            f"(>= {int(4 * uniform) + 1} for the 4x-uniform default) "
-            f"or pass max_bucket=None to auto-scale")
-    return simhash_pairs(sigs, id_col=id_col, bits=64,
-                         band_bits=band_bits,
-                         max_hamming=max_hamming, max_bucket=max_bucket)
-
-
-def perceptual_neardup_pairs(media: DataFrame, max_hamming: int = 3,
-                             max_bucket: int | None = None,
-                             id_col: str = "doc_id",
-                             payload_col: str = "payload") -> DataFrame:
-    """EXACT Hamming ≤ ``max_hamming`` image near-dup pairs over
-    decoded-pixel dHashes (the M111/M114 exactness discipline applied
-    to perceptual hashing; banding/verify contract in
-    :func:`_banded_neardup_pairs`)."""
-    sigs = perceptual_hashes(media, id_col, payload_col).select(
-        F.col(id_col), F.col("dhash").alias("simhash"))
-    return _banded_neardup_pairs(sigs, max_hamming, max_bucket, id_col)
-
-
-def audio_energy_hash(samples) -> int:
-    """64-bit energy-contour fingerprint over decoded audio samples —
-    the audio sibling of :func:`dhash_bits`, same discipline: INTEGER
-    arithmetic end to end so the hash is bit-reproducible.
-
-    The float32 samples (``decode_audio``'s normalized output — exact
-    for integer-PCM sources, which divide by a power of two) re-
-    quantize to integers at 2^15; the clip partitions into 65 frames
-    by integer boundaries; frame ENERGY = Σ q² (exact int64); bit i =
-    1 iff mean-energy(frame i) > mean-energy(frame i+1), compared as
-    the exact cross-product — no division. Gain changes by a power of
-    two are EXACTLY invariant (float scaling by 2^k is lossless and
-    the comparison cancels it); arbitrary gains and bit-depth changes
-    are approximately invariant (energy ratios are preserved up to
-    quantization noise). Clips shorter than 65 samples raise."""
-    import numpy as np
-
-    s = np.asarray(samples, dtype=np.float64)
-    n = s.shape[0]
-    if n < 65:
-        raise ValueError(f"audio energy hash needs >= 65 samples, got {n}")
-    q = np.floor(s * 32768.0 + 0.5).astype(np.int64)
-    fb = [i * n // 65 for i in range(66)]
-    energies = [int((q[fb[i]:fb[i + 1]] ** 2).sum()) for i in range(65)]
-    counts = [fb[i + 1] - fb[i] for i in range(65)]
-    bits = 0
-    for i in range(64):
-        if energies[i] * counts[i + 1] > energies[i + 1] * counts[i]:
-            bits |= 1 << i
-    return bits
-
-
-def audio_fingerprints(media: DataFrame, id_col: str = "doc_id",
-                       payload_col: str = "payload") -> DataFrame:
-    """(id, ahash long) over DECODED audio payloads through the
-    :func:`decode_audio` codec ladder — same Arrow ``mapInPandas``
-    shape as :func:`perceptual_hashes`."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("ahash", T.LongType()),
-    ])
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr, _rate = decode_audio(bytes(payload))
-                ids.append(doc_id)
-                v = audio_energy_hash(arr)
-                hashes.append(v - (1 << 64) if v >= (1 << 63) else v)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "ahash": pd.Series(hashes,
-                                                   dtype="int64")})
-
-    return media.select(id_col, payload_col).mapInPandas(_hash, schema)
-
-
-def audio_neardup_pairs(media: DataFrame, max_hamming: int = 3,
-                        max_bucket: int | None = None,
-                        id_col: str = "doc_id",
-                        payload_col: str = "payload") -> DataFrame:
-    """EXACT Hamming ≤ ``max_hamming`` audio near-dup pairs over
-    energy-contour fingerprints — identical banding/verify contract
-    to :func:`perceptual_neardup_pairs`
-    (:func:`_banded_neardup_pairs`)."""
-    sigs = audio_fingerprints(media, id_col, payload_col).select(
-        F.col(id_col), F.col("ahash").alias("simhash"))
-    return _banded_neardup_pairs(sigs, max_hamming, max_bucket, id_col)

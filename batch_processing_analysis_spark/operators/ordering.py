@@ -116,47 +116,10 @@ def quality_buckets(scored: DataFrame, n_buckets: int = 10,
     while groups fit a partition's spill budget (languages, sources).
     For quantile-binning a single 100 TB group, precompute boundary
     values (e.g. from yesterday's profile or an approx-quantile pass)
-    and use :func:`bucket_by_bounds` — a pure narrow map, no sort.
+    and bin by them — a pure narrow map, no sort.
     """
     w = W.partitionBy(group_col).orderBy(score_col, id_col)
     return scored.withColumn("bucket", F.ntile(n_buckets).over(w))
-
-
-def bucket_by_bounds(scored: DataFrame, bounds: list[float],
-                     score_col: str = "quality_score") -> DataFrame:
-    """Bucket by PRECOMPUTED ascending boundary values: bucket i
-    (1-based) holds rows with ``bounds[i-2] <= score < bounds[i-1]``
-    (first bucket unbounded below, last unbounded above). The scale
-    twin of :func:`quality_buckets`: a branchless narrow expression —
-    no shuffle, no sort, boundaries are plan literals.
-    """
-    if not bounds:
-        raise ValueError("bounds must be non-empty")
-    expr = F.lit(1)
-    for b in bounds:
-        expr = expr + F.when(F.col(score_col) >= F.lit(b), 1).otherwise(0)
-    return scored.withColumn("bucket", expr)
-
-
-def quantile_bounds(scored: DataFrame, n_buckets: int = 10,
-                    score_col: str = "quality_score",
-                    relative_error: float = 0.001) -> list[float]:
-    """Boundary values for :func:`bucket_by_bounds` from a
-    Greenwald–Khanna approximate-quantile pass
-    (``approxQuantile``, the Spark built-in sketch): the interior
-    (i/n)-quantiles of ``score_col``.
-
-    This is the documented 100 TB feeder for equal-population
-    bucketing WITHOUT a per-group sort: one sketch pass (driver gets
-    n−1 doubles), then the branchless narrow map. Approximate where
-    ntile is exact — populations are equal to within the sketch's
-    ``relative_error``; determinism depends on the input partitioning,
-    so pin boundaries (persist them) when reproducibility matters —
-    the bounds being DATA, not plan logic, is exactly what makes that
-    possible.
-    """
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    return scored.approxQuantile(score_col, probs, relative_error)
 
 
 def assign_splits(df: DataFrame, fractions: dict[str, float],
@@ -653,74 +616,6 @@ def rrf_fuse(df: DataFrame, signals: list[tuple[str, str]],
               .limit(top_k)
 
 
-def ngram_contamination(docs: DataFrame, fractions: dict[str, float],
-                        seed: str, eval_label: str = "eval",
-                        id_col: str = "doc_id", text_col: str = "text",
-                        source_col: str = "source",
-                        k: int = 8) -> DataFrame:
-    """Eval-set n-gram contamination audit (M114): for every NON-eval
-    document, does it share ANY ``k``-token shingle with ANY eval
-    document? The published decontamination procedure (GPT-3 App. C,
-    Brown et al. 2020 — 13-gram collision; PaLM and Llama use the same
-    shape) — and deliberately NOT :func:`split_leakage_audit` (M101),
-    which only surfaces near-duplicate PAIRS: a single eval sentence
-    quoted inside a long training document has near-zero Jaccard, so
-    the pair audit misses it, while one shared shingle flags it here.
-
-    Per source (of the non-eval side): ``n_train`` (all non-eval docs,
-    including those too short to shingle), ``n_contaminated`` (docs
-    with ≥1 shared shingle), ``contaminated_micro``
-    (``⌊n_contaminated·10⁶/n_train⌋``), ``max_hits`` (the largest
-    number of distinct shared shingles in a single doc — the "is it a
-    full copy or one quote" severity signal).
-
-    Split assignment is :func:`assign_splits` on the RAW doc id (no
-    group key — the audit must measure what the split actually did,
-    not what a grouped split intended). Shingles are case-folded,
-    hashed to 60 bits ([[operators/dedup.py]] ``hash60`` — collisions
-    mirrored exactly in the oracle twin).
-
-    Scale: the eval shingle set is ``distinct`` over the eval slice
-    only (one hash-agg); the hit join is an equi-join of train shingle
-    ROWS against that distinct set, so its output is bounded by the
-    train shingle-row count even on a pathological boilerplate shingle
-    (the eval side is distinct — fan-out ≤ 1 per train row). No
-    all-pairs stage, no array materialization; the final rollup is
-    |sources|-sized.
-    """
-    from .dedup import shingle_rows
-
-    lab = assign_splits(
-        docs.select(id_col, source_col), fractions, seed,
-        id_col=id_col, group_col=None,
-    ).select(id_col, source_col, (F.col("split") == eval_label)
-             .alias("_is_eval"))
-    sh = shingle_rows(
-        docs.select(F.col(id_col), F.lower(F.col(text_col))
-                    .alias(text_col)),
-        id_col, text_col, k,
-    ).select(F.col(id_col), hash60(F.col("shingle")).alias("_tk"))
-    ev = (sh.join(lab.filter("_is_eval").select(id_col), id_col)
-          .select("_tk").distinct())
-    hits = (
-        sh.join(lab.filter(~F.col("_is_eval")).select(id_col), id_col)
-        .join(ev, "_tk")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_nh"))
-    )
-    train = lab.filter(~F.col("_is_eval")).join(hits, id_col, "left")
-    n_tr = F.count(F.lit(1))
-    n_ct = F.sum((F.col("_nh").isNotNull()).cast("long"))
-    return train.groupBy(source_col).agg(
-        n_tr.alias("n_train"),
-        n_ct.alias("n_contaminated"),
-        F.floor(n_ct * F.lit(1_000_000) / n_tr).cast("long")
-        .alias("contaminated_micro"),
-        F.max(F.coalesce(F.col("_nh"), F.lit(0))).cast("long")
-        .alias("max_hits"),
-    )
-
-
 def weighted_median_by_group(df: DataFrame, group_col: str = "source",
                              value_col: str = "n_chars",
                              weight_col: str | None = None) -> DataFrame:
@@ -766,60 +661,3 @@ def weighted_median_by_group(df: DataFrame, group_col: str = "source",
                 F.col("total_weight").cast("long"),
                 F.col("wmedian").cast("long"))
     )
-
-
-def greedy_coverage_select(docs: DataFrame, k: int,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> list[dict]:
-    """Greedy maximum-coverage document selection (M132): pick ``k``
-    documents one at a time, each maximizing the count of distinct
-    word tokens NOT yet covered by the picks so far (ties → smallest
-    id) — the classic greedy for submodular coverage with the
-    (1 − 1/e) approximation guarantee (Nemhauser, Wolsey & Fisher
-    1978, public), the "small diverse seed set" selection a curriculum
-    or eval-set builder runs.
-
-    Iterative BY NATURE (each pick changes every marginal gain), so
-    this is a driver-coordinated loop like M68 PageRank:
-    ``k`` rounds, each ONE distributed anti-join + count + a 1-row
-    argmax collect; the covered set lives as a (token-hash) DataFrame,
-    checkpointed per round to cut lineage. Never materializes doc
-    token sets on the driver. Returns a list of
-    ``{rank, doc_id, gain, covered_total}`` dicts (driver-sized: k
-    rows).
-
-    Scale: each round shuffles (doc, token) rows minus the covered
-    semi-join — k·O(corpus tokens) total, k small by construction
-    (this selects a SEED set, not a corpus).
-    """
-    from .dedup import hash60, tokens as _tokens
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    toks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(_tokens(F.lower(F.col(text_col)))).alias("_t"),
-    ).select("_id", hash60(F.col("_t")).alias("_h")).distinct() \
-        .localCheckpoint(eager=True)
-    covered = toks.sparkSession.createDataFrame([], "_h long")
-    picks: list[dict] = []
-    total = 0
-    for rank in range(1, k + 1):
-        gains = (
-            toks.join(covered, "_h", "left_anti")
-            .groupBy("_id").agg(F.count(F.lit(1)).alias("_gain"))
-            .orderBy(F.col("_gain").desc(), "_id")
-            .limit(1)
-            .collect()
-        )
-        if not gains or gains[0]["_gain"] == 0:
-            break
-        row = gains[0]
-        total += int(row["_gain"])
-        picks.append({"rank": rank, "doc_id": row["_id"],
-                      "gain": int(row["_gain"]),
-                      "covered_total": total})
-        covered = covered.unionByName(
-            toks.filter(F.col("_id") == row["_id"]).select("_h")
-        ).distinct().localCheckpoint(eager=True)
-    return picks

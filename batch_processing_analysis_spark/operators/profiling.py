@@ -82,40 +82,6 @@ def profile_columns(df: DataFrame, columns: list[str]) -> DataFrame:
     )
 
 
-def profile_columns_approx(df: DataFrame, columns: list[str],
-                           rsd: float = 0.05) -> DataFrame:
-    """The sketch-path twin of :func:`profile_columns` for corpora
-    where exact per-column distinct counts are themselves a heavy
-    shuffle: HyperLogLog++ ``approx_count_distinct`` (relative error
-    ``rsd``) per column in ONE aggregate over the melted rows — no
-    (col, value) intermediate at all, so the census costs one pass and
-    one tiny shuffle regardless of value cardinality.
-
-    Returns ``(col_name, n_rows, n_nulls, approx_distinct)`` — the
-    modal value needs the exact value counts and is deliberately
-    absent here (top-k at scale = count-min/heavy-hitter territory;
-    the exact path serves it).
-    """
-    melted = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col_name"),
-                        F.col(c).cast("string").alias("value"),
-                    )
-                    for c in columns
-                ]
-            )
-        ).alias("_kv")
-    ).select("_kv.col_name", "_kv.value")
-    return melted.groupBy("col_name").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        (F.count(F.lit(1)) - F.count("value")).alias("n_nulls"),
-        F.approx_count_distinct("value", rsd).alias("approx_distinct"),
-    )
-
-
 def profile_drift(old_profile: DataFrame,
                   new_profile: DataFrame) -> DataFrame:
     """Data-quality drift report between two :func:`profile_columns`

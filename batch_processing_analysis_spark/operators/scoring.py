@@ -1,23 +1,13 @@
 """Batched linear text-classifier inference (M136): the fastText-style
 hashed bag-of-words linear scorer every corpus-quality pipeline runs at
 scale (Joulin et al. 2017 "Bag of tricks" — hashing trick from
-Weinberger et al. 2009; both public), expressed TWICE:
-
-- :func:`linear_scores` — the inference SHAPE for real model weights:
-  one Arrow-batched ``mapInPandas`` kernel, weights broadcast to every
-  worker once (a plain Python dict in the closure — at real scale, a
-  ``SparkContext.broadcast`` blob), a per-batch fold over the Arrow
-  batch. This is the plumbing a torch/onnx scorer drops into: swap
-  the kernel body (a real model runs one vectorized forward pass per
-  batch), keep the schema/batching/broadcast contract.
-- :func:`linear_scores_relational` — the same model as pure relational
-  algebra (explode tokens → join the weight table → sum), the twin
-  that (a) proves the kernel right (equality-tested) and (b) IS the
-  better plan when the model fits a broadcast join.
+Weinberger et al. 2009; both public), as pure relational algebra:
+:func:`linear_scores_relational` explodes tokens, joins the weight table
+and sums — the better plan when the model fits a broadcast join.
 
 Determinism: per-token contributions are integer micros
-(``w_micro · token_count`` — exact in any order and identical in both
-forms); the logit is the exact integer sum plus the bias, and the only
+(``w_micro · token_count`` — exact in any order and identical in any
+plan); the logit is the exact integer sum plus the bias, and the only
 float op is the final sigmoid on the quantized logit.
 
 Weights here are md5-seeded demo values (``seeded_weights``) so tests
@@ -31,7 +21,6 @@ import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .dedup import tokens
 
@@ -48,76 +37,13 @@ def seeded_weights(vocab: list[str], seed: str = "linear:0") -> dict[str, int]:
     return {t: _w_micro(t, seed) for t in vocab}
 
 
-def linear_scores(docs: DataFrame, weights: dict[str, int],
-                  bias_micro: int = 0, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Arrow-batched linear scorer: ``logit_micro = bias +
-    Σ_tokens w_micro(t)·count(t)`` (OOV tokens weight 0), ``score_micro``
-    = floor(sigmoid(logit_micro/1e6)·1e6 + 0.5) (integer micros — the
-    driver-safe output convention).
-
-    Returns ``(id, n_tokens, logit_micro, score_micro)``.
-
-    Scale: NO shuffle — one narrow mapInPandas pass; the weight dict
-    rides the task closure (broadcast once per executor). Batch work
-    is a dict-lookup fold per document — swap in a real model's
-    forward pass here without touching the plan.
-
-    Tokenization contract (ADVICE r6): the kernel splits with
-    ``re.split(r"\\s+", ..., flags=re.ASCII)`` — the exact character
-    class of Java regex ``\\s`` that :func:`dedup.tokens` uses — NOT
-    ``str.split()``, whose Unicode whitespace (NBSP, ideographic
-    space, …) would silently diverge from the relational twin. Tokens
-    containing non-ASCII whitespace therefore stay single tokens in
-    BOTH paths (pinned by tests/test_scoring_parity.py). Case-folding
-    uses Python ``str.lower()`` vs JVM ``lower()`` — identical on the
-    overwhelming Unicode majority; locale-sensitive corner cases
-    (e.g. Turkish dotted I) are out of contract.
-    """
-    import math
-    import re
-
-    ws = re.compile(r"\s+", flags=re.ASCII)
-
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("logit_micro", T.LongType()),
-        T.StructField("score_micro", T.LongType()),
-    ])
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, nt, lg, sc = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = [x for x in ws.split((t or "").lower()) if x]
-                logit = bias_micro
-                for tok in toks:
-                    logit += weights.get(tok, 0)
-                ids.append(int(i))
-                nt.append(len(toks))
-                lg.append(logit)
-                sc.append(math.floor(
-                    1e6 / (1.0 + math.exp(-logit / 1e6)) + 0.5))
-            yield pd.DataFrame({
-                id_col: ids, "n_tokens": nt,
-                "logit_micro": pd.array(lg, dtype="Int64"),
-                "score_micro": pd.array(sc, dtype="Int64"),
-            })
-
-    return docs.select(id_col, text_col).mapInPandas(kernel, out_schema)
-
-
 def linear_scores_relational(docs: DataFrame, weights: dict[str, int],
                              bias_micro: int = 0,
                              id_col: str = "doc_id",
                              text_col: str = "text") -> DataFrame:
-    """The same model as relational algebra: explode tokens, broadcast-
-    join the weight table, integer-sum per doc. Bit-identical to
-    :func:`linear_scores` (equality-tested) — and the better plan when
-    the model is broadcast-sized, since everything stays in codegen."""
+    """The linear model as relational algebra: explode tokens, broadcast-
+    join the weight table, integer-sum per doc. Everything stays in
+    codegen while the model is broadcast-sized."""
     spark = docs.sparkSession
     wdf = spark.createDataFrame(
         [(t, w) for t, w in weights.items()], "_t string, _w long"
@@ -149,4 +75,4 @@ def linear_scores_relational(docs: DataFrame, weights: dict[str, int],
     )
 
 
-__all__ = ["seeded_weights", "linear_scores", "linear_scores_relational"]
+__all__ = ["seeded_weights", "linear_scores_relational"]

@@ -14,10 +14,7 @@ table:
   subsample (every ``stride``-th vector) so results are reproducible
   and oracle-checkable; swapping in k-means centroids changes recall,
   not the plan shape.
-- **embedding near-dup pairs, exact**: all pairs above a cosine
-  threshold via an O(n²) self-join — the SMALL-CORPUS baseline and
-  oracle twin only; never run this at corpus scale.
-- **embedding near-dup pairs, hyperplane LSH (SRP)**: the scale path.
+- **embedding near-dup pairs, hyperplane LSH (SRP)**:
   Sign-of-dot-product against P seeded random hyperplanes (Charikar
   2002 signed random projections) gives a P-bit signature whose bit
   agreement estimates 1 − θ/π; banding the signature (reusing the
@@ -351,35 +348,6 @@ def _ivf_assign_matmul(corpus: DataFrame, centroids: DataFrame,
     )
 
 
-def kmeans_centroids(corpus: DataFrame, n_clusters: int, seed: int = 42,
-                     max_iter: int = 20, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """Seeded k-means|| centroids (pyspark.ml) as an IVF centroid table
-    (centroid_id, vec). Recall-stronger than the deterministic-stride
-    subsample on clustered data (the stride picks arbitrary points; the
-    fit picks density modes) at the cost of one training job. Same
-    plan shape downstream — only the centroid TABLE changes.
-
-    Seeded ⇒ reproducible on a fixed layout, but float reduction order
-    can vary across cluster topologies — so this feeds the recall-
-    graded path, while the stride variant stays the oracle-checkable
-    default (q46).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = _as_double(corpus, vec_col).select(
-        array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=n_clusters, seed=seed, maxIter=max_iter).fit(vecs)
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        f"centroid_id long, {vec_col} array<double>",
-    )
-    return cents
-
-
 def _resolve_centroids(corpus: DataFrame, centroids: DataFrame | None,
                        stride: int, id_col: str,
                        vec_col: str) -> DataFrame:
@@ -417,8 +385,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     ``centroids=None`` takes every ``stride``-th corpus vector —
     deterministic, engine-portable, the oracle-checked default (q46).
-    Pass :func:`kmeans_centroids` output for the recall-stronger
-    trained variant; the plan shape is identical either way.
+    A trained (k-means) centroid table with the same schema drops in
+    for better recall; the plan shape is identical either way.
 
     Same output schema as :func:`brute_force_topk`; recall < 1 by
     construction (that is the accuracy/cost dial).
@@ -428,17 +396,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     centroids = _resolve_centroids(corpus, centroids, stride, id_col,
                                    vec_col)
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    return _ivf_probe(assigned, centroids, queries, k, nprobe, id_col,
-                      vec_col)
-
-
-def _ivf_probe(assigned: DataFrame, centroids: DataFrame,
-               queries: DataFrame, k: int, nprobe: int, id_col: str,
-               vec_col: str) -> DataFrame:
-    """Probe stage shared by :func:`ivf_topk` (inline assignment) and
-    :func:`ivf_topk_from_index` (published assignment): per query the
-    ``nprobe`` nearest centroids, exact cosine within probed buckets,
-    top-k. ``assigned`` carries (id, vec, centroid_id)."""
     # per query: nprobe nearest centroids
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     qc = q.join(F.broadcast(centroids.withColumnRenamed(vec_col, "_centv"))).select(
@@ -464,72 +421,6 @@ def _ivf_probe(assigned: DataFrame, centroids: DataFrame,
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
     )
-
-
-def publish_ivf_index(spark, corpus: DataFrame, table_prefix: str,
-                      stride: int = 50,
-                      centroids: DataFrame | None = None,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      num_buckets: int = 16,
-                      path_root: str | None = None) -> None:
-    """Persist the IVF index state (M150 — VERDICT r7 stretch 8) so
-    repeated top-k probes skip the assignment pass entirely: the
-    N·K nearest-centroid scoring — the dominant cost of
-    :func:`ivf_topk`, paid per CALL there — runs once at publish time,
-    the M131/M146 pattern applied to ANN. Two tables:
-
-    - ``{prefix}_centroids`` (centroid_id, vec): the (broadcast-sized)
-      centroid table, exactly as the inline path would derive it —
-      every ``stride``-th corpus vector, or a caller-supplied table
-      (e.g. :func:`kmeans_centroids`).
-    - ``{prefix}_assigned`` (id, vec, centroid_id) BUCKETED by
-      ``centroid_id``: the full assignment. Probe joins broadcast the
-      tiny probe list, so bucketing is not about the probe Exchange —
-      it pre-clusters each inverted list's rows so bucket-local scans
-      and any centroid-keyed aggregation (bucket-size maintenance,
-      re-balance audits) plan exchange-free.
-
-    Probes against the published index return BIT-IDENTICAL rows to
-    the inline operator with the same centroids (pinned by
-    tests/test_similarity_srp.py) — publishing moves work, never
-    answers.
-    """
-    from ..sources.bucketed import write_bucketed
-
-    corpus = _as_double(corpus, vec_col)
-    centroids = _resolve_centroids(corpus, centroids, stride, id_col,
-                                   vec_col)
-    cent_name = f"{table_prefix}_centroids"
-    w = centroids.write.mode("overwrite").format("parquet")
-    if path_root:
-        w = w.option("path", f"{path_root}/{cent_name}")
-    w.saveAsTable(cent_name)
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    write_bucketed(
-        assigned, f"{table_prefix}_assigned", "centroid_id",
-        num_buckets,
-        path=(f"{path_root}/{table_prefix}_assigned" if path_root
-              else None))
-
-
-def ivf_topk_from_index(spark, queries: DataFrame, table_prefix: str,
-                        k: int = 5, nprobe: int = 3,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """IVF top-k against a :func:`publish_ivf_index` index: identical
-    output to :func:`ivf_topk` with the same centroids, but the plan
-    contains NO assignment stage — the corpus side is one scan of the
-    published inverted lists (relative plan assertion in
-    tests/test_similarity_srp.py). This is the repeated-probe shape a
-    serving/eval loop runs: publish once per corpus refresh, probe per
-    query batch."""
-    from ..sources.bucketed import load_bucketed
-
-    centroids = spark.table(f"{table_prefix}_centroids")
-    assigned = load_bucketed(spark, f"{table_prefix}_assigned")
-    return _ivf_probe(assigned, centroids, _as_double(queries, vec_col),
-                      k, nprobe, id_col, vec_col)
 
 
 def hyperplanes(num_bits: int, dim: int, seed: str = "srp") -> list[list[float]]:
@@ -679,7 +570,7 @@ def srp_neardup_pairs(corpus: DataFrame, threshold: float,
                       vec_col: str = "embedding",
                       strategy: str = "matmul") -> DataFrame:
     """Near-dup pairs (exact cosine ≥ threshold) with SRP-LSH candidate
-    generation — the scale-safe replacement for :func:`neardup_pairs`.
+    generation — no O(n²) self-join.
 
     Pipeline: signatures → band explode (``num_bits/band_bits`` bands)
     → bucket self-join on (band, band-key) with the ``max_bucket`` skew
@@ -756,23 +647,6 @@ def srp_neardup_pairs(corpus: DataFrame, threshold: float,
     )
 
 
-def neardup_pairs(corpus: DataFrame, threshold: float,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """All vector pairs with cosine ≥ threshold (exact, id_a < id_b).
-
-    O(n²) self-join — small-corpus baseline / oracle twin ONLY. The
-    registered query path is :func:`srp_neardup_pairs`."""
-    corpus = _as_double(corpus, vec_col)
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("_va"), F.col("_vb")).alias("sim"))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
-
-
 def semantic_dedup_pairs(corpus: DataFrame, threshold: float = 0.9,
                          stride: int = 50, max_cluster: int = 1000,
                          id_col: str = "vec_id", vec_col: str = "embedding",
@@ -786,8 +660,8 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float = 0.9,
 
     ``centroids=None`` uses the deterministic stride subsample (the
     engine-portable, oracle-checked default, as in :func:`ivf_topk`);
-    pass :func:`kmeans_centroids` output for the recall-stronger
-    trained variant — identical plan shape either way.
+    a trained (k-means) centroid table with the same schema drops in
+    for better recall — identical plan shape either way.
 
     Returns ``(id_a, id_b, sim)`` with ``id_a < id_b``; ``sim`` is the
     exact cosine rounded to 6 dp, and the threshold is applied to the
@@ -842,69 +716,6 @@ def semantic_dedup_pairs(corpus: DataFrame, threshold: float = 0.9,
             ).alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
-    )
-
-
-def semantic_increment_pairs(base: DataFrame, delta: DataFrame,
-                             threshold: float = 0.9, stride: int = 50,
-                             max_cluster: int = 1000,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             centroids: DataFrame | None = None) -> DataFrame:
-    """SemDeDup pairs INTRODUCED by a delta batch: every within-cluster
-    pair with cosine ≥ ``threshold`` and at least one side in
-    ``delta`` — the embedding-space twin of
-    operators/incremental.lsh_increment_pairs, for periodically
-    refreshed corpora where re-running the base×base comparison per
-    ingest is the quadratic trap.
-
-    The centroid table must be FIXED across ingests (stride over the
-    base, or a trained table passed in) — re-fitting centroids per
-    delta would silently reassign base vectors and change which pairs
-    are comparable. Identity (tests/test_similarity_srp.py): with the
-    cluster-size guard evaluated over base ∪ delta, this equals
-    ``semantic_dedup_pairs(base ∪ delta)`` minus its base-internal
-    pairs. Ids must be globally unique across base and delta.
-
-    Scale: base contributes its (id, centroid, vec) assignment — at
-    production scale a stored table, not a re-scan; the join is
-    delta-assignments ⋈ union-assignments on ``centroid_id``.
-    """
-    base = _as_double(base, vec_col)
-    delta = _as_double(delta, vec_col)
-    if centroids is None:
-        centroids = base.filter(F.col(id_col) % stride == 0).select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col)
-        )
-    else:
-        centroids = _as_double(centroids, vec_col).select(
-            "centroid_id", F.col(vec_col)
-        )
-    ab = ivf_assign(base, centroids, id_col, vec_col)
-    ad = ivf_assign(delta, centroids, id_col, vec_col)
-    alla = ab.unionByName(ad)
-    ok = (
-        alla.groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_cluster)
-        .select("centroid_id")
-    )
-    d = ad.join(ok, "centroid_id").select(
-        "centroid_id", F.col(id_col).alias("_di"), F.col(vec_col).alias("_dv")
-    )
-    u = alla.join(ok, "centroid_id").select(
-        "centroid_id", F.col(id_col).alias("_ui"), F.col(vec_col).alias("_uv")
-    )
-    return (
-        d.join(u, "centroid_id")
-        .filter(F.col("_di") != F.col("_ui"))
-        .select(
-            F.least("_di", "_ui").alias("id_a"),
-            F.greatest("_di", "_ui").alias("id_b"),
-            F.round(cosine(F.col("_dv"), F.col("_uv")), 6).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-        .distinct()
     )
 
 
@@ -1156,151 +967,6 @@ def centroid_cosine_matrix(corpus: DataFrame, id_col: str = "vec_id",
     )
 
 
-def mmr_select(corpus: DataFrame, query_vec: list[float], k: int = 10,
-               lambda_pct: int = 70, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> list[dict]:
-    """Maximal Marginal Relevance selection (M137; Carbonell &
-    Goldstein 1998, public): pick ``k`` vectors one at a time
-    maximizing ``λ·rel(d) − (1−λ)·max_{s∈S} sim(d, s)`` — relevance to
-    the query balanced against redundancy with what's already picked.
-    The retrieval-side complement of M132's coverage greedy: top-k
-    WITHOUT returning k near-copies of the best hit.
-
-    Determinism (the M90/M125 convention): components quantize once to
-    integer micros; rel and sim are cosines of the quantized integer
-    vectors — exact decimal dot/norm sums, one float division each —
-    quantized to ``*_micro`` longs before the argmax, ties → smallest
-    id; ``lambda_pct`` is an integer percent so the MMR objective
-    ``λ·rel − (100−λ)·maxsim`` stays in exact integer micros.
-
-    Objective variant — CLAMPED redundancy (deliberate; ADVICE r6):
-    the running ``maxsim_micro`` is floored at 0 every round
-    (``max(0, max_{s∈S} sim(d, s))``), not just for the empty picked
-    set. Candidates anti-correlated with everything picked score as
-    redundancy 0 — similarity to picks is only ever a PENALTY, never a
-    bonus — where textbook MMR would let a negative max-sim ADD to the
-    score and bias selection toward antipodal vectors. For dedup-aware
-    retrieval the hinge is the behavior we want (an opposite-direction
-    document is not "extra relevant", it is merely non-redundant); the
-    float32-faithful Python replay test pins the clamped objective.
-
-    Iterative BY NATURE (each pick changes every candidate's
-    redundancy term): k driver-coordinated rounds like M132/M46/M68 —
-    each round ONE distributed max-sim update against the single
-    just-picked vector (a broadcast 1-row join, no pairwise stage) and
-    a 1-row argmax collect. State per candidate is one running
-    ``maxsim_micro`` column, checkpointed per round.
-
-    Returns a list of ``{rank, id, rel_micro, maxsim_micro,
-    mmr_micro}`` (driver-sized: k rows).
-    """
-    import math
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not 0 <= lambda_pct <= 100:
-        raise ValueError(f"lambda_pct must be in [0, 100], got "
-                         f"{lambda_pct}")
-    spark = corpus.sparkSession
-    dim = len(query_vec)
-    qm = [math.floor(float(x) * 1e6) for x in query_vec]
-    qnorm = math.sqrt(sum(float(x) * x for x in qm))
-
-    comp = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.col(vec_col)).alias("_dim", "_x"),
-    ).select(
-        "_id", "_dim",
-        F.floor(F.col("_x").cast("double") * F.lit(1e6))
-        .cast("long").alias("_xm"),
-    )
-    qdf = spark.createDataFrame(
-        [(d, int(qm[d])) for d in range(dim)], "_dim int, _qm long"
-    )
-    dec = "decimal(38,0)"
-    base = (
-        comp.join(F.broadcast(qdf), "_dim")
-        .groupBy("_id")
-        .agg(F.sum(F.col("_xm").cast(dec) * F.col("_qm")).alias("_dot"),
-             F.sum(F.col("_xm").cast(dec) * F.col("_xm")).alias("_nrm"))
-        .select(
-            "_id",
-            F.when(F.col("_nrm") > 0,
-                   F.floor(F.col("_dot").cast("double")
-                           / (F.sqrt(F.col("_nrm").cast("double"))
-                              * F.lit(qnorm)) * F.lit(1e6)
-                           + F.lit(0.5)))
-            .otherwise(F.lit(0)).cast("long").alias("rel_micro"),
-            F.col("_nrm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    comp = comp.localCheckpoint(eager=True)
-    # running state: candidate → current max similarity to the picked set
-    state = base.select(
-        "_id", "rel_micro", "_nrm",
-        F.lit(-(10 ** 9)).cast("long").alias("maxsim_micro"),
-    ).localCheckpoint(eager=True)
-    picks: list[dict] = []
-    lam, lam_c = lambda_pct, 100 - lambda_pct
-    for rank in range(1, k + 1):
-        # maxsim of an empty set is 0 by convention
-        eff_maxsim = (F.greatest(F.col("maxsim_micro"), F.lit(0))
-                      if rank == 1 else F.col("maxsim_micro"))
-        mmr = (F.lit(lam) * F.col("rel_micro")
-               - F.lit(lam_c) * eff_maxsim)
-        best = (
-            state.select("_id", "rel_micro", "maxsim_micro",
-                         mmr.alias("_mmr"))
-            .orderBy(F.col("_mmr").desc(), "_id")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        row = best[0]
-        picks.append({
-            "rank": rank, "id": row["_id"],
-            "rel_micro": int(row["rel_micro"]),
-            "maxsim_micro": int(max(row["maxsim_micro"], 0)),
-            "mmr_micro": int(row["_mmr"]),
-        })
-        if rank == k:
-            break
-        picked_comp = comp.filter(F.col("_id") == row["_id"]).select(
-            "_dim", F.col("_xm").alias("_pm"))
-        picked_nrm = [r["_nrm"] for r in
-                      base.filter(F.col("_id") == row["_id"])
-                      .select("_nrm").collect()]
-        pnorm = math.sqrt(float(picked_nrm[0])) if picked_nrm else 0.0
-        sim_new = (
-            comp.join(F.broadcast(picked_comp), "_dim")
-            .groupBy("_id")
-            .agg(F.sum(F.col("_xm").cast(dec) * F.col("_pm"))
-                 .alias("_dot"))
-        )
-        state = (
-            state.filter(F.col("_id") != row["_id"])
-            .join(sim_new, "_id", "left")
-            .select(
-                "_id", "rel_micro", "_nrm",
-                F.greatest(
-                    F.greatest(F.col("maxsim_micro"), F.lit(0)),
-                    F.when(
-                        (F.col("_nrm") > 0) & F.col("_dot").isNotNull()
-                        & (F.lit(pnorm) > 0),
-                        F.floor(F.col("_dot").cast("double")
-                                / (F.sqrt(F.col("_nrm").cast("double"))
-                                   * F.lit(pnorm)) * F.lit(1e6)
-                                + F.lit(0.5)).cast("long"))
-                    .otherwise(F.lit(0).cast("long")),
-                ).alias("maxsim_micro"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return picks
-
-
 def embedding_dispersion(corpus: DataFrame, id_col: str = "vec_id",
                          vec_col: str = "embedding",
                          label_col: str = "label") -> DataFrame:
@@ -1384,8 +1050,7 @@ def embedding_dispersion(corpus: DataFrame, id_col: str = "vec_id",
 # codebook drops in as a DataFrame with the same schema and changes
 # recall, not the plan. ADC scoring is the brute-force-over-codes
 # baseline (every query scores every candidate — the compression is
-# memory/IO, not candidate pruning); compose with the IVF bucket
-# machinery (IVF-PQ) to prune candidates at corpus scale.
+# memory/IO, not candidate pruning).
 
 
 def quantize_vec(col: Column) -> Column:
@@ -1413,27 +1078,22 @@ def _subspace_slices(vec: Column, dim: int, m: int) -> Column:
 
 def pq_codebooks(corpus: DataFrame, dim: int, m: int = 4, ksub: int = 8,
                  stride: int = 50, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 offset: int = 0) -> DataFrame:
+                 vec_col: str = "embedding") -> DataFrame:
     """Deterministic PQ codebooks (subspace, code, cvq array<long>,
     cnsq long): codeword ``j`` of every subspace is the quantized
-    sub-vector of corpus id ``offset + j·stride`` (the q46 stride
-    convention — assumes the testdata's dense id space; arbitrary-id
-    corpora pass a trained codebook with this schema instead).
-    ``offset`` matters when the input is a RESIDUAL table whose
-    centroid rows are zero by construction (ivfpq_residual_topk):
-    sampling offset-shifted ids keeps the codebook off the degenerate
-    all-zero codewords. No window, no join: filter + arithmetic code
-    assignment + one posexplode."""
+    sub-vector of corpus id ``j·stride`` (the q46 stride convention —
+    assumes the testdata's dense id space; arbitrary-id corpora pass a
+    trained codebook with this schema instead). No window, no join:
+    filter + arithmetic code assignment + one posexplode."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     base = _as_double(corpus, vec_col).filter(
-        (F.col(id_col) >= offset)
-        & ((F.col(id_col) - offset) % stride == 0)
-        & (F.col(id_col) - offset < ksub * stride))
+        (F.col(id_col) >= 0)
+        & (F.col(id_col) % stride == 0)
+        & (F.col(id_col) < ksub * stride))
     return (
         base.select(
-            ((F.col(id_col) - offset) / stride).cast("int").alias("code"),
+            (F.col(id_col) / stride).cast("int").alias("code"),
             quantize_vec(F.col(vec_col)).alias("_vq"))
         .select("code",
                 F.posexplode(_subspace_slices(F.col("_vq"), dim, m))
@@ -1512,8 +1172,7 @@ def pq_encode(corpus: DataFrame, codebooks: DataFrame, dim: int,
 def _pq_adc(encoded: DataFrame, codebooks: DataFrame, queries: DataFrame,
             dim: int, m: int, k: int, id_col: str,
             vec_col: str) -> DataFrame:
-    """ADC top-k core shared by :func:`pq_adc_topk` (inline encoding)
-    and :func:`pq_topk_from_index` (published codes): LUT = queries ⋈
+    """ADC top-k over :func:`pq_encode` output: LUT = queries ⋈
     broadcast codebooks (|Q|·m·ksub rows of exact-integer partial
     dots), candidates = exploded codes ⋈ broadcast LUT on
     (subspace, code), similarity = Σ partial dots (exact int64 sum —
@@ -1540,158 +1199,10 @@ def pq_adc_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     return _pq_adc(enc, codebooks, queries, dim, m, k, id_col, vec_col)
 
 
-def publish_pq_index(spark, corpus: DataFrame, table_prefix: str,
-                     dim: int, m: int = 4, ksub: int = 8,
-                     stride: int = 50, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     path_root: str | None = None) -> None:
-    """Persist PQ state (the M150 pattern applied to quantization):
-    ``{prefix}_codebooks`` (subspace, code, cvq, cnsq) and
-    ``{prefix}_codes`` (id, codes) — the N·ksub·m encode pass runs
-    ONCE at publish; probes replay ADC joins over the (32×-smaller)
-    code table with no Python stage and no re-encode. Probes return
-    BIT-IDENTICAL rows to the inline operator (tests/test_pq.py)."""
-    cb = pq_codebooks(corpus, dim, m, ksub, stride, id_col, vec_col)
-    w = cb.write.mode("overwrite").format("parquet")
-    if path_root:
-        w = w.option("path", f"{path_root}/{table_prefix}_codebooks")
-    w.saveAsTable(f"{table_prefix}_codebooks")
-    spark_cb = spark.table(f"{table_prefix}_codebooks")
-    codes = pq_encode(corpus, spark_cb, dim, m, id_col, vec_col)
-    w2 = codes.write.mode("overwrite").format("parquet")
-    if path_root:
-        w2 = w2.option("path", f"{path_root}/{table_prefix}_codes")
-    w2.saveAsTable(f"{table_prefix}_codes")
-
-
-def pq_topk_from_index(spark, queries: DataFrame, table_prefix: str,
-                       dim: int, m: int = 4, k: int = 5,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """ADC top-k against :func:`publish_pq_index` state: identical
-    rows to :func:`pq_adc_topk` with the same codebooks, but the plan
-    is pure scans + joins — no mapInPandas encode stage (asserted in
-    tests/test_pq.py)."""
-    cb = spark.table(f"{table_prefix}_codebooks")
-    codes = spark.table(f"{table_prefix}_codes")
-    return _pq_adc(codes, cb, queries, dim, m, k, id_col, vec_col)
-
-
-def pq_codebooks_kmeans(corpus: DataFrame, dim: int, m: int = 4,
-                        ksub: int = 16, seed: int = 42, iters: int = 25,
-                        sample_limit: int = 100_000,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Trained PQ codebooks: seeded driver-side Lloyd iterations per
-    subspace over a sampled collect (codebook training is a
-    constant-size problem — ``sample_limit`` rows bound driver memory
-    regardless of corpus size; the full-corpus ENCODE stays
-    distributed). Same schema as :func:`pq_codebooks`, so it drops
-    into every PQ entry point; like :func:`kmeans_centroids`, seeded ⇒
-    reproducible on a fixed layout, so it feeds the recall-graded path
-    while the stride variant stays the oracle-checked default."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    X = np.array(
-        [np.asarray(r[vec_col], dtype=np.float64)
-         for r in _as_double(corpus, vec_col)
-         .select(vec_col).limit(sample_limit).collect()])
-    rng = np.random.RandomState(seed)
-    rows = []
-    for s in range(m):
-        data = X[:, s * dsub:(s + 1) * dsub]
-        C = data[rng.choice(len(data), min(ksub, len(data)),
-                            replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((data[:, None, :] - C[None]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(len(C)):
-                members = data[assign == j]
-                if len(members):  # empty cluster keeps its centroid
-                    C[j] = members.mean(axis=0)
-        Cq = np.floor(C * float(SRP_Q) + 0.5).astype(np.int64)
-        rows += [(s, j, [int(v) for v in Cq[j]],
-                  int((Cq[j] * Cq[j]).sum())) for j in range(len(Cq))]
-    return corpus.sparkSession.createDataFrame(
-        rows, "subspace int, code int, cvq array<long>, cnsq long")
-
-
-def pq_topk_rerank(corpus: DataFrame, queries: DataFrame, dim: int,
-                   m: int = 4, ksub: int = 8, stride: int = 50,
-                   k: int = 5, shortlist: int = 50,
-                   codebooks: DataFrame | None = None,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """The production PQ shape: ADC shortlists ``shortlist``
-    candidates per query from the compressed codes (the 32×-smaller
-    scan), then ONLY those |Q|·shortlist pairs are re-scored with
-    exact cosine against full-precision vectors and re-ranked to
-    top-k. Raw 32-bit ADC ranks coarsely on high-entropy embeddings
-    (recall@5 ≈ 0.15 on the test fixture); shortlist+rerank recovers
-    ≈ 0.76 at R=50 (tests/test_pq.py) while the full-precision fetch
-    stays proportional to |Q|·R, never N."""
-    short = pq_adc_topk(corpus, queries, dim, m, ksub, stride,
-                        k=shortlist, id_col=id_col, vec_col=vec_col,
-                        codebooks=codebooks)
-    c = _as_double(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    q = _as_double(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    sims = (
-        # the |Q|·R pair list broadcasts onto the corpus scan — the
-        # big side never shuffles for the refine stage
-        c.join(F.broadcast(short.select("query_id", "neighbor_id")
-                           .join(F.broadcast(q), "query_id")),
-               "neighbor_id")
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("_qv"), F.col("_cv")), 6)
-                .alias("sim"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"),
-                                          F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
-
-
-def pq_codes_increment(spark, delta: DataFrame, table_prefix: str,
-                       dim: int, m: int = 4, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> None:
-    """Maintain a :func:`publish_pq_index` incrementally: encode ONLY
-    the delta vectors against the PUBLISHED (frozen) codebooks and
-    append to ``{prefix}_codes`` — work is |delta|·ksub·m, never a
-    corpus re-encode, completing the publish/increment symmetry the
-    exact joins (M131/M142/M146) and sketches (M151/M152) follow.
-
-    Codebooks stay frozen by design: that is how production PQ indexes
-    evolve (re-training codebooks invalidates every stored code, so it
-    is a REPUBLISH, not an increment; codebook drift is observable via
-    the M153-style census over reconstruction error if needed).
-
-    The disjoint-id contract is POLICED (the incremental.py
-    convention): a delta id already present in the published codes
-    would duplicate rows and corrupt every subsequent ADC ranking, so
-    it raises ``OverlappingIdsError`` naming the remediation."""
-    from .incremental import _check_disjoint_ids
-
-    codes_tbl = f"{table_prefix}_codes"
-    existing = spark.table(codes_tbl)
-    _check_disjoint_ids(existing, delta, id_col,
-                        f"pq_codes_increment({table_prefix})")
-    cb = spark.table(f"{table_prefix}_codebooks")
-    pq_encode(delta, cb, dim, m, id_col, vec_col) \
-        .write.mode("append").format("parquet").saveAsTable(codes_tbl)
-
-
 def _pq_lut(queries: DataFrame, codebooks: DataFrame, dim: int, m: int,
             id_col: str, vec_col: str) -> DataFrame:
     """Per-query ADC lookup table (query_id, _qnsq, subspace, code,
-    _pdot, cnsq) — |Q|·m·ksub rows of exact-integer partial dots,
-    shared by :func:`_pq_adc` (full scan) and :func:`ivfpq_topk`
-    (bucket-pruned scan)."""
+    _pdot, cnsq) — |Q|·m·ksub rows of exact-integer partial dots."""
     qd = _as_double(queries, vec_col).select(
         F.col(id_col).alias("query_id"),
         quantize_vec(F.col(vec_col)).alias("_qq"))
@@ -1709,7 +1220,7 @@ def _pq_lut(queries: DataFrame, codebooks: DataFrame, dim: int, m: int,
 
 
 def _adc_rank(cand: DataFrame, k: int) -> DataFrame:
-    """Shared ADC aggregation + ranking over candidate rows
+    """ADC aggregation + ranking over candidate rows
     (query_id, neighbor_id, _pdot, cnsq, _qnsq)."""
     agg = (
         cand.groupBy("query_id", "neighbor_id")
@@ -1728,250 +1239,3 @@ def _adc_rank(cand: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
-
-
-def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
-               m: int = 4, ksub: int = 8, stride: int = 50, k: int = 5,
-               nprobe: int = 3, cent_stride: int = 50,
-               codebooks: DataFrame | None = None,
-               centroids: DataFrame | None = None,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """IVF-PQ top-k (Jégou et al. TPAMI 2011 §IV, the FAISS IVFADC
-    architecture, here WITHOUT residual encoding — codes quantize the
-    raw vectors, so with ``nprobe`` ≥ the centroid count this is
-    bit-identical to :func:`pq_adc_topk`, pinned in tests/test_pq.py):
-    the coarse quantizer (IVF bucket assignment) prunes each query's
-    candidate set to ``nprobe`` inverted lists, and ONLY those
-    buckets' compressed codes are ADC-scored — candidates per query
-    drop from N to ~N·nprobe/C while the scan stays in the 32×-smaller
-    code domain. This is the compute×memory composition that serves
-    10⁹-vector corpora: IVF alone still reads full-precision vectors,
-    PQ alone still scores all N codes. Compose with exact re-ranking
-    of the shortlist (:func:`pq_topk_rerank`'s refine stage) when
-    serving quality matters."""
-    corpus = _as_double(corpus, vec_col)
-    queries_d = _as_double(queries, vec_col)
-    centroids = _resolve_centroids(corpus, centroids, cent_stride,
-                                   id_col, vec_col)
-    if codebooks is None:
-        codebooks = pq_codebooks(corpus, dim, m, ksub, stride, id_col,
-                                 vec_col)
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col), "centroid_id")
-    enc = pq_encode(corpus, codebooks, dim, m, id_col, vec_col)
-    bucketed_codes = enc.join(assigned, id_col)
-
-    # per query: nprobe nearest centroids (the q46 probe stage)
-    q = queries_d.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("_qv"))
-    qc = q.join(F.broadcast(
-        centroids.withColumnRenamed(vec_col, "_centv"))).select(
-        "query_id", "centroid_id",
-        cosine(F.col("_qv"), F.col("_centv")).alias("_cs"))
-    probes = _probe_topn(qc, nprobe, ["query_id", "centroid_id"])
-
-    pruned = bucketed_codes.join(F.broadcast(probes), "centroid_id")
-    lut = _pq_lut(queries_d, codebooks, dim, m, id_col, vec_col)
-    cand = (
-        pruned.select("query_id", F.col(id_col).alias("neighbor_id"),
-                      F.posexplode("codes").alias("subspace", "code"))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-    )
-    return _adc_rank(cand, k)
-
-
-def ivfpq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
-                        m: int = 4, ksub: int = 8, stride: int = 50,
-                        k: int = 5, nprobe: int = 3,
-                        cent_stride: int = 50,
-                        codebooks: DataFrame | None = None,
-                        centroids: DataFrame | None = None,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """True IVFADC (Jégou et al. TPAMI 2011 §IV): PQ encodes the
-    RESIDUAL ``x − centroid(x)`` — residuals are smaller and more
-    isotropic than raw vectors, so the same m·log2(ksub) bits carry
-    more precision (recall ≥ the raw-vector variant on clustered data,
-    measured in tests/test_pq.py). Scoring decomposes exactly in the
-    integer domain:
-
-        dot(q, x̂)  = dot(q, c) + Σ_s LUT[s, code_s]
-        ‖x̂‖²       = ‖c‖² + 2·Σ_s cross[c, s, code_s] + Σ_s ‖cw‖²
-
-    where ``cross`` is the (centroid × codeword) dot table — C·m·ksub
-    rows, precomputed once, broadcast-sized for any sane C — so every
-    term is an EXACT int64 sum (the SRP_Q idiom) and only the final
-    cosine divides in float. Default codebooks: stride-sampled
-    RESIDUALS (deterministic); pass :func:`pq_codebooks_kmeans` output
-    trained on residuals for the recall-graded path."""
-    corpus = _as_double(corpus, vec_col)
-    queries_d = _as_double(queries, vec_col)
-    centroids = _resolve_centroids(corpus, centroids, cent_stride,
-                                   id_col, vec_col)
-
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    cent_named = centroids.withColumnRenamed(vec_col, "_centv")
-    residuals = (
-        assigned.join(F.broadcast(cent_named), "centroid_id")
-        .select(id_col, "centroid_id",
-                F.zip_with(F.col(vec_col), F.col("_centv"),
-                           lambda x, y: x - y).alias(vec_col))
-    )
-    if codebooks is None:
-        # offset past the centroid rows: ids ≡ 0 (mod cent_stride) have
-        # ZERO residuals by construction — sampling them yields an
-        # all-zero degenerate codebook (every code collapses to c)
-        codebooks = pq_codebooks(residuals, dim, m, ksub, stride,
-                                 id_col, vec_col,
-                                 offset=max(1, cent_stride // 2))
-
-    enc = pq_encode(residuals, codebooks, dim, m, id_col, vec_col)
-    bucketed_codes = enc.join(
-        residuals.select(id_col, "centroid_id"), id_col)
-    return _ivfpq_residual_score(bucketed_codes, codebooks, centroids,
-                                 queries_d, dim, m, k, nprobe, id_col,
-                                 vec_col)
-
-
-def _ivfpq_residual_score(bucketed_codes: DataFrame,
-                          codebooks: DataFrame, centroids: DataFrame,
-                          queries_d: DataFrame, dim: int, m: int,
-                          k: int, nprobe: int, id_col: str,
-                          vec_col: str) -> DataFrame:
-    """Probe + ADC decomposition stage of residual IVFADC, shared by
-    the inline operator and :func:`ivfpq_topk_from_index`. The small
-    integer tables (quantized centroids, norms, the C·m·ksub
-    centroid×codeword cross dots) rebuild here in codegen — they are
-    trivial next to the N-proportional assignment and encode stages,
-    which the published-index path skips entirely."""
-    cent_named = centroids.withColumnRenamed(vec_col, "_centv")
-    # integer-exact centroid tables: norms and the centroid×codeword
-    # cross dots (C·m·ksub rows)
-    cq = cent_named.select(
-        "centroid_id", quantize_vec(F.col("_centv")).alias("_cq"))
-    cnorm = cq.select("centroid_id", _int_nsq(F.col("_cq")).alias("_cnsq2"))
-    csub = cq.select(
-        "centroid_id",
-        F.posexplode(_subspace_slices(F.col("_cq"), dim, m))
-        .alias("subspace", "_csv"))
-    cross = csub.join(F.broadcast(codebooks), "subspace").select(
-        "centroid_id", "subspace",
-        F.col("code").cast("int").alias("code"),
-        _int_dot(F.col("_csv"), F.col("cvq")).alias("_cross"),
-        F.col("cnsq").alias("_cwnsq"))
-
-    # per query: nprobe nearest centroids + the exact dot(q, c) term
-    q = queries_d.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("_qv"),
-                         quantize_vec(F.col(vec_col)).alias("_qq"))
-    qc = q.join(F.broadcast(cq.join(F.broadcast(cent_named),
-                                    "centroid_id"))).select(
-        "query_id", "centroid_id",
-        cosine(F.col("_qv"), F.col("_centv")).alias("_cs"),
-        _int_dot(F.col("_qq"), F.col("_cq")).alias("_qdotc"),
-        _int_nsq(F.col("_qq")).alias("_qnsq"))
-    probes = _probe_topn(qc, nprobe,
-                         ["query_id", "centroid_id", "_qdotc", "_qnsq"])
-
-    # residual LUT: the query side of ADC does NOT subtract the
-    # centroid (the decomposition above already carries dot(q, c))
-    lut = _pq_lut(queries_d, codebooks, dim, m, id_col, vec_col) \
-        .drop("_qnsq", "cnsq")
-
-    pruned = bucketed_codes.join(F.broadcast(probes), "centroid_id")
-    cand = (
-        pruned.select("query_id", "centroid_id", "_qdotc", "_qnsq",
-                      F.col(id_col).alias("neighbor_id"),
-                      F.posexplode("codes").alias("subspace", "code"))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .join(F.broadcast(cross), ["centroid_id", "subspace", "code"])
-    )
-    agg = (
-        cand.groupBy("query_id", "neighbor_id", "centroid_id")
-        .agg(F.sum("_pdot").alias("_rdot"),
-             F.sum("_cross").alias("_xcross"),
-             F.sum("_cwnsq").alias("_rnsq"),
-             F.max("_qdotc").alias("_qdotc"),
-             F.max("_qnsq").alias("_qnsq"))
-        .join(F.broadcast(cnorm), "centroid_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("_adc", F.col("_qdotc") + F.col("_rdot"))
-        .withColumn("_xnsq", F.col("_cnsq2") + 2 * F.col("_xcross")
-                    + F.col("_rnsq"))
-        .withColumn("sim", F.when(
-            F.col("_xnsq") > 0,
-            F.round(F.col("_adc") / (F.sqrt(F.col("_qnsq"))
-                                     * F.sqrt(F.col("_xnsq"))), 6)))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"),
-                                          F.asc("neighbor_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
-
-
-def publish_ivfpq_index(spark, corpus: DataFrame, table_prefix: str,
-                        dim: int, m: int = 4, ksub: int = 8,
-                        stride: int = 50, cent_stride: int = 50,
-                        codebooks: DataFrame | None = None,
-                        centroids: DataFrame | None = None,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        path_root: str | None = None) -> None:
-    """Persist residual-IVFADC state (the M150/M156 publish pattern on
-    the strongest ANN variant): ``{prefix}_centroids``,
-    ``{prefix}_codebooks`` (residual codewords), and
-    ``{prefix}_codes`` (id, centroid_id, codes). The two
-    N-proportional stages — coarse assignment (N·C cosine) and
-    residual encode (N·ksub·m) — run ONCE here; probes replay with no
-    Python stage and no re-encode (bit-identity + plan pinned in
-    tests/test_pq.py). The tiny C·m·ksub cross table rebuilds in
-    codegen per probe, so it needs no storage."""
-    corpus = _as_double(corpus, vec_col)
-    centroids = _resolve_centroids(corpus, centroids, cent_stride,
-                                   id_col, vec_col)
-
-    def _save(df: DataFrame, name: str) -> DataFrame:
-        w = df.write.mode("overwrite").format("parquet")
-        if path_root:
-            w = w.option("path", f"{path_root}/{name}")
-        w.saveAsTable(name)
-        return spark.table(name)
-
-    centroids = _save(centroids, f"{table_prefix}_centroids")
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    cent_named = centroids.withColumnRenamed(vec_col, "_centv")
-    residuals = (
-        assigned.join(F.broadcast(cent_named), "centroid_id")
-        .select(id_col, "centroid_id",
-                F.zip_with(F.col(vec_col), F.col("_centv"),
-                           lambda x, y: x - y).alias(vec_col))
-    )
-    if codebooks is None:
-        codebooks = pq_codebooks(residuals, dim, m, ksub, stride,
-                                 id_col, vec_col,
-                                 offset=max(1, cent_stride // 2))
-    codebooks = _save(codebooks, f"{table_prefix}_codebooks")
-    codes = pq_encode(residuals, codebooks, dim, m, id_col,
-                      vec_col).join(
-        residuals.select(id_col, "centroid_id"), id_col)
-    _save(codes, f"{table_prefix}_codes")
-
-
-def ivfpq_topk_from_index(spark, queries: DataFrame, table_prefix: str,
-                          dim: int, m: int = 4, k: int = 5,
-                          nprobe: int = 3, id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Residual-IVFADC top-k against :func:`publish_ivfpq_index`
-    state: identical rows to :func:`ivfpq_residual_topk` with the same
-    centroids/codebooks, but the plan is pure scans + joins — no
-    assignment, no mapInPandas encode."""
-    return _ivfpq_residual_score(
-        spark.table(f"{table_prefix}_codes"),
-        spark.table(f"{table_prefix}_codebooks"),
-        spark.table(f"{table_prefix}_centroids"),
-        _as_double(queries, vec_col), dim, m, k, nprobe, id_col,
-        vec_col)

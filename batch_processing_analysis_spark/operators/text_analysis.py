@@ -124,7 +124,7 @@ def language_id(docs: DataFrame, id_col: str = "doc_id",
 def quality_columns(text_col: str = "text") -> dict[str, Column]:
     """The quality feature expressions as name → Column — pure per-row
     codegen, so they compose into batch selects AND streaming plans
-    (streaming/corpus_stream.stream_quality_filter) without a join."""
+    without a join."""
     t = F.col(text_col)
     toks = tokens(t)
     n_tok = F.size(toks)
@@ -1435,70 +1435,6 @@ def classifier_calibration(docs: DataFrame, label_col: str = "lang",
         F.min("score_micro").alias("min_score_micro"),
         F.max("score_micro").alias("max_score_micro"),
     )
-
-
-def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      level: int = 6) -> DataFrame:
-    """Compression-ratio quality signal (M119): per document,
-    ``len(zlib.compress(utf8)) / len(utf8)`` as integer micros — the
-    published compressibility filter (Gopher/MassiveText quality
-    rules, Rae et al. 2021 §A1; RedPajama-v2 ships the same signal as
-    ``ccnet_*``-adjacent quality metadata): highly compressible text
-    is repetitive boilerplate, incompressible text is noise/binary —
-    both tails get gated.
-
-    The codec is CPython's zlib at a FIXED ``level`` (DEFLATE,
-    RFC 1951) — deterministic for a given zlib build, so the unit
-    tests pin exact byte lengths computed by the same library. One
-    Arrow-batched ``mapInPandas`` (the multimodal/IVF kernel shape:
-    compression is a per-row CPU kernel Spark has no builtin for —
-    the legitimate Python-hop case); no shuffle at all, and the
-    output is four scalar ints per doc so the frame stays narrow.
-    There is no SQL-expressible oracle (DuckDB has no DEFLATE
-    function) — the operator is pytest-gated like the other
-    codec-bound kernels (M11, M116, M118).
-
-    Returns ``(id, n_bytes, n_compressed, ratio_micro)`` with
-    ``ratio_micro = floor(n_compressed·10⁶ / n_bytes)`` and NULL
-    ratio for empty/NULL text (nothing to compress; the quality gate
-    treats those via the length rules instead).
-    """
-    if not 1 <= level <= 9:
-        raise ValueError(f"zlib level must be in [1, 9], got {level}")
-    out_schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("n_compressed", T.LongType()),
-        T.StructField("ratio_micro", T.LongType()),
-    ])
-
-    def _kernel(batches):
-        import zlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            nb, nc, rm = [], [], []
-            for t in pdf[text_col]:
-                if t is None or t == "":
-                    nb.append(0)
-                    nc.append(0)
-                    rm.append(None)
-                    continue
-                raw = t.encode("utf-8")
-                comp = zlib.compress(raw, level)
-                nb.append(len(raw))
-                nc.append(len(comp))
-                rm.append(len(comp) * 1_000_000 // len(raw))
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "n_bytes": pd.array(nb, dtype="int64"),
-                "n_compressed": pd.array(nc, dtype="int64"),
-                "ratio_micro": pd.array(rm, dtype="Int64"),
-            })
-
-    return docs.select(id_col, text_col).mapInPandas(_kernel, out_schema)
 
 
 def nfc_normalize_docs(docs: DataFrame, id_col: str = "doc_id",

@@ -92,7 +92,7 @@ def rolling_median(df: DataFrame, n: int = 5,
 
     Cost is O(n log n) per row with ``n`` a small constant (the frame
     is ``ROWS n-1 PRECEDING``); for percentiles over unbounded windows
-    use the sketch path (ordering.quantile_bounds) instead.
+    use the sketch path (sketches.hist_quantiles) instead.
     """
     w = (
         W.partitionBy(key_col)
@@ -175,7 +175,7 @@ def rolling_mad(df: DataFrame, key_col: str = "user_id",
     median, re-sort absolute deviations, take THEIR median. O(n log n)
     per row with frame-constant n — fine for the bounded frames this
     is for; unbounded spread wants the sketch path
-    (ordering.quantile_bounds).
+    (sketches.hist_quantiles).
 
     Each array is staged through its own projection so it is computed
     ONCE per row: inlining ``_array_median(array_sort(...))`` expands

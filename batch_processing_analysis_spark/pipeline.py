@@ -477,110 +477,3 @@ def expand_frontier(pages: DataFrame, robots: DataFrame, agent: str, *,
     return allowed.groupBy("canon_url").agg(
         F.count(F.lit(1)).alias("n_refs"),
         F.min("_src").alias("first_src"))
-
-
-def build_training_set(docs: DataFrame, path: str, *,
-                       benchmark: DataFrame | None = None,
-                       seed: str = "train:0", num_shards: int = 64,
-                       **prepare_kwargs) -> None:
-    """The full training-data build, end to end: ``prepare_corpus``
-    (dedup → quality/token gate → optional decontamination → language)
-    → deterministic seeded shuffle → ordered shard directories on disk.
-
-    Writes ``<path>/shard=<k>/`` parquet (sources/training_sink.py) with
-    each kept document's text plus ``predicted_lang / n_tokens /
-    quality_score / pos``; the (shard, pos) order is the reproducible
-    training order for ``seed`` — rebuilding with the same inputs and
-    seed yields byte-identical shards, a different seed a fresh epoch.
-
-    Composition is pinned to the oracle-verified pieces in
-    tests/test_pipeline_corpus.py: output rows must equal
-    ``seeded_shuffle(docs ⋈ prepare_corpus keep-set)``.
-    """
-    from .operators.ordering import seeded_shuffle
-    from .sources.training_sink import write_training_shards
-
-    kept = prepare_corpus(docs, benchmark=benchmark, **prepare_kwargs).select(
-        "doc_id", "predicted_lang", "n_tokens", "quality_score"
-    )
-    corpus = docs.select("doc_id", "text").join(kept, "doc_id")
-    ordered = seeded_shuffle(corpus, seed, num_shards)
-    write_training_shards(ordered, path)
-
-
-def corpus_report(docs: DataFrame,
-                  profile_cols: list[str] | None = None) -> DataFrame:
-    """One-call corpus health report: the release-audit artifact a data
-    team reads before shipping a new corpus drop. Unions three
-    verified report families into one long (section, metric, value)
-    frame:
-
-    - ``census``  — per-column null/distinct/modal stats
-      (operators/profiling.profile_columns, the q77 plan);
-    - ``quality`` — corpus-level aggregates of the q47 quality scores
-      (docs, mean score in millionths, token totals);
-    - ``dedup``   — exact-duplicate exposure (docs vs distinct content
-      hashes, the q40 keep-list arithmetic).
-
-    All numbers are exact integers (counts / floor-millionths), so the
-    report is engine-reproducible. Three scans of the corpus — the
-    families need different explodes; a caller that wants one scan
-    persists ``docs`` first (documented trade, same as the q53 chain).
-    """
-    from pyspark.sql import functions as F
-
-    from .operators import dedup as D
-    from .operators import text_analysis as TA
-    from .operators.profiling import profile_columns
-
-    cols = profile_cols if profile_cols is not None else ["lang", "source"]
-    # ONE census plan, two metrics exploded per column row (a second
-    # profile_columns call would be a second full scan).
-    census = profile_columns(docs, cols).select(F.explode(F.array(
-        F.struct(F.lit("census").alias("section"),
-                 F.concat(F.lit("nulls:"), F.col("col_name")).alias("metric"),
-                 F.col("n_nulls").cast("long").alias("value")),
-        F.struct(F.lit("census").alias("section"),
-                 F.concat(F.lit("distinct:"),
-                          F.col("col_name")).alias("metric"),
-                 F.col("n_distinct").cast("long").alias("value")),
-    )).alias("_s")).select("_s.section", "_s.metric", "_s.value")
-    # Quantize-then-sum (the M37/M81 convention): floor each row to
-    # integer micros BEFORE aggregating, then integer-divide. A float
-    # avg() is partition-order-dependent and can flip the floored micro
-    # value across cluster layouts.
-    q = TA.quality_features(docs).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("n_tokens").alias("_tok"),
-        F.floor(
-            F.sum(F.floor(F.col("quality_score") * F.lit(1e6)).cast("long"))
-            / F.count(F.lit(1))
-        ).cast("long").alias("_q"),
-    )
-    quality = q.select(F.explode(F.array(
-        F.struct(F.lit("quality").alias("section"),
-                 F.lit("n_docs").alias("metric"),
-                 F.col("_n").cast("long").alias("value")),
-        F.struct(F.lit("quality").alias("section"),
-                 F.lit("total_tokens").alias("metric"),
-                 F.col("_tok").cast("long").alias("value")),
-        F.struct(F.lit("quality").alias("section"),
-                 F.lit("mean_quality_micro").alias("metric"),
-                 F.col("_q").alias("value")),
-    )).alias("_s")).select("_s.section", "_s.metric", "_s.value")
-    d = D.exact_dedup(docs).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("is_canonical").alias("_k"),
-    )
-    dedup = d.select(F.explode(F.array(
-        F.struct(F.lit("dedup").alias("section"),
-                 F.lit("n_docs").alias("metric"),
-                 F.col("_n").cast("long").alias("value")),
-        F.struct(F.lit("dedup").alias("section"),
-                 F.lit("n_unique").alias("metric"),
-                 F.col("_k").cast("long").alias("value")),
-        F.struct(F.lit("dedup").alias("section"),
-                 F.lit("n_exact_dups").alias("metric"),
-                 (F.col("_n") - F.col("_k")).cast("long").alias("value")),
-    )).alias("_s")).select("_s.section", "_s.metric", "_s.value")
-    return census.unionByName(quality).unionByName(dedup)

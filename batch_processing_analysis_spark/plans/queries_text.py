@@ -466,8 +466,7 @@ _SRP_HP_SQL = (
 def q44_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs via hyperplane-LSH (SRP) banding with
     exact-cosine verification of candidates only — NO cross join in the
-    plan (the former exact O(n²) variant survives as
-    ``similarity.neardup_pairs``, the small-corpus oracle twin).
+    plan.
 
     Scale: candidate generation is a hash equi-join on (band, band-key)
     with a skew guard; at 10⁹ vectors widen num_bits/band_bits so
@@ -4964,11 +4963,9 @@ def q166_hll_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary size; bucket = hash60 mod 256 over the low hash bits,
     r = max leftmost-1-bit rank of the remaining 52 bits — all
     integer arithmetic over the md5 hash60 convention, so the DuckDB
-    twin rebuilds every register bit-for-bit. The ESTIMATE
-    (hll_estimate: exact fixed-point harmonic denominator + linear
-    counting) is accuracy-bracketed in tests/test_sketch_state.py;
-    the driver-hashed artifact is the register state itself, because
-    the state is what ships between ingest waves. First driver
+    twin rebuilds every register bit-for-bit. The driver-hashed
+    artifact is the register state itself, because the state is what
+    ships between ingest waves. First driver
     window r8."""
     docs = _docs(spark, sf_dir)
     toks = docs.select(

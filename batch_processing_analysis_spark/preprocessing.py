@@ -4,9 +4,10 @@ reference: src/preprocessing/handoff_batch.py:66-215).
 The reference uses these to fabricate evaluation logs: extract the
 subset of traces containing a target activity (X3), displace events that
 fall outside a resource's working calendar (X5), and inject synthetic
-trace pairs that exhibit forced prioritization (X6). All three are
-re-expressed as lazy DataFrame transforms — no driver loops over cases
-or pairs (the reference iterates rows in Python for each).
+trace pairs that exhibit forced prioritization (X6; its candidate-pair
+search is here). All are re-expressed as lazy DataFrame transforms —
+no driver loops over cases or pairs (the reference iterates rows in
+Python for each).
 
 Determinism policy (SURVEY §7.4): where the reference depends on pandas
 iteration order (``iloc[0]``, groupby order), the Spark versions define
@@ -161,7 +162,7 @@ def displace_calendar_unavailability(
 
 
 # --------------------------------------------------------------------------
-# X6: prioritization injection (reference handoff_batch.py:143-215)
+# X6: prioritization candidates (reference handoff_batch.py:162-173)
 # --------------------------------------------------------------------------
 
 def find_prioritization_pairs(
@@ -226,90 +227,4 @@ def find_prioritization_pairs(
             F.col("_e2.start_2").alias("start_2"),
             F.col("_e2.end_2").alias("end_2"),
         )
-    )
-
-
-def inject_prioritized_traces(
-    log: DataFrame,
-    base_log: DataFrame,
-    pairs: DataFrame,
-    ids: EventLogIDs,
-    max_case_id: int,
-) -> DataFrame:
-    """Append, for every prioritization pair, clones of the two involved
-    traces with forced prioritization (reference handoff_batch.py:
-    179-213): the prioritized event_2 instance starts at its enabled
-    time; event_1's trace is displaced by ``end_2 - start_1`` from
-    event_1 onward, and the enabling predecessor's end lands 1 s before
-    event_2's enabled time. New case ids are ``max_case_id + 2i / +2i+1``
-    and resources get a ``_prior_{i}`` suffix.
-
-    The reference loops pairs in Python and appends per iteration; here
-    a (small, broadcast) indexed pair table joins the base traces once —
-    both clone families come out of two joins + a union, lazily.
-
-    ``max_case_id`` is the caller-supplied re-key base (the reference
-    recomputes ``log.case.max()`` inside its loop; an explicit base
-    keeps the transform action-free). Case-id columns must be numeric.
-    """
-    c = ids.case
-    w = W.orderBy("enabled_1", "start_1", "case_1", "case_2")
-    idx = pairs.withColumn("_i", F.row_number().over(w) - 1)
-
-    s_us = F.unix_micros(F.col(ids.start_time))
-    e_us = F.unix_micros(F.col(ids.end_time))
-
-    # Clone family 1: event_1's trace, displaced to run after event_2.
-    p1 = idx.select(
-        F.col("case_1").alias("_pc"), "_i",
-        "enabled_1", "start_1", "end_1", "enabled_2", "end_2",
-    )
-    t1 = (
-        base_log.join(F.broadcast(p1), F.col(c) == F.col("_pc"))
-        .withColumn("_diff", F.col("end_2") - F.col("start_1"))
-        .withColumn(
-            "_new_s",
-            F.when(s_us >= F.col("start_1"), s_us + F.col("_diff")).otherwise(s_us),
-        )
-        .withColumn(
-            "_new_e",
-            F.when(e_us == F.col("enabled_1"),
-                   e_us + (F.col("enabled_2") - F.col("enabled_1")) - F.lit(US))
-            .when(e_us > F.col("start_1"), e_us + F.col("_diff"))
-            .otherwise(e_us),
-        )
-    )
-    # Clone family 2: event_2's trace with the prioritized instance
-    # started at its enabled time.
-    p2 = idx.select(
-        F.col("case_2").alias("_pc"), "_i",
-        "activity_2", "enabled_2", "start_2", "end_2",
-    )
-    t2 = (
-        base_log.join(F.broadcast(p2), F.col(c) == F.col("_pc"))
-        .withColumn(
-            "_new_s",
-            F.when(
-                (s_us == F.col("start_2")) & (e_us == F.col("end_2"))
-                & (F.col(ids.activity) == F.col("activity_2")),
-                F.col("enabled_2"),
-            ).otherwise(s_us),
-        )
-        .withColumn("_new_e", e_us)
-    )
-
-    def finish(t: DataFrame, offset: int) -> DataFrame:
-        return t.select(
-            (F.lit(max_case_id) + 2 * F.col("_i") + offset).cast("string").alias(c),
-            F.col(ids.activity),
-            F.concat(F.col(ids.resource), F.lit("_prior_"), F.col("_i")).alias(ids.resource),
-            F.timestamp_micros(F.col("_new_s")).alias(ids.start_time),
-            F.timestamp_micros(F.col("_new_e")).alias(ids.end_time),
-        )
-
-    cols = [c, ids.activity, ids.resource, ids.start_time, ids.end_time]
-    return (
-        log.select(*cols)
-        .unionByName(finish(t1, 0))
-        .unionByName(finish(t2, 1))
     )

@@ -2,9 +2,10 @@
 
 The reference reads header CSVs with inferred types and coerces the two
 timestamp columns to tz-aware UTC (reference: src/preprocessing/main.py:14-16,
-src/batch_processing_analysis/discovery.py:249-253). Here the schema is
-explicit — inference is a full extra scan at 100 TB — and the session
-timezone is pinned to UTC by the session factory.
+src/batch_processing_analysis/discovery.py:249-253). Here no type is
+inferred — inference is a full extra scan at 100 TB — the timestamp
+columns are cast explicitly, and the session timezone is pinned to UTC
+by the session factory.
 """
 
 from __future__ import annotations
@@ -14,16 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import EventLogIDs
-
-
-def event_log_schema(ids: EventLogIDs) -> T.StructType:
-    return T.StructType([
-        T.StructField(ids.case, T.StringType()),
-        T.StructField(ids.activity, T.StringType()),
-        T.StructField(ids.resource, T.StringType()),
-        T.StructField(ids.start_time, T.TimestampType()),
-        T.StructField(ids.end_time, T.TimestampType()),
-    ])
 
 
 def read_event_log_csv(

@@ -11,11 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 # The driver testdata stores timestamps as parquet TIMESTAMP(NANOS,false),
 # which Spark cannot map to TimestampType; with
 # spark.sql.legacy.parquet.nanosAsLong=true they arrive as long nanos and
@@ -59,13 +54,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # wall-clock as UTC — identical micros under a UTC session.
             df = df.withColumn(col, F.to_utc_timestamp(F.col(col), "UTC"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=None) -> None:
-    """Register each table as a temp view so plans can be written in SQL."""
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)

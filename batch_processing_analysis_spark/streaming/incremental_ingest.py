@@ -2,15 +2,15 @@
 PERSISTED content-hash registry — the production form of
 operators/incremental.merge_exact_increment.
 
-``stream_exact_dedup`` (corpus_stream.py) bounds its state by a
-watermark: duplicates separated by more than the horizon — or by a
-stream restart — slip through. This loop closes that gap the way a
-long-running ingest actually runs: ``foreachBatch`` checks every
-micro-batch against a registry table on durable storage, appends the
-survivors to the corpus, and extends the registry — so dedup state
-survives restarts indefinitely and is shared with the batch engine
-(same content hash ⇒ a batch `merge_exact_increment` over the same
-arrivals keeps exactly the same cluster set).
+A watermark-bounded streaming dedup lets duplicates separated by more
+than the horizon — or by a stream restart — slip through. This loop
+closes that gap the way a long-running ingest actually runs:
+``foreachBatch`` checks every micro-batch against a registry table on
+durable storage, appends the survivors to the corpus, and extends the
+registry — so dedup state survives restarts indefinitely and is shared
+with the batch engine (same content hash ⇒ a batch
+`merge_exact_increment` over the same arrivals keeps exactly the same
+cluster set).
 
 Idempotency (foreachBatch may re-run a batch after a failure): every
 batch writes its OWN partition directory ``ingest_batch=<id>`` in both
@@ -79,9 +79,8 @@ def ingest_micro_batch(batch_df: DataFrame, batch_id: int, *,
     survivors' distinct-token HLL registers (M151, the q166 builder:
     whitespace tokens of ``text_col``) and the ``length(text)``
     log-histogram buckets (M152) land in their own ``ingest_batch=<id>``
-    overwrite partitions. Per-wave PARTIALS + fold-at-read
-    (:func:`read_census_registers` / :func:`read_census_histogram`) —
-    not read-modify-write of one global state — because a foreachBatch
+    overwrite partitions. Per-wave PARTIALS folded at read — not
+    read-modify-write of one global state — because a foreachBatch
     retry then rewrites its own partition instead of double-folding
     into shared state: idempotence by the same discipline as the dedup
     registries, and both folds are exact by the sketches' merge
@@ -229,687 +228,3 @@ def read_ingested(spark: SparkSession, corpus_path: str) -> DataFrame:
     """The deduplicated corpus accumulated so far (all batch partitions)."""
     return spark.read.option("basePath", corpus_path).parquet(corpus_path)
 
-
-def read_url_registry(spark: SparkSession,
-                      url_registry_path: str) -> DataFrame:
-    """The canonical-URL keep-set accumulated so far (M163): one row
-    per first-seen canonical URL, column ``_canon_url`` plus its
-    ``ingest_batch`` arrival wave."""
-    return spark.read.option("basePath", url_registry_path) \
-        .parquet(url_registry_path)
-
-
-def read_census_registers(spark: SparkSession, hll_path: str,
-                          group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The corpus's distinct-token HLL registers folded over every
-    ingest wave: per-bucket MAX is associative/commutative/idempotent,
-    so the fold equals ``hll_registers`` built on everything ingested
-    in one batch — EXACTLY (tests/test_incremental_ingest.py pins the
-    identity incl. a stream restart). Feed to
-    :func:`operators.sketches.hll_estimate` for the cardinality."""
-    reg = spark.read.option("basePath", hll_path).parquet(hll_path)
-    return (reg.groupBy(*group_cols, "bucket")
-            .agg(F.max("r").alias("r")))
-
-
-def read_census_histogram(spark: SparkSession, hist_path: str,
-                          group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The corpus's text-length log-histogram folded over every ingest
-    wave: per-bucket SUM over disjoint survivor sets equals
-    ``log_histogram`` on everything ingested — EXACTLY. Feed to
-    :func:`operators.sketches.hist_quantiles` for percentiles."""
-    hist = spark.read.option("basePath", hist_path).parquet(hist_path)
-    return (hist.groupBy(*group_cols, "lo")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
-# ---------------------------------------------------------------------------
-# Near-dup ingest (M43): durable LSH band registry + per-batch pair flags
-# ---------------------------------------------------------------------------
-
-def neardup_micro_batch(batch_df: DataFrame, batch_id: int, *,
-                        bands_path: str, pairs_path: str,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        k: int = 3, num_hashes: int = 8,
-                        rows_per_band: int = 2,
-                        max_bucket: int = 1000) -> None:
-    """One micro-batch of the streaming NEAR-dup gate: signature the
-    batch, join its band rows against the durable band registry (plus
-    itself), persist the pairs the batch introduced and the batch's own
-    bands — each into an ``ingest_batch=<id>`` overwrite partition
-    (retry-idempotent, same discipline as :func:`ingest_micro_batch`).
-
-    The base×base join is never built (operators/incremental.py
-    semantics): each arrival is compared against everything seen so
-    far exactly once, so the accumulated pair set over a whole stream
-    equals the one-shot batch ``lsh_candidate_pairs`` on the full
-    corpus whenever no bucket crosses ``max_bucket`` mid-stream (the
-    guard population grows with the registry; a bucket can be open
-    early and capped later — that ordering dependence is inherent to
-    ANY incremental skew guard and is documented, not hidden).
-    """
-    from ..operators.incremental import band_rows, increment_pairs_from_bands
-
-    spark = batch_df.sparkSession
-    db = band_rows(batch_df, id_col, text_col, k, num_hashes,
-                   rows_per_band).localCheckpoint(eager=True)
-    try:
-        stored = (
-            spark.read.option("basePath", bands_path).parquet(bands_path)
-            .filter(F.col("ingest_batch") != batch_id)
-            .select(id_col, "band", "bkey")
-        )
-    except AnalysisException:  # first batch: registry doesn't exist yet
-        stored = None
-    allb = db if stored is None else db.unionByName(stored)
-    pairs = increment_pairs_from_bands(db, allb, id_col, max_bucket)
-    pairs.write.mode("overwrite").parquet(
-        f"{pairs_path}/ingest_batch={batch_id}"
-    )
-    db.write.mode("overwrite").parquet(f"{bands_path}/ingest_batch={batch_id}")
-
-
-def start_neardup_ingest(stream_docs: DataFrame, *, bands_path: str,
-                         pairs_path: str, checkpoint_path: str,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         k: int = 3, num_hashes: int = 8,
-                         rows_per_band: int = 2, max_bucket: int = 1000,
-                         available_now: bool = True) -> StreamingQuery:
-    """Durable streaming near-dup detection: every arriving document is
-    LSH-compared against the full history via the persisted band
-    registry — state on disk, restart-proof, shared with the batch
-    engine (same bands ⇒ ``lsh_increment_pairs`` over the same arrivals
-    flags the same pairs)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_micro_batch(
-            batch_df, batch_id, bands_path=bands_path,
-            pairs_path=pairs_path, id_col=id_col, text_col=text_col,
-            k=k, num_hashes=num_hashes, rows_per_band=rows_per_band,
-            max_bucket=max_bucket,
-        )
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
-    """All near-dup pairs flagged so far (distinct across batches —
-    a pair can only be introduced once, by its later side's batch)."""
-    return (
-        spark.read.option("basePath", pairs_path).parquet(pairs_path)
-        .select("id_a", "id_b").distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXACT near-dup ingest (M143): durable ranked-token registry + per-batch
-# exact PPJoin pairs — the exactness analog of the M43 LSH loop
-# (VERDICT r6 stretch 7: M130/M131's two halves wired into foreachBatch).
-# ---------------------------------------------------------------------------
-
-def exact_neardup_micro_batch(batch_df: DataFrame, batch_id: int, *,
-                              ranked_path: str, sets_path: str,
-                              pairs_path: str, id_col: str = "doc_id",
-                              text_col: str = "text", t_pct: int = 50,
-                              k: int = 3,
-                              df_table: str | None = None,
-                              max_candidates: int | None = None,
-                              check_disjoint_ids: bool = True,
-                              stats_path: str | None = None) -> None:
-    """One micro-batch of the streaming EXACT near-dup gate: shingle
-    the batch, rank its tokens under the ONE frozen total order, join
-    its prefix against the durable ranked registry (plus itself) via
-    the same candidate/verify core as the batch operator, and persist
-    the pairs the batch introduced plus the batch's own ranked/sets
-    rows — each into an ``ingest_batch=<id>`` overwrite partition
-    (retry-idempotent, the :func:`ingest_micro_batch` discipline; the
-    registry read EXCLUDES the current batch's partitions so a
-    half-written retry can't double-count).
-
-    Frozen order: token rank is (df, tk) where df comes from
-    ``df_table`` (a :func:`operators.incremental.publish_ppjoin_base`
-    ``{prefix}_df`` bucketed table) when given, else 0 for every token
-    (rank order = tk alone) — ANY fixed total order is exact, and
-    freezing it is what lets stored ranked rows be reused verbatim
-    across batches and restarts. Accumulated pairs over the whole
-    stream == the one-shot batch :func:`operators.dedup.ppjoin_pairs`
-    on everything ingested (each pair is introduced exactly once, by
-    its later side's batch) — pinned across a restart by
-    tests/test_exact_neardup_ingest.py.
-
-    ``stats_path`` (r9, VERDICT r8 task 4): maintain a per-wave
-    :func:`operators.incremental.ppjoin_prefix_stats` registry in the
-    same ``ingest_batch=<id>`` overwrite discipline; the
-    candidate-volume guard then aggregates THIS batch's lineage only
-    and joins the pre-counted history (stats rows ≈ history vocabulary
-    ≪ history token lineage), instead of rescanning every prior
-    wave's ranked rows per micro-batch. Bound is bit-identical.
-    """
-    from ..operators.dedup import hash60, shingle_rows
-    from ..operators.incremental import (
-        _ppjoin_increment_core,
-        ppjoin_prefix_stats,
-        prefix_counts_at,
-    )
-
-    spark = batch_df.sparkSession
-    lowered = batch_df.select(F.col(id_col),
-                              F.lower(F.col(text_col)).alias(text_col))
-    tok_d = shingle_rows(lowered, id_col, text_col, k).select(
-        F.col(id_col).alias("gid"), hash60(F.col("shingle")).alias("tk")
-    ).distinct().localCheckpoint(eager=True)
-    sizes_d = tok_d.groupBy("gid").agg(F.count(F.lit(1)).alias("n"))
-    if df_table is not None:
-        from ..sources.bucketed import load_bucketed
-
-        df_b = load_bucketed(spark, df_table)
-        with_df = (tok_d.join(F.broadcast(df_b), "tk", "left")
-                   .withColumn("_df", F.coalesce(
-                       "df", F.lit(0).cast("long"))))
-    else:
-        with_df = tok_d.withColumn("_df", F.lit(0).cast("long"))
-    ranked_d = (
-        with_df.join(sizes_d, "gid")
-        .withColumn("rn", F.row_number().over(
-            W.partitionBy("gid").orderBy("_df", "tk")))
-        .select("gid", "tk", "n", "rn")
-        .localCheckpoint(eager=True)
-    )
-    sets_d = tok_d.groupBy("gid").agg(
-        F.collect_list("tk").alias("set"),
-        F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=True)
-
-    def _stored(path: str, cols: list[str]) -> DataFrame | None:
-        try:
-            return (
-                spark.read.option("basePath", path).parquet(path)
-                .filter(F.col("ingest_batch") != batch_id)
-                .select(*cols)
-            )
-        except AnalysisException:  # first batch: registry doesn't exist
-            return None
-
-    ranked_others = _stored(ranked_path, ["gid", "tk", "n", "rn"])
-    sets_others = _stored(sets_path, ["gid", "set", "n"])
-    if check_disjoint_ids and ranked_others is not None:
-        # A re-ingested id would double its token multiset across the
-        # registry and the batch and silently shrink its Jaccard
-        # ratios — the misuse path most likely HERE (ADVICE r7), so
-        # the streaming gate polices it by default: one narrow id
-        # semi-join per micro-batch, short-circuited by limit(1).
-        from ..operators.incremental import _check_disjoint_ids
-
-        _check_disjoint_ids(
-            ranked_others.select(F.col("gid").alias(id_col)).distinct(),
-            batch_df, id_col, f"exact_neardup_micro_batch({batch_id})")
-    if ranked_others is None:
-        ranked_others = ranked_d.limit(0)
-    sets_all = sets_d if sets_others is None else \
-        sets_d.unionByName(sets_others)
-    pfx_counts_o = None
-    if stats_path is not None:
-        _check_stats_coverage(
-            spark, stats_path, ranked_path, batch_id,
-            f"exact_neardup_micro_batch({batch_id})",
-            "backfill_ppjoin_stats")
-        stats_o = _stored(stats_path, ["tk", "t_max", "cnt"])
-        if stats_o is not None:
-            # prefix_counts_at SUMs per tk, so the per-wave partition
-            # rows fold in the same aggregate — no pre-merge needed.
-            pfx_counts_o = prefix_counts_at(stats_o, t_pct)
-    pairs = _ppjoin_increment_core(ranked_d, ranked_others, sets_all,
-                                   t_pct, max_candidates,
-                                   others_pfx_counts=pfx_counts_o)
-    pairs.write.mode("overwrite").parquet(
-        f"{pairs_path}/ingest_batch={batch_id}")
-    ranked_d.write.mode("overwrite").parquet(
-        f"{ranked_path}/ingest_batch={batch_id}")
-    sets_d.write.mode("overwrite").parquet(
-        f"{sets_path}/ingest_batch={batch_id}")
-    if stats_path is not None:
-        ppjoin_prefix_stats(ranked_d).write.mode("overwrite").parquet(
-            f"{stats_path}/ingest_batch={batch_id}")
-
-
-def start_exact_neardup_ingest(stream_docs: DataFrame, *,
-                               ranked_path: str, sets_path: str,
-                               pairs_path: str, checkpoint_path: str,
-                               id_col: str = "doc_id",
-                               text_col: str = "text", t_pct: int = 50,
-                               k: int = 3, df_table: str | None = None,
-                               available_now: bool = True,
-                               max_candidates: int | None = None,
-                               check_disjoint_ids: bool = True,
-                               stats_path: str | None = None
-                               ) -> StreamingQuery:
-    """Durable streaming EXACT near-dup detection: every arriving
-    document is PPJoin-compared (provably complete, Jaccard ≥ t)
-    against the full ingest history via the persisted ranked-token
-    registry — state on disk, restart-proof, shared semantics with the
-    batch engine. ``stats_path`` keeps the per-batch candidate-volume
-    guard delta-proportional (see :func:`exact_neardup_micro_batch`)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        exact_neardup_micro_batch(
-            batch_df, batch_id, ranked_path=ranked_path,
-            sets_path=sets_path, pairs_path=pairs_path, id_col=id_col,
-            text_col=text_col, t_pct=t_pct, k=k, df_table=df_table,
-            max_candidates=max_candidates,
-            check_disjoint_ids=check_disjoint_ids,
-            stats_path=stats_path,
-        )
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_exact_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
-    """All exact near-dup pairs flagged so far (a pair is introduced
-    exactly once, by its later side's batch; distinct defends against
-    a replayed-batch overlap window)."""
-    return (
-        spark.read.option("basePath", pairs_path).parquet(pairs_path)
-        .select("id_a", "id_b", "jac_micro").distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXACT containment ingest (M147): the M143 loop with the containment
-# predicate — same durable ranked/sets registry format, ORDERED pairs
-# (VERDICT r7 task 3).
-# ---------------------------------------------------------------------------
-
-def containment_micro_batch(batch_df: DataFrame, batch_id: int, *,
-                            ranked_path: str, sets_path: str,
-                            pairs_path: str, id_col: str = "doc_id",
-                            text_col: str = "text", c_pct: int = 80,
-                            k: int = 3, df_table: str | None = None,
-                            max_candidates: int | None = None,
-                            check_disjoint_ids: bool = True,
-                            stats_path: str | None = None) -> None:
-    """One micro-batch of the streaming EXACT containment gate
-    (``|A∩B| ≥ (c_pct/100)·|A|``, ordered pairs): identical registry
-    format and retry-idempotence discipline as
-    :func:`exact_neardup_micro_batch` — the ranked registry stores
-    FULL ranked rows, so it is threshold- and predicate-independent
-    and one durable registry could serve both gates (and the optional
-    ``stats_path`` registry is the SAME :func:`ppjoin_prefix_stats`
-    format, serving both guards — see
-    :func:`exact_neardup_micro_batch`). Accumulated
-    pairs over the whole stream == the one-shot batch
-    :func:`operators.dedup.containment_pairs` on everything ingested
-    (each ordered pair is introduced exactly once, by its later
-    side's batch; pinned across a restart by
-    tests/test_exact_containment_ingest.py)."""
-    from ..operators.dedup import hash60, shingle_rows
-    from ..operators.incremental import (
-        _containment_increment_core,
-        ppjoin_prefix_stats,
-    )
-
-    spark = batch_df.sparkSession
-    lowered = batch_df.select(F.col(id_col),
-                              F.lower(F.col(text_col)).alias(text_col))
-    tok_d = shingle_rows(lowered, id_col, text_col, k).select(
-        F.col(id_col).alias("gid"), hash60(F.col("shingle")).alias("tk")
-    ).distinct().localCheckpoint(eager=True)
-    sizes_d = tok_d.groupBy("gid").agg(F.count(F.lit(1)).alias("n"))
-    if df_table is not None:
-        from ..sources.bucketed import load_bucketed
-
-        df_b = load_bucketed(spark, df_table)
-        with_df = (tok_d.join(F.broadcast(df_b), "tk", "left")
-                   .withColumn("_df", F.coalesce(
-                       "df", F.lit(0).cast("long"))))
-    else:
-        with_df = tok_d.withColumn("_df", F.lit(0).cast("long"))
-    ranked_d = (
-        with_df.join(sizes_d, "gid")
-        .withColumn("rn", F.row_number().over(
-            W.partitionBy("gid").orderBy("_df", "tk")))
-        .select("gid", "tk", "n", "rn")
-        .localCheckpoint(eager=True)
-    )
-    sets_d = tok_d.groupBy("gid").agg(
-        F.collect_list("tk").alias("set"),
-        F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=True)
-
-    def _stored(path: str, cols: list[str]) -> DataFrame | None:
-        try:
-            return (
-                spark.read.option("basePath", path).parquet(path)
-                .filter(F.col("ingest_batch") != batch_id)
-                .select(*cols)
-            )
-        except AnalysisException:
-            return None
-
-    ranked_others = _stored(ranked_path, ["gid", "tk", "n", "rn"])
-    sets_others = _stored(sets_path, ["gid", "set", "n"])
-    if check_disjoint_ids and ranked_others is not None:
-        from ..operators.incremental import _check_disjoint_ids
-
-        _check_disjoint_ids(
-            ranked_others.select(F.col("gid").alias(id_col)).distinct(),
-            batch_df, id_col, f"containment_micro_batch({batch_id})")
-    if ranked_others is None:
-        ranked_others = ranked_d.limit(0)
-    sets_all = sets_d if sets_others is None else \
-        sets_d.unionByName(sets_others)
-    stats_o = None
-    if stats_path is not None:
-        _check_stats_coverage(
-            spark, stats_path, ranked_path, batch_id,
-            f"containment_micro_batch({batch_id})",
-            "backfill_ppjoin_stats")
-        stats_o = _stored(stats_path, ["tk", "t_max", "cnt"])
-    pairs = _containment_increment_core(ranked_d, ranked_others,
-                                        sets_all, c_pct, max_candidates,
-                                        others_stats=stats_o)
-    pairs.write.mode("overwrite").parquet(
-        f"{pairs_path}/ingest_batch={batch_id}")
-    ranked_d.write.mode("overwrite").parquet(
-        f"{ranked_path}/ingest_batch={batch_id}")
-    sets_d.write.mode("overwrite").parquet(
-        f"{sets_path}/ingest_batch={batch_id}")
-    if stats_path is not None:
-        ppjoin_prefix_stats(ranked_d).write.mode("overwrite").parquet(
-            f"{stats_path}/ingest_batch={batch_id}")
-
-
-def start_containment_ingest(stream_docs: DataFrame, *,
-                             ranked_path: str, sets_path: str,
-                             pairs_path: str, checkpoint_path: str,
-                             id_col: str = "doc_id",
-                             text_col: str = "text", c_pct: int = 80,
-                             k: int = 3, df_table: str | None = None,
-                             available_now: bool = True,
-                             max_candidates: int | None = None,
-                             check_disjoint_ids: bool = True,
-                             stats_path: str | None = None
-                             ) -> StreamingQuery:
-    """Durable streaming EXACT containment detection: every arriving
-    document is checked (provably complete, containment ≥ c) both ways
-    — contained in history, containing history — via the persisted
-    ranked-token registry; state on disk, restart-proof. ``stats_path``
-    keeps the per-batch candidate-volume guard delta-proportional
-    (see :func:`exact_neardup_micro_batch`)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        containment_micro_batch(
-            batch_df, batch_id, ranked_path=ranked_path,
-            sets_path=sets_path, pairs_path=pairs_path, id_col=id_col,
-            text_col=text_col, c_pct=c_pct, k=k, df_table=df_table,
-            max_candidates=max_candidates,
-            check_disjoint_ids=check_disjoint_ids,
-            stats_path=stats_path,
-        )
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_containment_pairs(spark: SparkSession,
-                           pairs_path: str) -> DataFrame:
-    """All ordered containment pairs flagged so far."""
-    return (
-        spark.read.option("basePath", pairs_path).parquet(pairs_path)
-        .select("id_a", "id_b", "cont_micro").distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXACT edit-distance ingest (M148): the M143 loop with the Pass-Join
-# candidate scheme — durable composite-keyed chunk/substring/text
-# registries (VERDICT r7 task 3; core shared with
-# operators/incremental.edjoin_increment_from_base).
-# ---------------------------------------------------------------------------
-
-def edjoin_micro_batch(batch_df: DataFrame, batch_id: int, *,
-                       chunks_path: str, subs_path: str,
-                       texts_path: str, pairs_path: str,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       d: int = 10, q: int = 4,
-                       max_candidates: int | None = None,
-                       check_disjoint_ids: bool = True,
-                       stats_path: str | None = None) -> None:
-    """One micro-batch of the streaming EXACT edit-distance gate
-    (levenshtein ≤ d): Pass-Join chunk/substring rows under the
-    composite candidate key (content substrings — no frozen-order
-    state at all), joined against the durable registries via the same
-    core as the published-base increment; pairs plus the batch's own
-    chunk/sub/text rows land in ``ingest_batch=<id>`` overwrite
-    partitions (retry-idempotent). Every batch MUST use the same
-    (d, q) as the registries were built with — the chunk scheme is
-    parameter-specific (same contract the published base pins via its
-    meta table). Accumulated pairs over the whole stream == one-shot
-    batch :func:`operators.dedup.edjoin_pairs` on everything ingested
-    (pinned across a restart by tests/test_exact_edjoin_ingest.py).
-
-    ``stats_path`` (r9, VERDICT r8 task 4): maintain the three
-    :func:`operators.incremental.edjoin_guard_stats` registries under
-    ``{stats_path}/chunks|subs|tiny`` in the same ``ingest_batch=<id>``
-    overwrite discipline; the candidate-volume guard then aggregates
-    THIS batch's lineage only and joins the pre-counted history
-    instead of rescanning every prior wave's chunk/substring rows per
-    micro-batch. Bound is bit-identical."""
-    from ..operators.incremental import (
-        _edjoin_chunk_keyed,
-        _edjoin_increment_core,
-        _edjoin_sub_keyed,
-        edjoin_guard_stats,
-    )
-
-    spark = batch_df.sparkSession
-    t_d = (batch_df.select(F.col(id_col), F.col(text_col))
-           .withColumn("_len", F.length(text_col))
-           .localCheckpoint(eager=True))
-    ch_d = _edjoin_chunk_keyed(t_d, id_col, text_col, d) \
-        .localCheckpoint(eager=True)
-    sub_d = _edjoin_sub_keyed(t_d, id_col, text_col, d) \
-        .localCheckpoint(eager=True)
-
-    def _stored(path: str, cols: list[str]) -> DataFrame | None:
-        try:
-            return (
-                spark.read.option("basePath", path).parquet(path)
-                .filter(F.col("ingest_batch") != batch_id)
-                .select(*cols)
-            )
-        except AnalysisException:
-            return None
-
-    t_o = _stored(texts_path, [id_col, text_col, "_len"])
-    if check_disjoint_ids and t_o is not None:
-        from ..operators.incremental import _check_disjoint_ids
-
-        _check_disjoint_ids(t_o.select(id_col), batch_df, id_col,
-                            f"edjoin_micro_batch({batch_id})")
-    ch_o = _stored(chunks_path, ["_gc", "_lc", "_key"])
-    sub_o = _stored(subs_path, ["_gs", "_ly", "_lx", "_key"])
-    if t_o is None:
-        t_o, ch_o, sub_o = t_d.limit(0), ch_d.limit(0), sub_d.limit(0)
-    stats_o = None
-    if stats_path is not None:
-        for sub_reg in ("chunks", "subs", "tiny"):
-            _check_stats_coverage(
-                spark, f"{stats_path}/{sub_reg}", texts_path, batch_id,
-                f"edjoin_micro_batch({batch_id})",
-                "backfill_edjoin_stats")
-        cs = _stored(f"{stats_path}/chunks", ["_key", "_lc", "cnt"])
-        ss = _stored(f"{stats_path}/subs", ["_key", "_lx", "cnt"])
-        ts = _stored(f"{stats_path}/tiny", ["_band", "cnt"])
-        if cs is not None and ss is not None and ts is not None:
-            # The guard's bound SUM distributes over the per-wave
-            # partition rows, so no pre-merge is needed.
-            stats_o = (cs, ss, ts)
-    pairs = _edjoin_increment_core(t_d, ch_o, sub_o, t_o, id_col,
-                                   text_col, d, q, max_candidates,
-                                   others_stats=stats_o)
-    pairs.write.mode("overwrite").parquet(
-        f"{pairs_path}/ingest_batch={batch_id}")
-    ch_d.write.mode("overwrite").parquet(
-        f"{chunks_path}/ingest_batch={batch_id}")
-    sub_d.write.mode("overwrite").parquet(
-        f"{subs_path}/ingest_batch={batch_id}")
-    t_d.write.mode("overwrite").parquet(
-        f"{texts_path}/ingest_batch={batch_id}")
-    if stats_path is not None:
-        cstats, sstats, tstats = edjoin_guard_stats(t_d, ch_d, sub_d,
-                                                    d, q)
-        cstats.write.mode("overwrite").parquet(
-            f"{stats_path}/chunks/ingest_batch={batch_id}")
-        sstats.write.mode("overwrite").parquet(
-            f"{stats_path}/subs/ingest_batch={batch_id}")
-        tstats.write.mode("overwrite").parquet(
-            f"{stats_path}/tiny/ingest_batch={batch_id}")
-
-
-def start_edjoin_ingest(stream_docs: DataFrame, *, chunks_path: str,
-                        subs_path: str, texts_path: str,
-                        pairs_path: str, checkpoint_path: str,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        d: int = 10, q: int = 4,
-                        available_now: bool = True,
-                        max_candidates: int | None = None,
-                        check_disjoint_ids: bool = True,
-                        stats_path: str | None = None
-                        ) -> StreamingQuery:
-    """Durable streaming EXACT edit-distance detection: every arriving
-    document is Pass-Join-compared (provably complete, levenshtein ≤ d)
-    against the full ingest history via persisted chunk/substring
-    registries — state on disk, restart-proof, shared semantics and
-    core with the batch engine. ``stats_path`` keeps the per-batch
-    candidate-volume guard delta-proportional (see
-    :func:`edjoin_micro_batch`)."""
-
-    def _fn(batch_df: DataFrame, batch_id: int) -> None:
-        edjoin_micro_batch(
-            batch_df, batch_id, chunks_path=chunks_path,
-            subs_path=subs_path, texts_path=texts_path,
-            pairs_path=pairs_path, id_col=id_col, text_col=text_col,
-            d=d, q=q, max_candidates=max_candidates,
-            check_disjoint_ids=check_disjoint_ids,
-            stats_path=stats_path,
-        )
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_fn)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_edjoin_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
-    """All within-d pairs flagged so far."""
-    return (
-        spark.read.option("basePath", pairs_path).parquet(pairs_path)
-        .select("id_a", "id_b", "dist").distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Guard-stats registries: coverage police + backfill (VERDICT r8 task 4)
-# ---------------------------------------------------------------------------
-
-def _registry_batches(spark: SparkSession, path: str,
-                      exclude_batch: int) -> set[int]:
-    """The set of ``ingest_batch`` partition ids present in a registry,
-    from a DIRECTORY listing (Hadoop FileSystem API through the py4j
-    gateway — works for any scheme Spark can write to). A row-based
-    ``SELECT DISTINCT ingest_batch`` would MISS a wave whose partition
-    was written with zero rows (an empty micro-batch; an
-    all-short-docs wave's chunk registry), reporting a coverage
-    mismatch that isn't one."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return set()
-    out: set[int] = set()
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("ingest_batch="):
-            bid = int(name.split("=", 1)[1])
-            if bid != exclude_batch:
-                out.add(bid)
-    return out
-
-
-def _check_stats_coverage(spark: SparkSession, stats_path: str,
-                          lineage_path: str, exclude_batch: int,
-                          op: str, backfill: str) -> None:
-    """A stats registry that covers FEWER waves than its lineage
-    registry (stats enabled mid-stream; partial copy) would silently
-    UNDERCOUNT the guard bound — the one failure mode that turns the
-    delta-proportional guard from an optimization into a correctness
-    hazard, so the gates police it whenever stats are consulted.
-    A superset is harmless surplus only if the extra partitions are
-    empty; anything ≠ is refused loudly."""
-    sb = _registry_batches(spark, stats_path, exclude_batch)
-    lb = _registry_batches(spark, lineage_path, exclude_batch)
-    if sb != lb:
-        raise ValueError(
-            f"{op}: guard-stats registry {stats_path!r} covers waves "
-            f"{sorted(sb)} but the lineage registry covers "
-            f"{sorted(lb)} — a partial stats registry would UNDERCOUNT "
-            f"the candidate bound. Run {backfill} once to rebuild the "
-            f"stats registry from the lineage registry, or disable "
-            f"stats_path."
-        )
-
-
-def backfill_ppjoin_stats(spark: SparkSession, ranked_path: str,
-                          stats_path: str) -> None:
-    """One-shot rebuild of a per-wave :func:`ppjoin_prefix_stats`
-    registry from an existing ranked registry (M143/M147 gates that
-    predate ``stats_path``, or a mid-stream enablement): stats are
-    additive per ranked row, so grouping WITH the wave id reproduces
-    exactly what each wave's micro-batch would have written."""
-    from ..operators.incremental import ppjoin_prefix_stats
-
-    reg = spark.read.option("basePath", ranked_path).parquet(ranked_path)
-    (ppjoin_prefix_stats(reg, ("ingest_batch",))
-     .write.partitionBy("ingest_batch").mode("overwrite")
-     .parquet(stats_path))
-
-
-def backfill_edjoin_stats(spark: SparkSession, chunks_path: str,
-                          subs_path: str, texts_path: str,
-                          stats_path: str, d: int, q: int) -> None:
-    """One-shot rebuild of the three per-wave
-    :func:`edjoin_guard_stats` registries from existing M148
-    chunk/substring/text registries."""
-    from ..operators.incremental import edjoin_guard_stats
-
-    ch = spark.read.option("basePath", chunks_path).parquet(chunks_path)
-    sub = spark.read.option("basePath", subs_path).parquet(subs_path)
-    t = spark.read.option("basePath", texts_path).parquet(texts_path)
-    cstats, sstats, tstats = edjoin_guard_stats(
-        t, ch, sub, d, q, ("ingest_batch",))
-    cstats.write.partitionBy("ingest_batch").mode("overwrite").parquet(
-        f"{stats_path}/chunks")
-    sstats.write.partitionBy("ingest_batch").mode("overwrite").parquet(
-        f"{stats_path}/subs")
-    tstats.write.partitionBy("ingest_batch").mode("overwrite").parquet(
-        f"{stats_path}/tiny")

@@ -1,11 +1,7 @@
 """Incremental containment join (M142, operators/incremental.py):
-delta-touching output is identical to the batch operator on the union
-minus base-internal pairs — for both the fresh-union-df variant
-(containment_increment_pairs, q163) and the published-bucketed-base
-variant (containment_increment_from_base, which REUSES the
-publish_ppjoin_base tables: the frozen ranked table is threshold- and
-predicate-independent). Plus the relative plan assertion that the
-bucketed base feeds the candidate join with no Exchange."""
+delta-touching output of containment_increment_pairs (q163) is
+identical to the batch operator on the union minus base-internal
+pairs."""
 
 from __future__ import annotations
 
@@ -17,11 +13,8 @@ from batch_processing_analysis_spark.operators.dedup import (
     containment_pairs,
 )
 from batch_processing_analysis_spark.operators.incremental import (
-    containment_increment_from_base,
     containment_increment_pairs,
-    publish_ppjoin_base,
 )
-from batch_processing_analysis_spark.sources.bucketed import load_bucketed
 from batch_processing_analysis_spark.sources.tables import load_table
 
 
@@ -50,104 +43,3 @@ def test_increment_pairs_guard_trips(spark):
     with pytest.raises(CandidateVolumeExceeded):
         containment_increment_pairs(base, delta, c_pct=80, k=3,
                                     max_candidates=5).collect()
-
-
-@pytest.fixture(scope="module")
-def published_base(spark, sf_dir, tmp_path_factory):
-    wh = tmp_path_factory.mktemp("cont_wh")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    publish_ppjoin_base(spark, base, "contb", k=3, num_buckets=8,
-                        path_root=str(wh))
-    yield docs, str(wh)
-    for t in ("contb_ranked", "contb_df", "contb_sets", "contb_pstats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_increment_from_base_identity(spark, sf_dir, published_base):
-    docs, _ = published_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    inc = {(r.id_a, r.id_b): r.cont_micro
-           for r in containment_increment_from_base(
-               spark, delta, "contb", c_pct=80, k=3).collect()}
-    assert inc == _expected(docs, 80, 3)
-    assert inc, "fixture produced no delta-touching containment pairs"
-
-
-def test_base_side_scan_is_exchange_free(spark, published_base):
-    """Relative plan assertion (mirrors test_bucketed_ppjoin.py): the
-    containment candidate join against the BUCKETED ranked table needs
-    exactly one fewer Exchange than the identical join against a
-    bucketing-blind path read of the same parquet files."""
-    docs, wh = published_base
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        delta_pfx = (
-            docs.filter(F.col("doc_id") % 2 == 1).limit(50)
-            .select(F.col("doc_id").alias("gid"),
-                    F.xxhash64("text").alias("tk"),
-                    F.length("text").alias("n"),
-                    F.lit(1).alias("rn"))
-        )
-
-        def cand_plan(base_ranked):
-            a = delta_pfx.alias("a")
-            b = base_ranked.alias("b")
-            j = a.join(b, (F.col("a.tk") == F.col("b.tk"))
-                       & (F.col("a.gid") != F.col("b.gid"))
-                       & (F.col("b.n") * 100 >= 80 * F.col("a.n")))
-            return j._jdf.queryExecution().executedPlan().toString()
-
-        bucketed = cand_plan(load_bucketed(spark, "contb_ranked"))
-        degraded = cand_plan(spark.read.parquet(f"{wh}/contb_ranked"))
-        assert bucketed.count("Exchange") \
-            == degraded.count("Exchange") - 1, (bucketed, degraded)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_from_base_guard_trips_and_passes(spark, published_base):
-    """r8 guard symmetry: the published-base variant measures the same
-    Σ df·df bound before any candidate join and trips
-    CandidateVolumeExceeded over budget; a generous budget passes
-    through unchanged."""
-    docs, _ = published_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    with pytest.raises(CandidateVolumeExceeded):
-        containment_increment_from_base(
-            spark, delta, "contb", c_pct=80, k=3,
-            max_candidates=1).collect()
-    inc = containment_increment_from_base(
-        spark, delta, "contb", c_pct=80, k=3,
-        max_candidates=1_000_000_000)
-    assert {(r.id_a, r.id_b): r.cont_micro
-            for r in inc.collect()} == _expected(docs, 80, 3)
-
-
-def test_stats_guard_bound_identical_to_base_scan(spark, published_base):
-    """r9 delta-proportional guard (VERDICT r8 task 4): the
-    three-join containment bound derived from the published
-    ``_pstats`` + delta lineage equals the r8 base-scan bound
-    bit-for-bit (hiding the stats table forces the fallback)."""
-    import re
-
-    docs, _ = published_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-
-    def _trip_bound():
-        with pytest.raises(CandidateVolumeExceeded) as ei:
-            containment_increment_from_base(
-                spark, delta, "contb", c_pct=80, k=3,
-                max_candidates=0).collect()
-        return int(re.search(r"upper bound (\d+) exceeds",
-                             str(ei.value)).group(1))
-
-    with_stats = _trip_bound()
-    spark.sql("ALTER TABLE contb_pstats RENAME TO contb_pstats_hidden")
-    try:
-        without_stats = _trip_bound()
-    finally:
-        spark.sql(
-            "ALTER TABLE contb_pstats_hidden RENAME TO contb_pstats")
-    assert with_stats == without_stats and with_stats > 0

@@ -119,180 +119,3 @@ def test_edjoin_exhaustive_small_space(spark):
         got = {(r.id_a, r.id_b): r.dist
                for r in edjoin_pairs(df, d=d, q=2).collect()}
         assert got == want, f"d={d}"
-
-
-# ---------------------------------------------------------------------------
-# M146: published Pass-Join base (publish_edjoin_base +
-# edjoin_increment_from_base) — VERDICT r7 task 2
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def published_edjoin_base(spark, sf_dir, tmp_path_factory):
-    from batch_processing_analysis_spark.operators.incremental import (
-        publish_edjoin_base,
-    )
-
-    wh = tmp_path_factory.mktemp("edj_wh")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    publish_edjoin_base(spark, base, "edjb", d=10, q=8, num_buckets=8,
-                        path_root=str(wh))
-    yield docs, str(wh)
-    for t in ("edjb_chunks", "edjb_subs", "edjb_texts", "edjb_meta",
-              "edjb_chunkstats", "edjb_substats", "edjb_tinystats"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_from_base_identity_on_testdata(spark, sf_dir,
-                                        published_edjoin_base):
-    from batch_processing_analysis_spark.operators.incremental import (
-        edjoin_increment_from_base,
-    )
-
-    docs, _ = published_edjoin_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    inc = {(r.id_a, r.id_b): r.dist
-           for r in edjoin_increment_from_base(
-               spark, delta, "edjb", d=10, q=8).collect()}
-    assert inc == _expected(docs, 10, 8)
-    assert inc, "fixture produced no delta-touching edit pairs"
-
-
-def test_from_base_identity_structured(spark, tmp_path):
-    """Mixed tiny/Pass-Join regime against a published base — every
-    base/delta pair combination covered (the one-shot increment's
-    structured fixture, replayed through the publish)."""
-    from batch_processing_analysis_spark.operators.incremental import (
-        edjoin_increment_from_base,
-        publish_edjoin_base,
-    )
-
-    long_a = "the quick brown fox jumps over the lazy dog " * 3
-    items = [
-        (0, long_a),
-        (1, long_a[:-3] + "cat"),
-        (2, "ab"), (3, "abc"),
-        (4, long_a.replace("quick", "quack")),
-        (5, "zz"),
-        (6, "totally different content that matches nothing at all ok"),
-    ]
-    docs = spark.createDataFrame(items, "doc_id long, text string")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    publish_edjoin_base(spark, base, "edjs", d=3, q=3, num_buckets=4,
-                        path_root=str(tmp_path / "wh"))
-    try:
-        inc = {(r.id_a, r.id_b): r.dist
-               for r in edjoin_increment_from_base(
-                   spark, delta, "edjs", d=3, q=3).collect()}
-        full = {(r.id_a, r.id_b): r.dist
-                for r in edjoin_pairs(docs, d=3, q=3).collect()}
-        want = {p: v for p, v in full.items()
-                if p[0] % 2 == 1 or p[1] % 2 == 1}
-        assert inc == want
-        assert inc, "structured fixture produced no pairs"
-    finally:
-        for t in ("edjs_chunks", "edjs_subs", "edjs_texts", "edjs_meta",
-                  "edjs_chunkstats", "edjs_substats", "edjs_tinystats"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_from_base_parameter_mismatch_is_loud(spark,
-                                              published_edjoin_base):
-    from batch_processing_analysis_spark.operators.incremental import (
-        edjoin_increment_from_base,
-    )
-
-    docs, _ = published_edjoin_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1).limit(2)
-    with pytest.raises(ValueError, match="parameter-specific"):
-        edjoin_increment_from_base(spark, delta, "edjb", d=5, q=8)
-
-
-def test_from_base_scan_is_exchange_free(spark, published_edjoin_base):
-    """Relative plan assertion (the test_containment_increment.py
-    pattern): the Pass-Join candidate join against the BUCKETED subs
-    table needs exactly one fewer Exchange than the identical join
-    against a bucketing-blind path read of the same parquet files."""
-    from batch_processing_analysis_spark.operators.incremental import (
-        _edjoin_chunk_keyed,
-        _edjoin_pass_cand_keyed,
-    )
-    from batch_processing_analysis_spark.sources.bucketed import (
-        load_bucketed,
-    )
-
-    docs, wh = published_edjoin_base
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        t_d = (docs.filter(F.col("doc_id") % 2 == 1).limit(50)
-               .withColumn("_len", F.length("text")))
-        ch_d = _edjoin_chunk_keyed(t_d, "doc_id", "text", 10)
-
-        def n_exchanges(sub_side):
-            j = _edjoin_pass_cand_keyed(ch_d, sub_side)
-            return j._jdf.queryExecution().executedPlan() \
-                .toString().count("Exchange")
-
-        bucketed = n_exchanges(load_bucketed(spark, "edjb_subs"))
-        degraded = n_exchanges(spark.read.parquet(f"{wh}/edjb_subs"))
-        assert bucketed == degraded - 1, (bucketed, degraded)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_from_base_guard_trips_and_passes(spark, sf_dir,
-                                          published_edjoin_base):
-    """r8 guard symmetry on the published-base edit-distance
-    increment: pass-join key bounds + the banded tiny bound measured
-    before the pair joins."""
-    from batch_processing_analysis_spark.operators.incremental import (
-        edjoin_increment_from_base,
-    )
-
-    docs, _ = published_edjoin_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    with pytest.raises(CandidateVolumeExceeded):
-        edjoin_increment_from_base(spark, delta, "edjb", d=10, q=8,
-                                   max_candidates=0).collect()
-    inc = {(r.id_a, r.id_b): r.dist
-           for r in edjoin_increment_from_base(
-               spark, delta, "edjb", d=10, q=8,
-               max_candidates=5_000_000_000).collect()}
-    assert inc == _expected(docs, 10, 8)
-
-
-def test_stats_guard_bound_identical_to_base_scan(spark,
-                                                  published_edjoin_base):
-    """r9 delta-proportional guard (VERDICT r8 task 4): the four-part
-    edit-distance bound (three pass joins + tiny band join) derived
-    from the published chunk/sub/tiny stats tables + delta lineage
-    equals the r8 base-scan bound bit-for-bit (hiding the stats
-    tables forces the fallback)."""
-    import re
-
-    from batch_processing_analysis_spark.operators.incremental import (
-        edjoin_increment_from_base,
-    )
-
-    docs, _ = published_edjoin_base
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-
-    def _trip_bound():
-        with pytest.raises(CandidateVolumeExceeded) as ei:
-            edjoin_increment_from_base(spark, delta, "edjb", d=10, q=8,
-                                       max_candidates=0).collect()
-        return int(re.search(r"upper bound (\d+) exceeds",
-                             str(ei.value)).group(1))
-
-    with_stats = _trip_bound()
-    # hiding the dispatch table (chunkstats) is enough to force the
-    # base-scan fallback — the loader keys the whole tuple on it
-    spark.sql("ALTER TABLE edjb_chunkstats RENAME TO edjb_cstats_hidden")
-    try:
-        without_stats = _trip_bound()
-    finally:
-        spark.sql(
-            "ALTER TABLE edjb_cstats_hidden RENAME TO edjb_chunkstats")
-    assert with_stats == without_stats and with_stats > 0

@@ -225,7 +225,7 @@ def test_rolling_median_hand_case(spark):
 
 def test_parse_json_col_malformed_rows_null_not_dropped(spark):
     from batch_processing_analysis_spark.functions.semistructured import (
-        json_field, parse_json_col,
+        parse_json_col,
     )
 
     df = spark.createDataFrame(
@@ -236,14 +236,6 @@ def test_parse_json_col_malformed_rows_null_not_dropped(spark):
     got = {r["id"]: r["_j"]["k"] if r["_j"] else None for r in out.collect()}
     assert got == {1: 7, 2: None, 3: None, 4: None}
     assert out.count() == 4  # malformed rows kept, fields nulled
-    # one-field path extraction agrees
-    vals = {
-        r["id"]: r["v"]
-        for r in df.select(
-            "id", json_field("props", "$.k").alias("v")
-        ).collect()
-    }
-    assert vals[1] == "7" and vals[2] is None
 
 
 def test_pseudonymize_referential_integrity(spark):
@@ -296,9 +288,9 @@ def test_redact_documents_rules_and_edges(spark):
     assert sum(r["was_redacted"] or 0 for r in out.values()) == 4
 
 
-def test_cms_overestimates_and_merges(spark):
+def test_cms_overestimates(spark):
     from batch_processing_analysis_spark.operators.sketches import (
-        cms_estimate, cms_merge, cms_sketch,
+        cms_estimate, cms_sketch,
     )
 
     rows = [("a",)] * 50 + [("b",)] * 7 + [(f"x{i}",) for i in range(40)]
@@ -313,13 +305,6 @@ def test_cms_overestimates_and_merges(spark):
     assert all(est[k] >= v for k, v in true.items())
     # The heavy hitter dominates regardless of collisions elsewhere.
     assert max(est, key=lambda k: (est[k], k)) == "a"
-    # Split-build + merge == one-shot build, counter for counter.
-    half1 = spark.createDataFrame(rows[:40], "item string")
-    half2 = spark.createDataFrame(rows[40:], "item string")
-    merged = cms_merge(cms_sketch(half1, depth=4, width=64),
-                       cms_sketch(half2, depth=4, width=64))
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, sk.collect()))
     # Absent item estimates 0 unless every row collides.
     ghost = spark.createDataFrame([("zzz-never-seen",)], "item string")
     g = cms_estimate(sk, ghost, depth=4, width=64).collect()[0]["est"]

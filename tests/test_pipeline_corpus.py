@@ -114,40 +114,6 @@ def test_prepare_corpus_decontaminated_is_clean_subset(spark, sf_dir):
     }
 
 
-def test_build_training_set_pins_to_verified_pieces(spark, sf_dir, tmp_path):
-    from batch_processing_analysis_spark.operators.ordering import seeded_shuffle
-    from batch_processing_analysis_spark.pipeline import (
-        build_training_set,
-        prepare_corpus,
-    )
-    from batch_processing_analysis_spark.sources.training_sink import (
-        read_training_shards,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "train")
-    build_training_set(docs, out, seed="train:7", num_shards=8)
-
-    kept = prepare_corpus(docs).select(
-        "doc_id", "predicted_lang", "n_tokens", "quality_score"
-    )
-    want = sorted(
-        tuple(r)
-        for r in seeded_shuffle(
-            docs.select("doc_id", "text").join(kept, "doc_id"), "train:7", 8
-        )
-        .select("doc_id", "shard", "pos", "predicted_lang", "n_tokens")
-        .collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in read_training_shards(spark, out)
-        .select("doc_id", "shard", "pos", "predicted_lang", "n_tokens")
-        .collect()
-    )
-    assert got == want and got
-
-
 def test_prepare_corpus_near_dedup_is_subset(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {r["doc_id"] for r in prepare_corpus(docs).collect()}
@@ -182,37 +148,3 @@ def test_exact_pair_edges_precomputed_hash_parity(spark, sf_dir):
     )
     assert default == staged
     assert default  # the planted copies guarantee edges
-
-
-def test_corpus_report_sections_match_components(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from batch_processing_analysis_spark.operators.dedup import exact_dedup
-    from batch_processing_analysis_spark.operators.profiling import (
-        profile_columns,
-    )
-    from batch_processing_analysis_spark.pipeline import corpus_report
-    from batch_processing_analysis_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    rep = {(r["section"], r["metric"]): r["value"]
-           for r in corpus_report(docs).collect()}
-
-    # Census section pins to the q77-verified plan's numbers.
-    prof = {r["col_name"]: r for r in profile_columns(
-        docs, ["lang", "source"]).collect()}
-    assert rep[("census", "distinct:lang")] == prof["lang"]["n_distinct"]
-    assert rep[("census", "nulls:source")] == prof["source"]["n_nulls"]
-
-    # Dedup section pins to the q40-verified keep-list arithmetic.
-    dd = exact_dedup(docs).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("is_canonical").alias("k")
-    ).first()
-    assert rep[("dedup", "n_docs")] == dd["n"]
-    assert rep[("dedup", "n_unique")] == dd["k"]
-    assert rep[("dedup", "n_exact_dups")] == dd["n"] - dd["k"]
-
-    # Quality section: totals are positive and docs count is coherent.
-    assert rep[("quality", "n_docs")] == docs.count()
-    assert rep[("quality", "total_tokens")] > 0
-    assert 0 < rep[("quality", "mean_quality_micro")] < 1_000_000

@@ -1,9 +1,7 @@
 """Product-quantization ANN tests (M156, operators/similarity.py):
 exact-integer encode parity vs a pure-Python reference, perfect
-reconstruction ⇒ ADC == exact cosine, shortlist+rerank recall against
-brute force, published index bit-identity + encode-free plan, and
-codebook geometry. q170's DuckDB oracle covers cross-engine ADC
-parity at corpus scale."""
+reconstruction ⇒ ADC == exact cosine, and codebook geometry. q170's
+DuckDB oracle covers cross-engine ADC parity at corpus scale."""
 
 from __future__ import annotations
 
@@ -78,44 +76,6 @@ def test_pq_perfect_reconstruction_matches_exact_cosine(spark):
                                                     exact[key])
 
 
-def test_pq_rerank_recall(spark, sf_dir):
-    embs = load_table(spark, sf_dir, "embeddings")
-    queries = embs.limit(10)
-    exact = {(r.query_id, r.neighbor_id)
-             for r in S.brute_force_topk(embs, queries, k=5).collect()}
-    cb = S.pq_codebooks_kmeans(embs, dim=64, m=8, ksub=16, seed=42)
-    approx = {(r.query_id, r.neighbor_id)
-              for r in S.pq_topk_rerank(embs, queries, dim=64, m=8,
-                                        ksub=16, k=5, shortlist=50,
-                                        codebooks=cb).collect()}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, recall
-
-
-def test_published_pq_index_identical_and_encode_free(spark, sf_dir,
-                                                      tmp_path):
-    embs = load_table(spark, sf_dir, "embeddings")
-    queries = embs.filter(F.col("vec_id") < 10)
-    S.publish_pq_index(spark, embs, "pqidx", dim=64, m=4, ksub=8,
-                       stride=50, path_root=str(tmp_path / "wh"))
-    try:
-        inline = S.pq_adc_topk(embs, queries, dim=64, m=4, ksub=8,
-                               stride=50, k=5)
-        from_idx = S.pq_topk_from_index(spark, queries, "pqidx",
-                                        dim=64, m=4, k=5)
-        rows_i = sorted(map(tuple, inline.collect()))
-        rows_f = sorted(map(tuple, from_idx.collect()))
-        assert rows_i == rows_f
-        assert rows_f, "fixture produced no top-k rows"
-        plan_i = inline._jdf.queryExecution().executedPlan().toString()
-        plan_f = from_idx._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan_i, plan_i
-        assert "MapInPandas" not in plan_f, plan_f
-    finally:
-        for t in ("pqidx_codebooks", "pqidx_codes"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_pq_codebook_geometry(spark, sf_dir):
     embs = load_table(spark, sf_dir, "embeddings")
     cb = S.pq_codebooks(embs, dim=64, m=4, ksub=8, stride=50).collect()
@@ -132,124 +92,6 @@ def test_pq_codebook_geometry(spark, sf_dir):
         dim=64, m=4)
     row = enc.first()
     assert len(row["codes"]) == 4
-
-
-def test_pq_codes_increment_matches_full_publish(spark, sf_dir,
-                                                 tmp_path):
-    # publish on the base half, increment the delta half: probes must
-    # equal a probe against a full-corpus encode with the SAME (base-
-    # published) codebooks — codes are per-vector, so append ≡ re-encode
-    from batch_processing_analysis_spark.operators.incremental import (
-        OverlappingIdsError,
-    )
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    base = embs.filter(F.col("vec_id") % 2 == 0)
-    delta = embs.filter(F.col("vec_id") % 2 == 1)
-    queries = embs.filter(F.col("vec_id") < 10)
-    S.publish_pq_index(spark, base, "pqinc", dim=64, m=4, ksub=8,
-                       stride=50, path_root=str(tmp_path / "wh"))
-    try:
-        S.pq_codes_increment(spark, delta, "pqinc", dim=64, m=4)
-        inc = sorted(map(tuple, S.pq_topk_from_index(
-            spark, queries, "pqinc", dim=64, m=4, k=5).collect()))
-        cb = spark.table("pqinc_codebooks")
-        full_enc = S.pq_encode(embs, cb, dim=64, m=4)
-        full = sorted(map(tuple, S._pq_adc(
-            full_enc, cb, queries, dim=64, m=4, k=5, id_col="vec_id",
-            vec_col="embedding").collect()))
-        assert inc == full
-        assert inc, "fixture produced no top-k rows"
-        # re-ingesting the same ids is the policed misuse path
-        with pytest.raises(OverlappingIdsError, match="pqinc"):
-            S.pq_codes_increment(spark, delta, "pqinc", dim=64, m=4)
-    finally:
-        for t in ("pqinc_codebooks", "pqinc_codes"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_ivfpq_full_probe_identity_and_pruning(spark, sf_dir):
-    # (a) IVF-PQ without residuals probing ALL buckets is bit-identical
-    # to the full ADC scan — the composition adds pruning, never
-    # changes scoring; (b) at nprobe=3 of 10 buckets each query scores
-    # a strict subset of the corpus (the N·nprobe/C candidate claim).
-    embs = load_table(spark, sf_dir, "embeddings")
-    queries = embs.filter(F.col("vec_id") < 10)
-    full = sorted(map(tuple, S.ivfpq_topk(
-        embs, queries, dim=64, m=4, ksub=8, stride=50, k=5,
-        nprobe=10).collect()))
-    adc = sorted(map(tuple, S.pq_adc_topk(
-        embs, queries, dim=64, m=4, ksub=8, stride=50, k=5).collect()))
-    assert full == adc and full
-
-    n = embs.count()
-    universe = S.ivfpq_topk(embs, queries, dim=64, m=4, ksub=8,
-                            stride=50, k=10_000, nprobe=3)
-    max_cand = (universe.groupBy("query_id").count()
-                .agg(F.max("count")).first()[0])
-    assert max_cand < n * 0.6, (max_cand, n)
-
-
-def test_ivfpq_residual_perfect_reconstruction(spark):
-    # targets constructed as centroid + codeword-concatenation
-    # reconstruct EXACTLY, so the residual decomposition's similarity
-    # equals exact cosine up to query-side quantization (<= 2e-5)
-    dim, m, ksub = 8, 2, 4
-    rng = np.random.RandomState(3)
-    cents = rng.uniform(-1, 1, size=(2, dim))
-    cws = rng.uniform(-0.2, 0.2, size=(ksub, dim))
-    targets, vid = [], 0
-    for ci in range(2):
-        for a in range(ksub):
-            for b in range(ksub):
-                targets.append(cents[ci] + np.concatenate(
-                    [cws[a][:4], cws[b][4:]]))
-    tdf = _vec_df(spark, targets)
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "centroid_id long, embedding array<double>")
-    # codebooks = the constructed residual codewords, quantized
-    import math
-    rows = []
-    for s in range(m):
-        for j in range(ksub):
-            sub = [math.floor(x * Q + 0.5) for x in cws[j][s * 4:(s + 1) * 4]]
-            rows.append((s, j, sub, sum(v * v for v in sub)))
-    cb = spark.createDataFrame(
-        rows, "subspace int, code int, cvq array<long>, cnsq long")
-    queries = tdf.filter(F.col("vec_id") < 3)
-    adc = {(r["query_id"], r["neighbor_id"]): r["sim"]
-           for r in S.ivfpq_residual_topk(
-               tdf, queries, dim, m=m, ksub=ksub, k=6, nprobe=2,
-               codebooks=cb, centroids=cent_df).collect()}
-    exact = {(r["query_id"], r["neighbor_id"]): r["sim"]
-             for r in S.brute_force_topk(tdf, queries, k=6).collect()}
-    shared = set(adc) & set(exact)
-    assert shared
-    for key in shared:
-        assert abs(adc[key] - exact[key]) <= 2e-5, (key, adc[key],
-                                                    exact[key])
-
-
-def test_ivfpq_residual_default_codebook_not_degenerate(spark, sf_dir):
-    # regression pin: ids ≡ 0 (mod cent_stride) have ZERO residuals —
-    # a stride codebook sampled AT the centroid ids collapses every
-    # code to the centroid itself (measured: every top hit ties at the
-    # centroid's own cosine). The offset default must keep at least
-    # one nonzero codeword in every subspace.
-    embs = load_table(spark, sf_dir, "embeddings")
-    queries = embs.filter(F.col("vec_id") < 10)
-    out = S.ivfpq_residual_topk(embs, queries, dim=64, m=8, ksub=8,
-                                stride=50, k=5, nprobe=3)
-    rows = out.collect()
-    assert rows
-    # degenerate form scores every bucket-mate identically; the fixed
-    # form must produce >1 distinct sim per query for a 50-row output
-    import collections
-    per_q = collections.defaultdict(set)
-    for r in rows:
-        per_q[r["query_id"]].add(r["sim"])
-    assert any(len(s) > 1 for s in per_q.values()), per_q
 
 
 def test_pq_encode_non_contiguous_codes(spark):
@@ -271,31 +113,3 @@ def test_pq_encode_non_contiguous_codes(spark):
     cb_missing = cb.filter(F.col("subspace") == 0)
     with pytest.raises(Exception, match="no codewords"):
         S.pq_encode(corpus, cb_missing, dim=2, m=2).collect()
-
-
-def test_published_ivfpq_index_identical_and_stage_free(spark, sf_dir,
-                                                        tmp_path):
-    embs = load_table(spark, sf_dir, "embeddings")
-    queries = embs.filter(F.col("vec_id") < 10)
-    S.publish_ivfpq_index(spark, embs, "ivfpqidx", dim=64, m=4, ksub=8,
-                          stride=50, cent_stride=50,
-                          path_root=str(tmp_path / "wh"))
-    try:
-        inline = S.ivfpq_residual_topk(embs, queries, dim=64, m=4,
-                                       ksub=8, stride=50, k=5, nprobe=3)
-        from_idx = S.ivfpq_topk_from_index(spark, queries, "ivfpqidx",
-                                           dim=64, m=4, k=5, nprobe=3)
-        rows_i = sorted(map(tuple, inline.collect()))
-        rows_f = sorted(map(tuple, from_idx.collect()))
-        assert rows_i == rows_f
-        assert rows_f, "fixture produced no top-k rows"
-        plan_i = inline._jdf.queryExecution().executedPlan().toString()
-        plan_f = from_idx._jdf.queryExecution().executedPlan().toString()
-        # the published path drops BOTH N-proportional stages: the
-        # mapInPandas encode and the assignment argmax
-        assert "MapInPandas" in plan_i, plan_i
-        assert "MapInPandas" not in plan_f, plan_f
-    finally:
-        for t in ("ivfpqidx_centroids", "ivfpqidx_codebooks",
-                  "ivfpqidx_codes"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -14,7 +14,6 @@ from batch_processing_analysis_spark.preprocessing import (
     extract_traces_containing,
     filter_event_blacklist,
     find_prioritization_pairs,
-    inject_prioritized_traces,
 )
 
 IDS = EventLogIDs()
@@ -138,33 +137,6 @@ def test_find_prioritization_pairs(spark):
 
     assert p["enabled_2"] == to_us(12)
     assert p["start_2"] == to_us(20) and p["end_1"] == to_us(20)
-
-
-def test_inject_prioritized_traces(spark):
-    enabled_log, base_log = _scenario(spark)
-    pairs = find_prioritization_pairs(enabled_log, IDS, "B")
-    out = inject_prioritized_traces(base_log, base_log, pairs, IDS, max_case_id=100)
-    rows = {(r[IDS.case], r[IDS.activity]): r for r in out.collect()}
-    assert len(rows) == 8  # 4 original + 2 cloned traces x 2 events
-
-    # Originals untouched.
-    assert rows[("1", "B")][IDS.start_time] == t(10)
-
-    # Clone of e1's trace (case 100): displaced by end_2 - start_1 = 20 s
-    # from event_1 onward; the enabling predecessor's end lands 1 s
-    # before event_2's enabled time (reference handoff_batch.py:198-211).
-    a = rows[("100", "A")]
-    assert a[IDS.start_time] == t(0)                    # before event_1: unmoved
-    assert a[IDS.end_time] == t(10 + (12 - 10) - 1)     # == enabled_2 - 1s
-    b = rows[("100", "B")]
-    assert b[IDS.start_time] == t(10 + 20) and b[IDS.end_time] == t(20 + 20)
-    assert b[IDS.resource] == "R_prior_0"
-
-    # Clone of e2's trace (case 101): the prioritized instance starts at
-    # its enabled time; everything else untouched.
-    y = rows[("101", "Y")]
-    assert y[IDS.start_time] == t(12) and y[IDS.end_time] == t(30)
-    assert rows[("101", "X")][IDS.start_time] == t(5)
 
 
 # --------------------------------------------------------------------------

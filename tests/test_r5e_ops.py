@@ -1,16 +1,11 @@
-"""Round-5 additions, fifth batch: integer-exact Gram accumulation +
-PCA whitening (M115) and the streaming weighted reservoir (M116) —
-numpy-recomputed semantics, partitioning independence, and the
-streaming family's streamed==batch replay gate."""
+"""Round-5 additions, fifth batch: integer-exact Gram accumulation
+(M115, the distributed pass of PCA whitening) — numpy-recomputed
+semantics and partitioning independence."""
 
 from __future__ import annotations
 
-import hashlib
-import math
-
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from batch_processing_analysis_spark.operators import linalg as LA
 
@@ -60,160 +55,7 @@ def test_gram_partitioning_independent(spark):
     assert outs[0] == outs[1] == _expected_gram(vecs)
 
 
-def test_whitener_identity_covariance_on_planted_anisotropy(spark):
-    rng = np.random.default_rng(5)
-    A = rng.normal(size=(6, 6)) * np.array([5, 3, 2, 1, 0.5, 0.1])
-    X = rng.normal(size=(800, 6)) @ A.T + rng.normal(size=6) * 4
-    rows = LA.gram_accumulate(_emb_df(spark, list(X))).collect()
-    mu, W = LA.pca_whitener(rows)
-    assert np.allclose(mu, X.mean(axis=0), atol=1e-5)
-    Y = (X - mu) @ W
-    cov = np.cov(Y, rowvar=False, bias=True)
-    assert np.allclose(cov, np.eye(W.shape[1]), atol=1e-2)
-    # eigenvalues match a direct numpy solve (quantization-limited)
-    direct = np.sort(np.linalg.eigvalsh(np.cov(X, rowvar=False,
-                                               bias=True)))[::-1]
-    recon = np.sort(1.0 / (W ** 2).sum(axis=0))[::-1]
-    # quantization at Q=1e6 perturbs cov entries by ~1e-5 absolute
-    assert np.allclose(recon, direct[: W.shape[1]], rtol=1e-3, atol=1e-3)
-
-
-def test_whitener_drops_rank_deficient_directions(spark):
-    rng = np.random.default_rng(6)
-    base = rng.normal(size=(300, 3))
-    X = np.hstack([base, np.full((300, 1), 2.5)])  # constant column
-    rows = LA.gram_accumulate(_emb_df(spark, list(X))).collect()
-    mu, W = LA.pca_whitener(rows)
-    assert W.shape == (4, 3)
-    mu2, W2 = LA.pca_whitener(rows, k=2)
-    assert W2.shape == (4, 2)
-
-
-def test_whiten_embeddings_matches_numpy_and_passes_nulls(spark):
-    rng = np.random.default_rng(7)
-    X = rng.normal(size=(50, 4))
-    rows = LA.gram_accumulate(_emb_df(spark, list(X))).collect()
-    mu, W = LA.pca_whitener(rows)
-    vecs = list(X[:10]) + [None]
-    out = {r["vec_id"]: r["whitened"] for r in LA.whiten_embeddings(
-        _emb_df(spark, vecs), mu, W).collect()}
-    assert out[10] is None
-    expect = (X[:10] - mu) @ W
-    for i in range(10):
-        assert np.allclose(out[i], expect[i], atol=1e-9)
-
-
-def test_gram_rejects_bad_quant_and_tiny_n(spark):
+def test_gram_rejects_bad_quant(spark):
     df = _emb_df(spark, [[1.0, 2.0]])
     with pytest.raises(ValueError):
         LA.gram_accumulate(df, quant=0)
-    rows = LA.gram_accumulate(df).collect()
-    with pytest.raises(ValueError):
-        LA.pca_whitener(rows)
-
-
-# --------------------------------------------------------------- M116
-
-def _py_key(seed, doc_id):
-    h = int(hashlib.md5(f"{seed}\x1f{doc_id}".encode()).hexdigest()[:15],
-            16)
-    return math.log((h + 1.0) / float((1 << 60) + 1))
-
-
-def _py_reservoir(rows, k, seed):
-    """Per-group A-Res top-k with the operator's exact key/tiebreak."""
-    by = {}
-    for doc_id, src, w in rows:
-        if w is None or not (float(w) > 0):
-            continue
-        by.setdefault(src, []).append(
-            (_py_key(seed, doc_id) / float(w), doc_id, float(w)))
-    out = {}
-    for src, items in by.items():
-        items.sort(key=lambda t: (-t[0], t[1]))
-        out[src] = [(i + 1, d, w, round(kk, 9))
-                    for i, (kk, d, w) in enumerate(items[:k])]
-    return out
-
-
-@pytest.fixture(scope="module")
-def reservoir_run(spark, tmp_path_factory):
-    from batch_processing_analysis_spark.streaming.corpus_stream import (
-        stream_weighted_reservoir,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for i in range(120):
-        w = float(rng.uniform(0.1, 5.0))
-        if i % 17 == 0:
-            w = 0.0          # excluded
-        if i % 23 == 0:
-            w = float("nan")  # excluded
-        rows.append((i, f"s{i % 3}", w))
-
-    src = str(tmp_path_factory.mktemp("resv_in"))
-    ck = str(tmp_path_factory.mktemp("resv_ck"))
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, weight double")
-    # three files -> three micro-batches with maxFilesPerTrigger=1
-    for part, lo in enumerate((0, 40, 80)):
-        df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 40)) \
-          .coalesce(1).write.mode("append").parquet(src)
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, weight double")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    out = stream_weighted_reservoir(stream, k=7, seed="resv:0")
-
-    emissions = []
-
-    def _sink(bdf, bid):
-        emissions.append((bid, bdf.collect()))
-
-    q = (out.writeStream.foreachBatch(_sink).outputMode("update")
-         .option("checkpointLocation", ck)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return rows, emissions
-
-
-def test_stream_reservoir_final_state_equals_batch(reservoir_run):
-    rows, emissions = reservoir_run
-    expect = _py_reservoir(rows, 7, "resv:0")
-    final = {}
-    for bid, recs in sorted(emissions):
-        for grp in {r["source"] for r in recs}:
-            final[grp] = [(r["rank"], r["doc_id"], r["weight"],
-                           r["sample_key"])
-                          for r in sorted(recs, key=lambda r: r["rank"])
-                          if r["source"] == grp]
-    assert set(final) == set(expect)
-    for src in expect:
-        assert final[src] == expect[src], src
-
-
-def test_stream_reservoir_emissions_are_prefix_samples(reservoir_run):
-    rows, emissions = reservoir_run
-    # every emission is the exact batch sample of SOME prefix of the
-    # stream: ranks contiguous from 1, keys non-increasing, and the
-    # member set of each group's successive emissions only improves
-    # (a reservoir never readmits a beaten key).
-    for _, recs in emissions:
-        by = {}
-        for r in recs:
-            by.setdefault(r["source"], []).append(r)
-        for src, rs in by.items():
-            rs = sorted(rs, key=lambda r: r["rank"])
-            assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-            keys = [r["sample_key"] for r in rs]
-            assert keys == sorted(keys, reverse=True)
-            assert len(rs) <= 7
-
-
-def test_stream_reservoir_excludes_nonpositive_weights(reservoir_run):
-    rows, emissions = reservoir_run
-    bad = {i for i, _, w in rows
-           if w is None or not (float(w) > 0) or math.isnan(float(w))}
-    seen = {r["doc_id"] for _, recs in emissions for r in recs}
-    assert not (seen & bad)

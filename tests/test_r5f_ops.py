@@ -1,13 +1,12 @@
 """Round-5 additions, sixth batch: relational Bloom filter (M117) —
 bit positions replayed in plain Python (same md5 derivation), so
-build/probe/merge are checked for EXACT parity, plus the structural
-guarantees (no false negatives ever, certain absences, OR-merge).
+build/probe are checked for EXACT parity, plus the structural
+guarantees (no false negatives ever, certain absences).
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,77 +60,12 @@ def test_bloom_probe_no_false_negatives_and_exact_flags(spark):
     assert sum(1 - got[v] for v in PROBED[50:]) > 300
 
 
-def test_bloom_merge_equals_build_on_union(spark):
-    a, b = INSERTED[:150], INSERTED[120:]
-    fa = SK.bloom_build(_items(spark, a), m_bits=M, k=K, seed=SEED)
-    fb = SK.bloom_build(_items(spark, b), m_bits=M, k=K, seed=SEED)
-    merged = {r["bit"] for r in SK.bloom_merge(fa, fb).collect()}
-    union = {r["bit"] for r in SK.bloom_build(
-        _items(spark, INSERTED), m_bits=M, k=K, seed=SEED).collect()}
-    assert merged == union
-
-
-def test_bloom_fpr_micro_matches_formula(spark):
-    filt = SK.bloom_build(_items(spark, INSERTED), m_bits=M, k=K,
-                          seed=SEED)
-    row = SK.bloom_fpr_micro(filt, m_bits=M, k=K).collect()[0]
-    nbits = len(_py_bits(INSERTED))
-    assert row["set_bits"] == nbits
-    assert row["fpr_micro"] == math.floor((nbits / M) ** K * 1_000_000)
-
-
 def test_bloom_rejects_bad_args(spark):
     df = _items(spark, ["x"])
     with pytest.raises(ValueError):
         SK.bloom_build(df, m_bits=0)
     with pytest.raises(ValueError):
         SK.bloom_build(df, k=0)
-    with pytest.raises(ValueError):
-        SK.bloom_fpr_micro(df, m_bits=10, k=0)
-
-
-# --------------------------------------------------------------- M119
-
-def test_compression_ratio_matches_zlib(spark):
-    import zlib
-
-    from batch_processing_analysis_spark.operators.text_analysis import (
-        compression_ratio,
-    )
-
-    texts = {
-        0: "spam " * 200,                      # highly compressible
-        1: "the quick brown fox jumps over the lazy dog",
-        2: "".join(chr(33 + (i * 37) % 90) for i in range(500)),
-        3: "héllo wörld ünïcode " * 10,        # multibyte
-        4: "",                                 # empty -> NULL ratio
-        5: None,                               # NULL  -> NULL ratio
-    }
-    df = spark.createDataFrame(list(texts.items()),
-                               "doc_id long, text string")
-    got = {r["doc_id"]: r for r in compression_ratio(df).collect()}
-    for i, t in texts.items():
-        if not t:
-            assert got[i]["ratio_micro"] is None
-            assert got[i]["n_bytes"] == 0
-            continue
-        raw = t.encode("utf-8")
-        comp = zlib.compress(raw, 6)
-        assert got[i]["n_bytes"] == len(raw)
-        assert got[i]["n_compressed"] == len(comp)
-        assert got[i]["ratio_micro"] == len(comp) * 1_000_000 // len(raw)
-    # the repetitive doc must compress far better than the noisy one
-    assert got[0]["ratio_micro"] < got[2]["ratio_micro"] // 5
-
-
-def test_compression_ratio_rejects_bad_level(spark):
-    from batch_processing_analysis_spark.operators.text_analysis import (
-        compression_ratio,
-    )
-
-    df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        compression_ratio(df, level=0)
 
 
 # --------------------------------------------------------------- M121

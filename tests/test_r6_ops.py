@@ -448,58 +448,10 @@ def test_zipf_slope_single_token_null(spark):
     assert row["vocab_size"] == 1 and row["slope_micro"] is None
 
 
-# --------------------------------------------------------------- M132
-
-def test_greedy_coverage_matches_python_greedy(spark):
-    from batch_processing_analysis_spark.operators.ordering import (
-        greedy_coverage_select,
-    )
-
-    items = [
-        (1, "a b c d e"),
-        (2, "a b c"),
-        (3, "f g h"),
-        (4, "e f"),
-        (5, "x"),
-    ]
-    got = greedy_coverage_select(_docs(spark, items), k=4)
-
-    # pure-Python greedy with the same (gain desc, id asc) tiebreak
-    sets = {i: set(t.split()) for i, t in items}
-    covered: set = set()
-    expect = []
-    for rank in range(1, 5):
-        best = max(sets.items(),
-                   key=lambda kv: (len(kv[1] - covered), -kv[0]))
-        gain = len(best[1] - covered)
-        if gain == 0:
-            break
-        covered |= best[1]
-        expect.append({"rank": rank, "doc_id": best[0], "gain": gain,
-                       "covered_total": len(covered)})
-    assert got == expect
-    # first pick must be the widest doc
-    assert got[0]["doc_id"] == 1 and got[0]["gain"] == 5
-
-
-def test_greedy_coverage_stops_when_exhausted(spark):
-    from batch_processing_analysis_spark.operators.ordering import (
-        greedy_coverage_select,
-    )
-
-    items = [(1, "a b"), (2, "a b"), (3, "a")]
-    got = greedy_coverage_select(_docs(spark, items), k=3)
-    # one pick covers everything; duplicates add gain 0 -> stop
-    assert len(got) == 1
-    assert got[0] == {"rank": 1, "doc_id": 1, "gain": 2,
-                      "covered_total": 2}
-
-
 # --------------------------------------------------------------- M136
 
-def test_linear_scores_kernel_equals_relational(spark):
+def test_linear_scores_relational_hand_cases(spark):
     from batch_processing_analysis_spark.operators.scoring import (
-        linear_scores,
         linear_scores_relational,
         seeded_weights,
     )
@@ -511,18 +463,14 @@ def test_linear_scores_kernel_equals_relational(spark):
         (4, "   "),            # zero tokens -> logit = bias
         (5, "unseen vocabulary entirely"),
         # ADVICE r6: non-ASCII whitespace (NBSP, ideographic space)
-        # is NOT a separator in either path — Java regex \s is ASCII,
-        # and the kernel now splits with re.ASCII to match; the glued
-        # "the key" token is OOV in both.
+        # is NOT a separator — Java regex \s is ASCII; the glued
+        # "the key" token is OOV.
         (6, "the\u00a0key words\u3000words GOOD Bad"),
     ])
     w = seeded_weights(["good", "bad", "the", "key", "words", "text"])
-    kern = sorted(map(tuple, linear_scores(docs, w,
-                                           bias_micro=250_000).collect()))
     rel = sorted(map(tuple, linear_scores_relational(
         docs, w, bias_micro=250_000).collect()))
-    assert kern == rel
-    rows = {r[0]: r for r in kern}
+    rows = {r[0]: r for r in rel}
     # hand check: doc 3 = 3x weight('the') + bias
     assert rows[3][2] == 3 * w["the"] + 250_000
     assert rows[4][1] == 0 and rows[4][2] == 250_000
@@ -549,76 +497,6 @@ def test_linear_scores_weights_are_engine_portable(spark):
             "|| ?), 1, 15) AS BIGINT) % 2000000) - 1000000", [t]
         ).fetchone()[0]
         assert got == expect, t
-
-
-# --------------------------------------------------------------- M137
-
-def _py_mmr(vecs, q, k, lam_pct):
-    import math
-
-    import numpy as np
-
-    def quant(v):
-        # corpus vectors live in an array<float> column: the operator
-        # sees float32 values — mirror the narrowing before quantizing
-        return [math.floor(float(np.float32(x)) * 1e6) for x in v]
-
-    def cos_micro(a, b):
-        # exact integer accumulation (the operator sums in
-        # decimal(38,0) and casts ONCE) — float-accumulated dots
-        # diverge by 1 ulp at floor boundaries
-        na = math.sqrt(float(sum(x * x for x in a)))
-        nb = math.sqrt(float(sum(x * x for x in b)))
-        if na == 0 or nb == 0:
-            return 0
-        d = float(sum(x * y for x, y in zip(a, b)))
-        return math.floor(d / (na * nb) * 1e6 + 0.5)
-
-    qm = [math.floor(float(x) * 1e6) for x in q]  # query stays f64
-    vm = {i: quant(v) for i, v in vecs.items()}
-    rel = {i: cos_micro(v, qm) for i, v in vm.items()}
-    maxsim = {i: 0 for i in vm}
-    picked = []
-    out = []
-    for rank in range(1, k + 1):
-        cands = [(lam_pct * rel[i] - (100 - lam_pct) * maxsim[i], -i, i)
-                 for i in vm if i not in picked]
-        if not cands:
-            break
-        mmr, _, best = max(cands)
-        out.append({"rank": rank, "id": best, "rel_micro": rel[best],
-                    "maxsim_micro": maxsim[best], "mmr_micro": mmr})
-        picked.append(best)
-        for i in vm:
-            if i not in picked:
-                maxsim[i] = max(maxsim[i], cos_micro(vm[i], vm[best]))
-    return out
-
-
-def test_mmr_select_matches_python(spark):
-    import numpy as np
-
-    from batch_processing_analysis_spark.operators.similarity import (
-        mmr_select,
-    )
-
-    rng = np.random.RandomState(9)
-    vecs = {i: [float(x) for x in rng.randn(6)] for i in range(15)}
-    q = [float(x) for x in rng.randn(6)]  # query NOT in the corpus
-    # plant near-duplicates so plain top-k would return copies
-    vecs[1] = [x * 1.01 for x in vecs[0]]
-    vecs[2] = [x * 0.99 for x in vecs[0]]
-    emb = _emb(spark, [(i, [float(x) for x in v], 0)
-                       for i, v in vecs.items()])
-    for lam in (50, 70):
-        got = mmr_select(emb, q, k=5, lambda_pct=lam)
-        exp = _py_mmr(vecs, q, 5, lam)
-        assert got == exp, lam
-    # diversification at lam=50 must differ from plain top-5 by rel
-    got50 = mmr_select(emb, q, k=5, lambda_pct=50)
-    rel_top5 = [p["id"] for p in sorted(
-        _py_mmr(vecs, q, 15, 100), key=lambda p: p["rank"])][:5]
-    assert [p["id"] for p in got50] != rel_top5
 
 
 # --------------------------------------------------------------- M139/M140

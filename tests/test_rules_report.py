@@ -33,8 +33,6 @@ pytestmark = pytest.mark.skipif(
     not LOGS.exists(), reason="reference artifacts not available"
 )
 
-GOLDEN = (OUTS / "Loan_Application_ActivationRules.txt").read_text()
-
 _BLOCK_RE = re.compile(
     r"^Batch: \('[^)]+'(, '[^)]+')*,?\):\n"
     r"\t# Observations: \d+\n"
@@ -47,6 +45,11 @@ _GUARD_RE = re.compile(
     r"^Not extracting rules from batch \(.+\) due to "
     r"(low size: \d+|only one outcome in training!)$"
 )
+
+
+@pytest.fixture(scope="module")
+def golden():
+    return (OUTS / "Loan_Application_ActivationRules.txt").read_text()
 
 
 def _blocks(text: str) -> list[str]:
@@ -87,7 +90,7 @@ def test_golden_framing_and_grammar(rendered):
             or b.startswith("Batch: (") and "No rules could match" in b, b
 
 
-def test_golden_keys_and_guards_match(rendered):
+def test_golden_keys_and_guards_match(rendered, golden):
     def keyed(text):
         guards, blocks = {}, set()
         for b in _blocks(text):
@@ -98,7 +101,7 @@ def test_golden_keys_and_guards_match(rendered):
                 blocks.add(re.match(r"Batch: (\(.+?\))", b).group(1))
         return guards, blocks
 
-    g_guards, g_blocks = keyed(GOLDEN)
+    g_guards, g_blocks = keyed(golden)
     o_guards, o_blocks = keyed(rendered)
     # Same groups hit the same guards with the same observation counts,
     # and the same groups yield rule blocks.
@@ -106,7 +109,7 @@ def test_golden_keys_and_guards_match(rendered):
     assert o_blocks == g_blocks
 
 
-def test_golden_observation_counts_match(rendered):
+def test_golden_observation_counts_match(rendered, golden):
     def obs(text):
         return {
             re.search(r"Batch: (\(.+?\)):", b).group(1):
@@ -115,4 +118,4 @@ def test_golden_observation_counts_match(rendered):
             if "# Observations" in b
         }
 
-    assert obs(rendered) == obs(GOLDEN)
+    assert obs(rendered) == obs(golden)

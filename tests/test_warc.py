@@ -1,91 +1,66 @@
-"""WARC source tests (M172, sources/warc.py) — ISO 28500 framing,
-gzip member handling, field parsing; q181's DuckDB twin re-runs the
+"""WARC record parsing tests (M172, sources/warc.py) — typed fields
+from ISO 28500 record text; q181's DuckDB twin re-runs the
 string-level parse in SQL at corpus scale."""
 
 from __future__ import annotations
 
-import gzip
-
-import pytest
-from pyspark.sql import functions as F
-
 from batch_processing_analysis_spark.sources import warc as W
 
 
-def _response(uri, date, body: bytes, status=200,
-              ctype="text/html") -> bytes:
+def _record(headers: dict[str, str], block: str) -> str:
+    """One spec-framed record as its text: header block, CRLFCRLF,
+    ``Content-Length`` octets of block."""
+    head = ["WARC/1.0", *(f"{k}: {v}" for k, v in headers.items()),
+            f"Content-Length: {len(block)}"]
+    return "\r\n".join(head) + "\r\n\r\n" + block
+
+
+def _response(uri, date, body: str, status=200, ctype="text/html") -> str:
     http = (f"HTTP/1.1 {status} OK\r\nContent-Type: {ctype}\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-            ).encode() + body
-    return W.warc_record_bytes(
+            f"Content-Length: {len(body)}\r\n\r\n") + body
+    return _record(
         {"WARC-Type": "response", "WARC-Target-URI": uri,
          "WARC-Date": date,
          "WARC-Record-ID": f"<urn:uuid:{abs(hash(uri)) % 10**8}>"},
         http)
 
 
-def _fixture_bytes() -> bytes:
-    info = W.warc_record_bytes(
+def _records() -> list[str]:
+    info = _record(
         {"WARC-Type": "warcinfo", "WARC-Date": "2024-01-01T00:00:00Z"},
-        b"software: test\r\n")
+        "software: test\r\n")
     r1 = _response("http://a.com/1", "2024-01-02T03:04:05Z",
-                   b"<html>one</html>")
-    # a payload CONTAINING the record magic must not confuse framing
+                   "<html>one</html>")
+    # a payload CONTAINING the record magic must not confuse parsing
     r2 = _response("http://a.com/2", "2024-01-03T00:00:00Z",
-                   b"literal WARC/1.0\r\n\r\nnot a record", status=404)
-    return info + r1 + r2
+                   "literal WARC/1.0\r\n\r\nnot a record", status=404)
+    return [info, r1, r2]
 
 
-def test_split_framing_and_traps():
-    recs = W.split_warc_records(_fixture_bytes())
-    assert len(recs) == 3
-    assert all(r.startswith(b"WARC/1.0") for r in recs)
-    with pytest.raises(ValueError, match="Content-Length"):
-        W.split_warc_records(b"WARC/1.0\r\nWARC-Type: x\r\n\r\nbody")
-    with pytest.raises(ValueError, match="does not start"):
-        W.split_warc_records(b"JUNK\r\n\r\nbody")
-    with pytest.raises(ValueError, match="remain"):
-        W.split_warc_records(
-            b"WARC/1.0\r\nContent-Length: 99\r\n\r\nshort")
-
-
-def test_read_and_parse_roundtrip(spark, tmp_path):
-    raw = tmp_path / "crawl.warc"
-    raw.write_bytes(_fixture_bytes())
-    # per-record gzip members, the layout real WARC writers emit
-    gz = tmp_path / "crawl2.warc.gz"
-    gz.write_bytes(b"".join(
-        gzip.compress(r + b"\r\n\r\n")
-        for r in W.split_warc_records(_fixture_bytes())))
-
-    df = W.read_warc(spark, [str(raw), str(gz)])
-    parsed = W.parse_warc_fields(df)
-    rows = parsed.collect()
-    assert len(rows) == 6  # 3 records × 2 files, byte-identical
-    by_key = {(r["path"].endswith("gz"), r["rec_idx"]): r
-              for r in rows}
-    for is_gz in (False, True):
-        info = by_key[(is_gz, 0)]
-        assert info["warc_type"] == "warcinfo"
-        assert info["http_status"] is None
-        assert info["payload"] == "software: test\r\n"
-        r1 = by_key[(is_gz, 1)]
-        assert r1["warc_type"] == "response"
-        assert r1["target_uri"] == "http://a.com/1"
-        assert r1["http_status"] == 200
-        assert r1["http_content_type"] == "text/html"
-        assert r1["payload"] == "<html>one</html>"
-        assert str(r1["warc_date_ts"]) == "2024-01-02 03:04:05"
-        r2 = by_key[(is_gz, 2)]
-        assert r2["http_status"] == 404
-        assert r2["payload"] == "literal WARC/1.0\r\n\r\nnot a record"
-        # spec framing: content_length is the full HTTP message
-        assert r2["content_length"] > len(r2["payload"])
+def test_parse_fields(spark):
+    df = spark.createDataFrame(list(enumerate(_records())),
+                               "rec_idx int, record string")
+    rows = {r["rec_idx"]: r for r in W.parse_warc_fields(df).collect()}
+    info = rows[0]
+    assert info["warc_type"] == "warcinfo"
+    assert info["http_status"] is None
+    assert info["payload"] == "software: test\r\n"
+    r1 = rows[1]
+    assert r1["warc_type"] == "response"
+    assert r1["target_uri"] == "http://a.com/1"
+    assert r1["http_status"] == 200
+    assert r1["http_content_type"] == "text/html"
+    assert r1["payload"] == "<html>one</html>"
+    assert str(r1["warc_date_ts"]) == "2024-01-02 03:04:05"
+    r2 = rows[2]
+    assert r2["http_status"] == 404
+    assert r2["payload"] == "literal WARC/1.0\r\n\r\nnot a record"
+    # spec framing: content_length is the full HTTP message
+    assert r2["content_length"] > len(r2["payload"])
 
 
 def test_parse_is_pure_codegen(spark):
-    df = spark.createDataFrame(
-        [(_fixture_bytes().decode("latin-1"),)], "record string")
+    df = spark.createDataFrame([(_records()[1],)], "record string")
     plan = W.parse_warc_fields(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "BatchEvalPython" not in plan
