@@ -183,6 +183,83 @@ def resolve_duplicates(docs: DataFrame, pairs: DataFrame | None = None,
     )
 
 
+def pagerank(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    damping_pct: int = 85,
+    n_iterations: int = 10,
+    nodes: DataFrame | None = None,
+    id_col: str = "id",
+) -> DataFrame:
+    """PageRank (Page et al. 1999) over a directed link graph —
+    the graph-quality signal of web-corpus curation (link-authority
+    weighting of crawl domains before sampling training data).
+
+    Returns ``(id, rank_micros)``: rank in integer micros, total
+    initial mass = 10⁶ per node. **All arithmetic is integer** —
+    contribution = ``(damping_pct · rank) // (100 · out_degree)``
+    (floor), new rank = ``(100 − damping_pct)·10⁴ + Σ contributions``
+    — so cross-partition sums are order-independent and the result is
+    bit-identical on any cluster layout (the float power iteration is
+    not; see plans/registry.py determinism rules). Dangling-node mass
+    is dropped, not redistributed (the pyspark PageRank example's
+    simplification; ranks are relative weights here, not a strict
+    probability distribution — documented contract).
+
+    Fixed ``n_iterations`` (default 10), no float convergence test:
+    deterministic output beats adaptive stopping for a data-pipeline
+    signal. Each superstep is one edge-join + one groupBy on dst —
+    hash-partitioned on node id, state one row per node; supersteps are
+    localCheckpointed and the previous round's blocks released
+    (operators/checkpoints.py), so K rounds hold ONE rank-table copy.
+    """
+    sym_nodes = (
+        edges.select(F.col(src_col).alias("_id"))
+        .unionByName(edges.select(F.col(dst_col).alias("_id")))
+    )
+    if nodes is not None:
+        sym_nodes = sym_nodes.unionByName(
+            nodes.select(F.col(id_col).alias("_id"))
+        )
+    node_ids, node_ck = checkpoint_tracked(sym_nodes.distinct())
+
+    deg = edges.groupBy(F.col(src_col).alias("_src")).agg(
+        F.count(F.lit(1)).alias("_deg")
+    )
+    ed, ed_ck = checkpoint_tracked(
+        edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
+        .join(deg, "_src")
+    )
+
+    base = F.lit((100 - damping_pct) * 10_000).cast("long")
+    ranks = node_ids.select("_id", F.lit(1_000_000).cast("long").alias("_r"))
+    rank_ck: set[int] = set()
+    for _ in range(n_iterations):
+        contrib = (
+            ed.join(ranks, ed["_src"] == ranks["_id"])
+            .select(
+                F.col("_dst").alias("_id"),
+                F.floor(F.lit(damping_pct) * F.col("_r")
+                        / (F.lit(100) * F.col("_deg"))).alias("_c"),
+            )
+            .groupBy("_id")
+            .agg(F.sum("_c").alias("_in"))
+        )
+        new = (
+            node_ids.join(contrib, "_id", "left")
+            .select("_id",
+                    (base + F.coalesce("_in", F.lit(0))).alias("_r"))
+        )
+        new, new_ck = checkpoint_tracked(new)
+        release_checkpoints(new, rank_ck)
+        ranks, rank_ck = new, new_ck
+
+    release_checkpoints(ranks, node_ck | ed_ck)
+    return ranks.select(F.col("_id").alias(id_col),
+                        F.col("_r").alias("rank_micros"))
+
+
 def dup_cluster_sizes(components: DataFrame,
                       comp_col: str = "component") -> DataFrame:
     """Duplicate-cluster size histogram (M108): from a components

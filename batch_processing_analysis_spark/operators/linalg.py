@@ -89,3 +89,45 @@ def gram_accumulate(emb: DataFrame, vec_col: str = "embedding",
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
     )
+
+
+def pca_whitener(gram_rows: list, quant: int = 1_000_000,
+                 k: int | None = None, eps: float = 1e-9):
+    """Driver-local solve (M115 pass 2): turn collected
+    :func:`gram_accumulate` rows into ``(mu, W)`` — the mean vector
+    and the d×k whitening matrix ``W = U_k Λ_k^(-1/2)`` so that
+    ``(x − mu) @ W`` has identity covariance on the top-k principal
+    components.
+
+    Covariance from integer sums (exact until the final float divide):
+    ``cov = (S/N − outer(m, m)) / quant²`` with ``m = colsum/N``.
+    Eigenvalues below ``eps`` are dropped (rank-deficient directions
+    cannot be whitened); components are sign-fixed (largest-|loading|
+    coordinate positive) so the decomposition is deterministic.
+    """
+    by = {(int(r["i"]), int(r["j"])): int(r["s"]) for r in gram_rows}
+    n = by.pop((-1, -1), 0)
+    if n <= 1:
+        raise ValueError(f"need at least 2 vectors, got {n}")
+    dim = 1 + max(i for i, _ in by)
+    colsum = np.array([by.pop((i, -1), 0) for i in range(dim)],
+                      dtype=np.float64)
+    S = np.zeros((dim, dim), dtype=np.float64)
+    for (i, j), s in by.items():
+        S[i, j] = s
+        S[j, i] = s
+    m = colsum / n
+    cov = (S / n - np.outer(m, m)) / (float(quant) ** 2)
+    vals, vecs = np.linalg.eigh(cov)
+    order = np.argsort(vals)[::-1]
+    vals, vecs = vals[order], vecs[:, order]
+    keep = vals > eps
+    if k is not None:
+        keep[k:] = False
+    vals, vecs = vals[keep], vecs[:, keep]
+    flip = np.sign(vecs[np.abs(vecs).argmax(axis=0),
+                        np.arange(vecs.shape[1])])
+    vecs = vecs * flip
+    mu = m / float(quant)
+    W = vecs / np.sqrt(vals)
+    return mu, W

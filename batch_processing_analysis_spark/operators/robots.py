@@ -160,6 +160,29 @@ def parse_robots_agents(robots: DataFrame, domain_col: str = "domain",
     return _group_agents(grouped).select("domain", "agent").distinct()
 
 
+def robots_sitemaps(robots: DataFrame, domain_col: str = "domain",
+                    text_col: str = "robots_txt") -> DataFrame:
+    """robots.txt corpus → (domain, sitemap_url): the ``Sitemap:``
+    directive (sitemaps.org cross-reference; RFC 9309 treats it as a
+    non-group record valid anywhere in the file, so this parse is
+    deliberately group-blind — it must NOT influence or depend on the
+    user-agent group scan). Feeds :mod:`.sitemaps` for crawl-seed URL
+    discovery."""
+    lines = robots.select(
+        F.col(domain_col).alias("domain"),
+        F.explode(F.split(F.col(text_col), "\n")).alias("raw"),
+    )
+    clean = lines.withColumn(
+        "stripped", F.trim(F.regexp_replace(F.col("raw"), "#.*", "")))
+    return (
+        clean.filter(F.lower(F.trim(F.regexp_extract(
+            "stripped", "^([^:]+):", 1))) == "sitemap")
+        .select("domain", F.trim(F.regexp_extract(
+            "stripped", "^[^:]+:(.*)$", 1)).alias("sitemap_url"))
+        .filter(F.col("sitemap_url") != "")
+    )
+
+
 def parse_crawl_delays(robots: DataFrame, domain_col: str = "domain",
                        text_col: str = "robots_txt", *,
                        _grouped: DataFrame | None = None) -> DataFrame:

@@ -348,6 +348,35 @@ def _ivf_assign_matmul(corpus: DataFrame, centroids: DataFrame,
     )
 
 
+def kmeans_centroids(corpus: DataFrame, n_clusters: int, seed: int = 42,
+                     max_iter: int = 20, id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
+    """Seeded k-means|| centroids (pyspark.ml) as an IVF centroid table
+    (centroid_id, vec). Recall-stronger than the deterministic-stride
+    subsample on clustered data (the stride picks arbitrary points; the
+    fit picks density modes) at the cost of one training job. Same
+    plan shape downstream — only the centroid TABLE changes.
+
+    Seeded ⇒ reproducible on a fixed layout, but float reduction order
+    can vary across cluster topologies — so this feeds the recall-
+    graded path, while the stride variant stays the oracle-checkable
+    default (q46).
+    """
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    vecs = _as_double(corpus, vec_col).select(
+        array_to_vector(F.col(vec_col)).alias("features")
+    )
+    model = KMeans(k=n_clusters, seed=seed, maxIter=max_iter).fit(vecs)
+    spark = corpus.sparkSession
+    cents = spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        f"centroid_id long, {vec_col} array<double>",
+    )
+    return cents
+
+
 def _resolve_centroids(corpus: DataFrame, centroids: DataFrame | None,
                        stride: int, id_col: str,
                        vec_col: str) -> DataFrame:

@@ -87,6 +87,17 @@ def cms_estimate(sketch: DataFrame, queries: DataFrame,
     )
 
 
+def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two sketches built with the SAME (depth, width): counters
+    add. This is what makes the sketch distributive — per-day / per-
+    split sketches combine without touching the raw data again."""
+    return (
+        a.unionByName(b)
+        .groupBy("d", "bucket")
+        .agg(F.sum("c").alias("c"))
+    )
+
+
 def exact_heavy_hitters(items: DataFrame, item_col: str = "item",
                         k: int = 100) -> DataFrame:
     """Two-pass EXACT heavy hitters without a full-cardinality shuffle
@@ -248,6 +259,14 @@ def bloom_probe(items: DataFrame, filt: DataFrame,
     )
 
 
+def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
+    """OR of two same-shaped filters: distinct union of set bits.
+    ``probe(merge(A, B)) == probe on the union corpus`` exactly (same
+    positions, same union of bits) — the mergeability the incremental
+    path relies on."""
+    return a.select("bit").unionByName(b.select("bit")).distinct()
+
+
 def hll_registers(items: DataFrame, item_col: str = "item",
                   p: int = 8, seed: str = "hll:0",
                   group_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -304,6 +323,62 @@ def hll_registers(items: DataFrame, item_col: str = "item",
     )
 
 
+def hll_merge(a: DataFrame, b: DataFrame,
+              group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Merge register tables built with the SAME (p, seed): per-bucket
+    MAX — ``merge(registers(A), registers(B)) == registers(A ∪ B)``
+    EXACTLY (max is associative/commutative/idempotent, so wave order
+    and duplicate re-ingestion cannot change the result)."""
+    return (
+        a.unionByName(b)
+        .groupBy(*group_cols, "bucket")
+        .agg(F.max("r").alias("r"))
+    )
+
+
+def hll_estimate(registers: DataFrame, p: int = 8,
+                 group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Cardinality estimate from a register table: per group,
+    ``(set_buckets, zeros, denom_fp, est)``.
+
+    The harmonic-mean denominator Σ 2^−M_j is computed as an EXACT
+    integer in fixed point (``denom_fp`` = Σ 2^(F−r) + zeros·2^F,
+    F = 61−p — every term a power of two ≤ 2^53, sum < 2^63 for
+    p ≥ 4, so the value is association-order-independent where a
+    float sum would not be); only the final division is floating
+    point. Small-range correction per the original paper: linear
+    counting m·ln(m/zeros) when the raw estimate ≤ 2.5m and zero
+    registers remain. Relative error ≈ 1.04/√m (σ).
+
+    The estimate is for pytest accuracy brackets; the driver-hashed
+    artifact is the integer register table itself (q166).
+    """
+    if not 4 <= p <= 16:
+        raise ValueError(f"p must be in [4, 16], got {p}")
+    m = 1 << p
+    fp = 61 - p
+    alpha = {4: 0.673, 5: 0.697, 6: 0.709}.get(p, 0.7213 / (1 + 1.079 / m))
+    gb = registers.groupBy(*group_cols) if group_cols else registers.groupBy()
+    agg = gb.agg(
+        F.count(F.lit(1)).cast("long").alias("set_buckets"),
+        F.sum(F.pow(F.lit(2.0), F.lit(fp) - F.col("r")).cast("long"))
+        .alias("_present_fp"),
+    )
+    zeros = F.lit(m) - F.col("set_buckets")
+    denom_fp = (F.col("_present_fp")
+                + zeros.cast("long") * F.lit(1 << fp).cast("long"))
+    raw = (F.lit(alpha * m * m) * F.lit(float(1 << fp))
+           / denom_fp.cast("double"))
+    est = F.when(
+        (raw <= 2.5 * m) & (zeros > 0),
+        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double")),
+    ).otherwise(raw)
+    return agg.select(
+        *group_cols, "set_buckets", zeros.cast("long").alias("zeros"),
+        denom_fp.alias("denom_fp"), est.alias("est"),
+    )
+
+
 def log_histogram(values: DataFrame, value_col: str, s: int = 4,
                   group_cols: tuple[str, ...] = ()) -> DataFrame:
     """Log-bucketed histogram with integer-exact bucketing (M152) —
@@ -353,6 +428,17 @@ def log_histogram(values: DataFrame, value_col: str, s: int = 4,
     )
 
 
+def hist_merge(a: DataFrame, b: DataFrame,
+               group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Merge histograms built with the SAME ``s``: counts add —
+    ``merge(hist(A), hist(B)) == hist(A ⊎ B)`` exactly."""
+    return (
+        a.unionByName(b)
+        .groupBy(*group_cols, "lo")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+
+
 def hist_quantiles(hist: DataFrame, pcts: tuple[int, ...] = (50, 90, 99),
                    group_cols: tuple[str, ...] = ()) -> DataFrame:
     """Percentiles from a log histogram: per group and integer
@@ -391,6 +477,58 @@ def hist_quantiles(hist: DataFrame, pcts: tuple[int, ...] = (50, 90, 99),
         .groupBy(*group_cols, "pct", "n")
         .agg(F.min("lo").alias("q_lo"))
         .select(*group_cols, "pct", "q_lo", "n")
+    )
+
+
+def bloom_fpr_micro(filt: DataFrame, m_bits: int, k: int) -> DataFrame:
+    """Observed false-positive-rate estimate, integer micros:
+    ``floor((set_bits/m)^k · 10⁶)`` — the load-dependent actual rate
+    (Bloom 1970 eq. for a given occupancy), not the design-point
+    formula. One count over the ≤ m_bits-row filter; the pow is on a
+    1-row frame."""
+    if m_bits <= 0 or k <= 0:
+        raise ValueError(f"m_bits ({m_bits}) and k ({k}) must be positive")
+    return filt.agg(
+        F.count(F.lit(1)).alias("set_bits"),
+    ).select(
+        "set_bits",
+        F.floor(F.pow(F.col("set_bits").cast("double") / F.lit(m_bits),
+                      F.lit(k)) * F.lit(1_000_000))
+        .cast("long").alias("fpr_micro"),
+    )
+
+
+def hll_drift(reg_old: DataFrame, reg_new: DataFrame, p: int = 8,
+              group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct-count drift between two :func:`hll_registers` snapshots
+    (M153a): per group, ``(est_old, est_new, distinct_ratio)`` — the
+    M65 ``profile_drift`` distinct-ratio signal, but computed from two
+    ≤2^p-row register tables instead of two corpus scans. Because the
+    published per-wave state folds to EXACTLY the batch registers
+    (tests/test_incremental_ingest.py), drift-from-state equals
+    drift-from-rescan bit for bit; day-over-day cost is two tiny
+    aggregates. Groups present in only one snapshot report status
+    ``added``/``removed`` (their missing side estimates 0)."""
+    eo = hll_estimate(reg_old, p, group_cols).select(
+        *group_cols, F.col("est").alias("est_old"))
+    en = hll_estimate(reg_new, p, group_cols).select(
+        *group_cols, F.col("est").alias("est_new"))
+    if group_cols:
+        joined = eo.join(en, list(group_cols), "full_outer")
+    else:
+        joined = eo.crossJoin(en)
+    z = F.lit(0.0)
+    return joined.select(
+        *group_cols,
+        F.when(F.col("est_old").isNull(), F.lit("added"))
+        .when(F.col("est_new").isNull(), F.lit("removed"))
+        .otherwise(F.lit("common")).alias("status"),
+        F.coalesce("est_old", z).alias("est_old"),
+        F.coalesce("est_new", z).alias("est_new"),
+        F.round(
+            F.when(F.coalesce("est_old", z) > 0,
+                   F.coalesce("est_new", z) / F.col("est_old"))
+            .otherwise(z), 6).alias("distinct_ratio"),
     )
 
 

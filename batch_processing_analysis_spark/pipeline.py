@@ -477,3 +477,32 @@ def expand_frontier(pages: DataFrame, robots: DataFrame, agent: str, *,
     return allowed.groupBy("canon_url").agg(
         F.count(F.lit(1)).alias("n_refs"),
         F.min("_src").alias("first_src"))
+
+
+def build_training_set(docs: DataFrame, path: str, *,
+                       benchmark: DataFrame | None = None,
+                       seed: str = "train:0", num_shards: int = 64,
+                       **prepare_kwargs) -> None:
+    """The full training-data build, end to end: ``prepare_corpus``
+    (dedup → quality/token gate → optional decontamination → language)
+    → deterministic seeded shuffle → ordered shard directories on disk.
+
+    Writes ``<path>/shard=<k>/`` parquet (sources/training_sink.py) with
+    each kept document's text plus ``predicted_lang / n_tokens /
+    quality_score / pos``; the (shard, pos) order is the reproducible
+    training order for ``seed`` — rebuilding with the same inputs and
+    seed yields byte-identical shards, a different seed a fresh epoch.
+
+    Composition is pinned to the oracle-verified pieces in
+    tests/test_pipeline_corpus.py: output rows must equal
+    ``seeded_shuffle(docs ⋈ prepare_corpus keep-set)``.
+    """
+    from .operators.ordering import seeded_shuffle
+    from .sources.training_sink import write_training_shards
+
+    kept = prepare_corpus(docs, benchmark=benchmark, **prepare_kwargs).select(
+        "doc_id", "predicted_lang", "n_tokens", "quality_score"
+    )
+    corpus = docs.select("doc_id", "text").join(kept, "doc_id")
+    ordered = seeded_shuffle(corpus, seed, num_shards)
+    write_training_shards(ordered, path)

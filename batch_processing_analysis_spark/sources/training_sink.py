@@ -171,338 +171,3 @@ def _digest_subset(df: DataFrame, shard_col: str, pos_col: str) -> dict:
         str(r["_s"]): {"n_rows": r["n_rows"], "digest": r["digest"]}
         for r in rows
     }
-
-
-def compact_shards(spark: SparkSession, path: str,
-                   shard_col: str = "shard", pos_col: str = "pos",
-                   max_records_per_file: int | None = None) -> dict:
-    """Small-file compaction for a shard directory: rewrite every
-    ``shard=<k>/`` as one (or ``max_records_per_file``-bounded) file,
-    preserving in-shard ``pos`` order — the maintenance pass that keeps
-    loader-side file listings O(shards) after many incremental appends.
-
-    Correctness is MANIFEST-DEFINED: the per-shard order-sensitive
-    digest (:func:`publish_manifest`) must be identical before and
-    after — compaction may only change the file layout, never content
-    or order; a mismatch aborts before the swap and raises. The digest
-    gate needs a published manifest at ``path``; compacting a directory
-    that was never published skips the gate (logged) and relies on the
-    staged rewrite alone.
-
-    Crash window: the swap is TWO renames (``path``→backup, staged→
-    ``path``), not one atomic move — a crash between them leaves
-    ``path`` absent. The pre-compact copy is never deleted before the
-    swap completes: recovery is ``mv <path>.__precompact__ <path>``
-    (the staged dir is scratch and can be dropped). A crash anywhere
-    before the first rename leaves the original directory untouched.
-
-    Interaction with the M118 version chain (ADVICE r5 — previously
-    the swap silently destroyed it): every ``_MANIFEST-v*.json`` is
-    digest-verified against the staged rewrite (each sealed version's
-    shard digests must be reproduced exactly — they are content/order
-    digests, not file digests, so a content-preserving layout rewrite
-    keeps them valid) and copied into the staged dir BEFORE the swap;
-    any mismatch aborts with the original directory untouched. When
-    versions exist, the head ``_MANIFEST.json`` mirror is restored
-    from the newest version manifest (it may seal a shard SUBSET,
-    which the all-shards manifest the rewrite publishes would
-    clobber). ``append_shards``'s "shard dirs are immutable once
-    published" contract is about content+order — exactly what the
-    per-version digest gate proves compaction preserved.
-
-    Returns the (re-published) manifest.
-    """
-    import json
-    import logging
-    import os
-    import shutil
-
-    staged = path.rstrip("/") + ".__compact__"
-    backup = path.rstrip("/") + ".__precompact__"
-    shutil.rmtree(staged, ignore_errors=True)
-    df = spark.read.parquet(path)
-    write_training_shards(df, staged, shard_col, pos_col,
-                          max_records_per_file)
-    new_manifest = publish_manifest(spark, staged, shard_col, pos_col)
-    mpath = os.path.join(path, MANIFEST)
-    versions = list_versions(path)
-    if os.path.exists(mpath) and not versions:
-        with open(mpath) as f:
-            old = json.load(f)
-        if old["shards"] != new_manifest["shards"]:
-            shutil.rmtree(staged)
-            raise ValueError(
-                "compaction changed shard content/order: "
-                f"old={old['shards']} new={new_manifest['shards']}"
-            )
-    elif not versions:
-        logging.getLogger(__name__).warning(
-            "compact_shards: no manifest at %s — digest-equality gate "
-            "skipped (directory was never published)", mpath,
-        )
-    # Carry the version chain: gate each sealed version against the
-    # staged content, then copy its manifest file across.
-    for v in versions:
-        with open(_version_path(path, v)) as f:
-            sealed = json.load(f)
-        for s, meta in sealed["shards"].items():
-            got = new_manifest["shards"].get(s)
-            if got != {"n_rows": meta["n_rows"],
-                       "digest": meta["digest"]}:
-                shutil.rmtree(staged)
-                raise ValueError(
-                    f"compaction would break sealed version {v}: "
-                    f"shard {s} sealed={meta} staged={got}"
-                )
-        shutil.copy2(_version_path(path, v), _version_path(staged, v))
-    if versions:
-        # Head mirror = newest version's manifest (possibly a shard
-        # subset), not the all-shards manifest the rewrite published.
-        shutil.copyfile(_version_path(staged, versions[-1]),
-                        os.path.join(staged, MANIFEST))
-        with open(_version_path(staged, versions[-1])) as f:
-            new_manifest = json.load(f)
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    os.rename(staged, path)
-    shutil.rmtree(backup)
-    return new_manifest
-
-
-# ---------------------------------------------------------------------------
-# Versioned corpus: manifest chain + time-travel reads (M118)
-# ---------------------------------------------------------------------------
-
-VERSION_PREFIX = "_MANIFEST-v"
-
-
-def _version_path(path: str, version: int) -> str:
-    import os
-
-    return os.path.join(path, f"{VERSION_PREFIX}{version:05d}.json")
-
-
-def list_versions(path: str) -> list[int]:
-    """Published versions at ``path``, ascending (empty if none)."""
-    import os
-    import re
-
-    out = []
-    for name in os.listdir(path) if os.path.isdir(path) else []:
-        m = re.fullmatch(rf"{VERSION_PREFIX}(\d{{5}})\.json", name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def append_shards(df: DataFrame, path: str, shard_col: str = "shard",
-                  pos_col: str = "pos",
-                  max_records_per_file: int | None = None) -> None:
-    """Add NEW shard directories to an existing corpus without touching
-    the old ones — the write half of the versioned-publish protocol
-    (M118). Shard dirs are IMMUTABLE once published (every sealed
-    version's digests point at them), so appending into an EXISTING
-    ``shard=<k>/`` would silently corrupt history: the incoming shard
-    ids are checked against the directory listing first and any
-    collision raises before a byte is written.
-    """
-    import os
-
-    existing = set()
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            if name.startswith(f"{shard_col}="):
-                existing.add(name.split("=", 1)[1])
-    incoming = {
-        str(r[0]) for r in df.select(shard_col).distinct().collect()
-    }
-    clash = incoming & existing
-    if clash:
-        raise ValueError(
-            f"append_shards would mutate published shard dirs "
-            f"{sorted(clash)}: shard ids must be fresh (versions are "
-            f"append-only)"
-        )
-    writer = (
-        df.repartition(F.col(shard_col))
-        .sortWithinPartitions(shard_col, pos_col)
-        .write.mode("append")
-        .partitionBy(shard_col)
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def publish_version(spark: SparkSession, path: str,
-                    shards: Sequence[int] | None = None,
-                    shard_col: str = "shard", pos_col: str = "pos",
-                    extra: dict | None = None) -> dict:
-    """Seal the next corpus VERSION (M118): the manifest-chain form of
-    :func:`publish_manifest`, giving the sealed sink snapshot reads and
-    time travel — the public snapshot-isolation recipe of the
-    log-structured table formats (Armbrust et al. 2020, "Delta Lake:
-    high-performance ACID table storage", VLDB; Iceberg's spec is the
-    same shape): data files are immutable, each commit is a NEW
-    manifest listing its file set, readers pin a manifest and never
-    see a torn state.
-
-    Version N seals the CURRENT on-disk shard set (or the explicit
-    ``shards`` subset — retiring shards from the new version without
-    deleting them, so older versions stay readable). The manifest
-    carries ``version``, ``parent`` (the previous head, or None),
-    per-shard count+digest, and columns; it is written atomically as
-    ``_MANIFEST-v{N:05d}.json`` and mirrored to the un-versioned
-    ``_MANIFEST.json`` so :func:`load_verified_shards` keeps reading
-    the head.
-
-    Crash window: a crash before the version file lands publishes
-    nothing (scratch temp only); after it lands but before the head
-    mirror, the version IS published and the mirror is one stale file
-    behind — re-running the publish (idempotent digests) or any later
-    publish repairs it. Never two writers: the version number is
-    claimed by ``O_EXCL``-like rename, and a concurrent publish of the
-    same N fails the rename.
-    """
-    import json
-    import os
-    import tempfile
-
-    df = spark.read.parquet(path)
-    if shards is not None:
-        df = df.filter(F.col(shard_col).isin(list(shards)))
-    versions = list_versions(path)
-    n = (versions[-1] + 1) if versions else 1
-    manifest = {
-        "version": n,
-        "parent": versions[-1] if versions else None,
-        "shards": _digest_subset(df, shard_col, pos_col),
-        "columns": sorted(df.columns),
-    }
-    if extra:
-        manifest["extra"] = extra
-    target = _version_path(path, n)
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    try:
-        # hard link is atomic-exclusive: the loser of a concurrent
-        # publish of the same N gets EEXIST, never a clobber.
-        os.link(tmp, target)
-    except FileExistsError:
-        raise FileExistsError(
-            f"version {n} already published at {path}") from None
-    finally:
-        os.unlink(tmp)
-    # head mirror (compat with load_verified_shards / compact_shards)
-    fd, tmp = tempfile.mkstemp(dir=path, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, os.path.join(path, MANIFEST))
-    return manifest
-
-
-def read_version(spark: SparkSession, path: str, version: int,
-                 shard_col: str = "shard",
-                 pos_col: str = "pos") -> DataFrame:
-    """Time-travel read (M118): load EXACTLY the shard set version
-    ``N`` sealed, digest-verified — a later append/retire/GC of other
-    shards cannot change what this returns (immutability + pinned
-    manifest = snapshot isolation); a mutated shard raises instead of
-    silently feeding a different corpus to a training run."""
-    import json
-    import os
-
-    vpath = _version_path(path, version)
-    if not os.path.exists(vpath):
-        raise FileNotFoundError(
-            f"version {version} not published at {path} "
-            f"(have: {list_versions(path)})"
-        )
-    with open(vpath) as f:
-        manifest = json.load(f)
-    want = set(manifest["shards"])
-    subset = spark.read.parquet(path).filter(
-        F.col(shard_col).isin([int(s) for s in want])
-    )
-    fresh = _digest_subset(subset, shard_col, pos_col)
-    for s in want:
-        sealed = manifest["shards"][s]
-        got = fresh.get(s)
-        if got != {"n_rows": sealed["n_rows"], "digest": sealed["digest"]}:
-            raise ValueError(
-                f"version {version} shard {s} fails verification: "
-                f"sealed={sealed} got={got}"
-            )
-    return subset
-
-
-def version_diff(path: str, a: int, b: int) -> dict:
-    """Driver-side summary of what changed between two versions:
-    shards added/removed (by id) and rows added/removed (from the
-    sealed counts — no data scan)."""
-    import json
-
-    def _load(v):
-        with open(_version_path(path, v)) as f:
-            return json.load(f)["shards"]
-
-    sa, sb = _load(a), _load(b)
-    added = sorted(set(sb) - set(sa), key=int)
-    removed = sorted(set(sa) - set(sb), key=int)
-    return {
-        "shards_added": added,
-        "shards_removed": removed,
-        "rows_added": sum(sb[s]["n_rows"] for s in added),
-        "rows_removed": sum(sa[s]["n_rows"] for s in removed),
-    }
-
-
-def gc_versions(path: str, keep: Sequence[int],
-                shard_col: str = "shard") -> dict:
-    """Garbage-collect history: drop every version manifest NOT in
-    ``keep`` and delete shard directories referenced by NO kept
-    version. Kept versions remain byte-identically readable
-    (:func:`read_version` re-verifies digests afterwards — asserted in
-    tests). The head ``_MANIFEST.json`` mirror is rewritten from the
-    newest KEPT version (deleted when none remain), so
-    :func:`load_verified_shards` never errors on GC'd shards or
-    silently serves a retired snapshot as the head (ADVICE r5).
-    Returns ``{"versions_dropped": [...], "shards_deleted": [...]}``.
-    """
-    import json
-    import os
-    import shutil
-
-    keep_set = {int(k) for k in keep}
-    versions = list_versions(path)
-    missing = keep_set - set(versions)
-    if missing:
-        raise ValueError(f"cannot keep unpublished versions: "
-                         f"{sorted(missing)}")
-    referenced: set[str] = set()
-    for v in keep_set:
-        with open(_version_path(path, v)) as f:
-            referenced |= set(json.load(f)["shards"])
-    dropped = []
-    for v in versions:
-        if v not in keep_set:
-            os.unlink(_version_path(path, v))
-            dropped.append(v)
-    deleted = []
-    for name in os.listdir(path):
-        if name.startswith(f"{shard_col}="):
-            sid = name.split("=", 1)[1]
-            if sid not in referenced:
-                shutil.rmtree(os.path.join(path, name))
-                deleted.append(sid)
-    # Re-point the head mirror at the newest kept version — the old
-    # mirror may reference just-deleted shards (head dropped) or a
-    # retired snapshot.
-    mpath = os.path.join(path, MANIFEST)
-    if keep_set:
-        shutil.copyfile(_version_path(path, max(keep_set)), mpath)
-    elif os.path.exists(mpath):
-        os.unlink(mpath)
-    return {"versions_dropped": dropped,
-            "shards_deleted": sorted(deleted, key=int)}

@@ -74,102 +74,6 @@ def test_hash_matches_batch_operator(spark, streamed):
     assert {r["content_hash"] for r in streamed} == batch_hashes
 
 
-def test_stream_quality_filter_matches_batch_gate(spark, sf_dir, tmp_path_factory):
-    # Stateless streaming scoring: replay the real documents table as a
-    # two-file stream; the survivors and their scores must equal the
-    # batch quality/token gate on the same rows (shared expressions).
-    from pyspark.sql.functions import col
-
-    from batch_processing_analysis_spark.operators.text_analysis import (
-        quality_features,
-    )
-    from batch_processing_analysis_spark.streaming.corpus_stream import (
-        stream_quality_filter,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    src = str(tmp_path_factory.mktemp("qstream") / "docs")
-    docs.filter(col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    docs.filter(col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    out = stream_quality_filter(stream, quality_min=0.2, tokens_min=5,
-                                tokens_max=10_000)
-    ckpt = str(tmp_path_factory.mktemp("qstream") / "ckpt")
-    q = (
-        out.writeStream.format("memory").queryName("stream_quality")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["doc_id"]: (r["n_tokens"], r["quality_score"])
-        for r in spark.sql("SELECT * FROM stream_quality").collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_tokens"], r["quality_score"])
-        for r in quality_features(docs).filter(
-            (col("quality_score") >= 0.2) & col("n_tokens").between(5, 10_000)
-        ).collect()
-    }
-    assert got == want
-    assert want  # gate keeps documents at sf0.001
-
-
-def test_stream_decontaminate_matches_batch(spark, tmp_path_factory):
-    """Replay: streaming flags == batch decontaminate flags."""
-    from batch_processing_analysis_spark.operators.decontamination import (
-        benchmark_ngrams, decontaminate,
-    )
-    from batch_processing_analysis_spark.streaming.corpus_stream import (
-        stream_decontaminate,
-    )
-
-    bench = spark.createDataFrame(
-        [(100, "one two three four five six seven eight nine")],
-        "doc_id long, text string",
-    )
-    docs = [
-        (1, "x one two three four five six seven eight tail", 0),
-        (2, "one two three four five six seven end", 1),   # 7-gram only
-        (3, "nothing shared here at all with the benchmark set", 2),
-        (4, "tiny", 3),
-    ]
-    schema = "doc_id long, text string, ingest_time timestamp"
-    src = str(tmp_path_factory.mktemp("decon") / "docs")
-    spark.createDataFrame(
-        [(i, t, T0 + timedelta(minutes=m)) for i, t, m in docs], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    grams = {r._gram for r in benchmark_ngrams(bench, n=8).collect()}
-    stream = spark.readStream.schema(schema).parquet(src)
-    ckpt = str(tmp_path_factory.mktemp("decon") / "ckpt")
-    q = (
-        stream_decontaminate(stream, grams, n=8)
-        .writeStream.format("memory").queryName("stream_decon")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    streamed = {
-        r.doc_id: r.contaminated
-        for r in spark.sql("SELECT * FROM stream_decon").collect()
-    }
-
-    batch_docs = spark.createDataFrame(
-        [(i, t) for i, t, _ in docs], "doc_id long, text string")
-    batch = {
-        r.doc_id: r.contaminated
-        for r in decontaminate(batch_docs, bench, n=8).collect()
-    }
-    assert streamed == batch
-    assert batch[1] == 1 and batch[2] == 0 and batch[4] == 0
-
-
 def test_stream_validate_matches_batch(spark, sf_dir, tmp_path_factory):
     """Replay: streaming admission flags == batch validate flags."""
     from pyspark.sql.functions import col, length

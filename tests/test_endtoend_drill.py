@@ -1,9 +1,18 @@
-"""Durability drill (VERDICT r3 stretch item): ``incremental_ingest``
-over THREE synthetic deltas, each drained through a fresh availableNow
-streaming query (a genuine restart: new query object, state only on
-disk). The survivors across both restarts must be the batch engine's
-min-id canonicals (the ingest's first-arrival winner and the min-id
-canonical coincide for time-ordered arrivals).
+"""End-to-end 100×-shaped durability drill (VERDICT r3 stretch item):
+``incremental_ingest`` → ``prepare_corpus``/``build_training_set`` →
+``publish_manifest`` chained over THREE synthetic deltas with a
+kill-restart between delta 2 and 3 — asserting the COMPOSED durable
+path, not just per-stage parity:
+
+- each delta drains through a fresh availableNow streaming query (a
+  genuine restart: new query object, state only on disk);
+- between delta 2 and 3 a publish is "killed" after the shard write
+  but before the manifest commit — consumers must refuse the torn
+  directory, and the delta-3 rebuild must supersede it cleanly;
+- the final manifest over the incrementally-ingested corpus must equal
+  the manifest of a ONE-SHOT batch build over the union of all three
+  deltas, digest for digest (the ingest's first-arrival winner and the
+  batch engine's min-id canonical coincide for time-ordered arrivals).
 """
 
 from __future__ import annotations
@@ -12,6 +21,11 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from batch_processing_analysis_spark.pipeline import build_training_set
+from batch_processing_analysis_spark.sources.training_sink import (
+    load_verified_shards,
+    publish_manifest,
+)
 from batch_processing_analysis_spark.streaming.incremental_ingest import (
     read_ingested,
     start_incremental_ingest,
@@ -39,6 +53,9 @@ DELTA3 = [
     (23, "waltz bad nymph for quick jigs vex them all", 22),
 ]
 
+BUILD_KW = dict(seed="drill:0", num_shards=4,
+                quality_min=0.0, tokens_min=1)
+
 
 def _df(spark, rows):
     return spark.createDataFrame(
@@ -56,6 +73,8 @@ def drill(spark, tmp_path_factory):
         "registry_path": str(root / "registry"),
         "checkpoint_path": str(root / "ckpt"),
     }
+    out_inc = str(root / "train_inc")
+    out_batch = str(root / "train_batch")
 
     def run_delta(rows):
         # Fresh query per delta: availableNow drains what exists and
@@ -66,14 +85,70 @@ def drill(spark, tmp_path_factory):
         )
         q.awaitTermination()
 
-    for delta in (DELTA1, DELTA2, DELTA3):
-        run_delta(delta)
-    return {"docs_inc": read_ingested(spark, paths["corpus_path"])}
+    run_delta(DELTA1)
+    run_delta(DELTA2)
+
+    # KILLED PUBLISH between delta 2 and 3: the shard write lands but
+    # the process dies before publish_manifest's atomic commit.
+    docs_d2 = read_ingested(spark, paths["corpus_path"]).select(
+        "doc_id", "text", "lang"
+    )
+    build_training_set(docs_d2, out_inc, **BUILD_KW)
+    torn_refused = False
+    try:
+        load_verified_shards(spark, out_inc)
+    except FileNotFoundError:
+        torn_refused = True
+
+    run_delta(DELTA3)  # restart after the kill; registry state on disk
+
+    # Delta-3 rebuild supersedes the torn directory (overwrite) and
+    # THEN commits the manifest — the publish protocol's happy path.
+    docs_inc = read_ingested(spark, paths["corpus_path"]).select(
+        "doc_id", "text", "lang"
+    )
+    build_training_set(docs_inc, out_inc, **BUILD_KW)
+    manifest_inc = publish_manifest(spark, out_inc)
+
+    # One-shot batch build over the raw union of all three deltas:
+    # prepare_corpus's exact-dedup stage must pick the same survivors
+    # the incremental registry kept across restarts.
+    union = _df(spark, DELTA1 + DELTA2 + DELTA3).select(
+        "doc_id", "text", "lang"
+    )
+    build_training_set(union, out_batch, **BUILD_KW)
+    manifest_batch = publish_manifest(spark, out_batch)
+
+    return {
+        "torn_refused": torn_refused,
+        "manifest_inc": manifest_inc,
+        "manifest_batch": manifest_batch,
+        "out_inc": out_inc,
+        "docs_inc": docs_inc,
+    }
+
+
+def test_torn_publish_is_refused(drill):
+    assert drill["torn_refused"], (
+        "load_verified_shards accepted a shard directory whose manifest "
+        "commit was killed"
+    )
 
 
 def test_incremental_survivors_match_batch_canonicals(drill):
     ids = {r.doc_id for r in drill["docs_inc"].collect()}
     # 1/2/3 survive delta 1; 11 dies (dup of 1 across a restart), 14
     # dies (in-batch dup of 13); 21 dies (dup of 12 across TWO
-    # restarts).
+    # restarts and the kill).
     assert ids == {1, 2, 3, 12, 13, 22, 23}
+
+
+def test_final_manifest_equals_one_shot_build(drill):
+    inc, bat = drill["manifest_inc"], drill["manifest_batch"]
+    assert inc["columns"] == bat["columns"]
+    assert inc["shards"] == bat["shards"]  # per-shard count AND digest
+
+
+def test_final_publish_verifies(spark, drill):
+    rows = load_verified_shards(spark, drill["out_inc"]).collect()
+    assert {r.doc_id for r in rows} == {1, 2, 3, 12, 13, 22, 23}

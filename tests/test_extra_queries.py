@@ -288,9 +288,9 @@ def test_redact_documents_rules_and_edges(spark):
     assert sum(r["was_redacted"] or 0 for r in out.values()) == 4
 
 
-def test_cms_overestimates(spark):
+def test_cms_overestimates_and_merges(spark):
     from batch_processing_analysis_spark.operators.sketches import (
-        cms_estimate, cms_sketch,
+        cms_estimate, cms_merge, cms_sketch,
     )
 
     rows = [("a",)] * 50 + [("b",)] * 7 + [(f"x{i}",) for i in range(40)]
@@ -305,6 +305,13 @@ def test_cms_overestimates(spark):
     assert all(est[k] >= v for k, v in true.items())
     # The heavy hitter dominates regardless of collisions elsewhere.
     assert max(est, key=lambda k: (est[k], k)) == "a"
+    # Split-build + merge == one-shot build, counter for counter.
+    half1 = spark.createDataFrame(rows[:40], "item string")
+    half2 = spark.createDataFrame(rows[40:], "item string")
+    merged = cms_merge(cms_sketch(half1, depth=4, width=64),
+                       cms_sketch(half2, depth=4, width=64))
+    assert sorted(map(tuple, merged.collect())) == \
+        sorted(map(tuple, sk.collect()))
     # Absent item estimates 0 unless every row collides.
     ghost = spark.createDataFrame([("zzz-never-seen",)], "item string")
     g = cms_estimate(sk, ghost, depth=4, width=64).collect()[0]["est"]

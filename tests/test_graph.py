@@ -96,3 +96,58 @@ def test_resolve_duplicates_prefer_column(spark):
     }
     # Longest wins; tie on n_chars=99 broken by min doc id -> 2.
     assert got == {1: 0, 2: 1, 3: 0}
+
+
+def test_pagerank_matches_integer_reference(spark):
+    from batch_processing_analysis_spark.operators.graph import pagerank
+
+    # Classic 4-node web: a hub (0) linked by everyone, plus a cycle.
+    edges = [(1, 0), (2, 0), (3, 0), (0, 1), (1, 2), (2, 3)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+
+    # Pure-Python mirror of the documented integer recurrence.
+    def ref_ranks(n_iter):
+        nodes = {s for s, _ in edges} | {d for _, d in edges}
+        deg = {}
+        for s, _ in edges:
+            deg[s] = deg.get(s, 0) + 1
+        r = {v: 1_000_000 for v in nodes}
+        for _ in range(n_iter):
+            inc = {v: 0 for v in nodes}
+            for s, d in edges:
+                inc[d] += (85 * r[s]) // (100 * deg[s])
+            r = {v: 150_000 + inc[v] for v in nodes}
+        return r
+
+    got = {row["id"]: row["rank_micros"]
+           for row in pagerank(df, n_iterations=10).collect()}
+    assert got == ref_ranks(10)          # bit-exact, not approximate
+    assert max(got, key=got.get) == 0    # the hub dominates
+
+
+def test_pagerank_dangling_and_isolated(spark):
+    from batch_processing_analysis_spark.operators.graph import pagerank
+
+    # 1 -> 2 (2 dangles); 9 isolated, supplied via nodes.
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    nodes = spark.createDataFrame([(9,)], "id long")
+    got = {r["id"]: r["rank_micros"]
+           for r in pagerank(df, n_iterations=3, nodes=nodes).collect()}
+    # Isolated + dangling nodes keep exactly the teleport share as
+    # outflow; node 2 receives 1's damped rank each round.
+    assert set(got) == {1, 2, 9}
+    assert got[1] == 150_000 and got[9] == 150_000
+    assert got[2] == 150_000 + (85 * 150_000) // 100
+
+
+def test_pagerank_releases_superstep_checkpoints(spark):
+    from batch_processing_analysis_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 20) for i in range(20)], "src long, dst long"
+    )
+    before = _persistent_ids(spark)
+    out = pagerank(edges, n_iterations=6)
+    out.count()
+    new = _persistent_ids(spark) - before
+    assert len(new) <= 1, new  # only the final rank table survives

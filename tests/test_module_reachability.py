@@ -40,6 +40,39 @@ ALLOWED_DEFS = {
     f"{PKG}.sources.event_log.write_event_log_csv",
 }
 
+# Dead, and kept only with the 92 tests that check them: one change
+# deletes at most a tenth of the suite's tests, so these go next
+# (ROADMAP item 5). Add nothing here; only remove.
+DEFERRED = {f"{PKG}.operators.png_codec", f"{PKG}.sources.bucketed"}
+DEFERRED_DEFS = {
+    f"{PKG}.{name}" for name in (
+        "operators.graph.pagerank",
+        "operators.linalg.pca_whitener",
+        "operators.multimodal.decode_audio",
+        "operators.ordering.bucket_by_bounds",
+        "operators.ordering.quantile_bounds",
+        "operators.robots.robots_sitemaps",
+        "operators.similarity.kmeans_centroids",
+        "operators.sketches.bloom_fpr_micro",
+        "operators.sketches.bloom_merge",
+        "operators.sketches.cms_merge",
+        "operators.sketches.hist_merge",
+        "operators.sketches.hll_drift",
+        "operators.sketches.hll_estimate",
+        "operators.sketches.hll_merge",
+        "pipeline.build_training_set",
+        "sources.training_sink.load_verified_shards",
+        "sources.training_sink.publish_manifest",
+        "sources.training_sink.read_training_shards",
+        "sources.training_sink.write_training_shards",
+        "streaming.corpus_stream.stream_exact_dedup",
+        "streaming.corpus_stream.stream_heavy_hitter_summary",
+        "streaming.corpus_stream.stream_validate",
+    )
+}
+ALLOWED |= DEFERRED
+ALLOWED_DEFS |= DEFERRED_DEFS
+
 
 def _roots() -> list[Path]:
     return [*(REPO / "tools").rglob("*.py"), REPO / "bench.py",

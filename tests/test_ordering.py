@@ -83,9 +83,9 @@ def test_pack_contexts_rejects_bad_len(spark):
         pack_contexts(docs, 0)
 
 
-def test_quality_buckets(spark):
+def test_quality_buckets_and_bounds_twin(spark):
     from batch_processing_analysis_spark.operators.ordering import (
-        quality_buckets,
+        bucket_by_bounds, quality_buckets,
     )
 
     rows = [(i, "en", float(i)) for i in range(1, 9)]  # scores 1..8
@@ -93,6 +93,44 @@ def test_quality_buckets(spark):
     nt = {r["doc_id"]: r["bucket"] for r in quality_buckets(df, 4).collect()}
     # 8 rows, 4 buckets -> 2 per bucket, ordered by score.
     assert nt == {1: 1, 2: 1, 3: 2, 4: 2, 5: 3, 6: 3, 7: 4, 8: 4}
+    # bounds twin with the matching boundaries agrees exactly.
+    bb = {
+        r["doc_id"]: r["bucket"]
+        for r in bucket_by_bounds(df, [3.0, 5.0, 7.0]).collect()
+    }
+    assert bb == nt
+
+
+def test_bucket_by_bounds_open_ends(spark):
+    from batch_processing_analysis_spark.operators.ordering import (
+        bucket_by_bounds,
+    )
+
+    df = spark.createDataFrame(
+        [(1, -99.0), (2, 0.5), (3, 99.0)], "doc_id long, quality_score double"
+    )
+    got = {r["doc_id"]: r["bucket"] for r in bucket_by_bounds(df, [0.0, 1.0]).collect()}
+    assert got == {1: 1, 2: 2, 3: 3}
+
+
+def test_quantile_bounds_feed_bucket_by_bounds(spark):
+    from batch_processing_analysis_spark.operators.ordering import (
+        bucket_by_bounds, quantile_bounds,
+    )
+
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(1, 101)],
+        "doc_id long, quality_score double",
+    )
+    bounds = quantile_bounds(df, 4, relative_error=0.0001)
+    assert len(bounds) == 3 and bounds == sorted(bounds)
+    pops = (
+        bucket_by_bounds(df, bounds).groupBy("bucket").count().collect()
+    )
+    sizes = {r["bucket"]: r["count"] for r in pops}
+    assert set(sizes) == {1, 2, 3, 4}
+    # near-equal populations (exact quantiles at this error bound)
+    assert all(20 <= v <= 30 for v in sizes.values()), sizes
 
 
 def test_assign_splits_disjoint_exhaustive_group_cohesive(spark):

@@ -114,6 +114,40 @@ def test_prepare_corpus_decontaminated_is_clean_subset(spark, sf_dir):
     }
 
 
+def test_build_training_set_pins_to_verified_pieces(spark, sf_dir, tmp_path):
+    from batch_processing_analysis_spark.operators.ordering import seeded_shuffle
+    from batch_processing_analysis_spark.pipeline import (
+        build_training_set,
+        prepare_corpus,
+    )
+    from batch_processing_analysis_spark.sources.training_sink import (
+        read_training_shards,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = str(tmp_path / "train")
+    build_training_set(docs, out, seed="train:7", num_shards=8)
+
+    kept = prepare_corpus(docs).select(
+        "doc_id", "predicted_lang", "n_tokens", "quality_score"
+    )
+    want = sorted(
+        tuple(r)
+        for r in seeded_shuffle(
+            docs.select("doc_id", "text").join(kept, "doc_id"), "train:7", 8
+        )
+        .select("doc_id", "shard", "pos", "predicted_lang", "n_tokens")
+        .collect()
+    )
+    got = sorted(
+        tuple(r)
+        for r in read_training_shards(spark, out)
+        .select("doc_id", "shard", "pos", "predicted_lang", "n_tokens")
+        .collect()
+    )
+    assert got == want and got
+
+
 def test_prepare_corpus_near_dedup_is_subset(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {r["doc_id"] for r in prepare_corpus(docs).collect()}

@@ -1,6 +1,6 @@
-"""Round-5 additions, fifth batch: integer-exact Gram accumulation
-(M115, the distributed pass of PCA whitening) — numpy-recomputed
-semantics and partitioning independence."""
+"""Round-5 additions, fifth batch: integer-exact Gram accumulation +
+PCA whitening (M115) — numpy-recomputed semantics and partitioning
+independence."""
 
 from __future__ import annotations
 
@@ -55,7 +55,39 @@ def test_gram_partitioning_independent(spark):
     assert outs[0] == outs[1] == _expected_gram(vecs)
 
 
-def test_gram_rejects_bad_quant(spark):
+def test_whitener_identity_covariance_on_planted_anisotropy(spark):
+    rng = np.random.default_rng(5)
+    A = rng.normal(size=(6, 6)) * np.array([5, 3, 2, 1, 0.5, 0.1])
+    X = rng.normal(size=(800, 6)) @ A.T + rng.normal(size=6) * 4
+    rows = LA.gram_accumulate(_emb_df(spark, list(X))).collect()
+    mu, W = LA.pca_whitener(rows)
+    assert np.allclose(mu, X.mean(axis=0), atol=1e-5)
+    Y = (X - mu) @ W
+    cov = np.cov(Y, rowvar=False, bias=True)
+    assert np.allclose(cov, np.eye(W.shape[1]), atol=1e-2)
+    # eigenvalues match a direct numpy solve (quantization-limited)
+    direct = np.sort(np.linalg.eigvalsh(np.cov(X, rowvar=False,
+                                               bias=True)))[::-1]
+    recon = np.sort(1.0 / (W ** 2).sum(axis=0))[::-1]
+    # quantization at Q=1e6 perturbs cov entries by ~1e-5 absolute
+    assert np.allclose(recon, direct[: W.shape[1]], rtol=1e-3, atol=1e-3)
+
+
+def test_whitener_drops_rank_deficient_directions(spark):
+    rng = np.random.default_rng(6)
+    base = rng.normal(size=(300, 3))
+    X = np.hstack([base, np.full((300, 1), 2.5)])  # constant column
+    rows = LA.gram_accumulate(_emb_df(spark, list(X))).collect()
+    mu, W = LA.pca_whitener(rows)
+    assert W.shape == (4, 3)
+    mu2, W2 = LA.pca_whitener(rows, k=2)
+    assert W2.shape == (4, 2)
+
+
+def test_gram_rejects_bad_quant_and_tiny_n(spark):
     df = _emb_df(spark, [[1.0, 2.0]])
     with pytest.raises(ValueError):
         LA.gram_accumulate(df, quant=0)
+    rows = LA.gram_accumulate(df).collect()
+    with pytest.raises(ValueError):
+        LA.pca_whitener(rows)

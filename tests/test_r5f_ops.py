@@ -1,12 +1,13 @@
 """Round-5 additions, sixth batch: relational Bloom filter (M117) —
 bit positions replayed in plain Python (same md5 derivation), so
-build/probe are checked for EXACT parity, plus the structural
-guarantees (no false negatives ever, certain absences).
+build/probe/merge are checked for EXACT parity, plus the structural
+guarantees (no false negatives ever, certain absences, OR-merge).
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,12 +61,33 @@ def test_bloom_probe_no_false_negatives_and_exact_flags(spark):
     assert sum(1 - got[v] for v in PROBED[50:]) > 300
 
 
+def test_bloom_merge_equals_build_on_union(spark):
+    a, b = INSERTED[:150], INSERTED[120:]
+    fa = SK.bloom_build(_items(spark, a), m_bits=M, k=K, seed=SEED)
+    fb = SK.bloom_build(_items(spark, b), m_bits=M, k=K, seed=SEED)
+    merged = {r["bit"] for r in SK.bloom_merge(fa, fb).collect()}
+    union = {r["bit"] for r in SK.bloom_build(
+        _items(spark, INSERTED), m_bits=M, k=K, seed=SEED).collect()}
+    assert merged == union
+
+
+def test_bloom_fpr_micro_matches_formula(spark):
+    filt = SK.bloom_build(_items(spark, INSERTED), m_bits=M, k=K,
+                          seed=SEED)
+    row = SK.bloom_fpr_micro(filt, m_bits=M, k=K).collect()[0]
+    nbits = len(_py_bits(INSERTED))
+    assert row["set_bits"] == nbits
+    assert row["fpr_micro"] == math.floor((nbits / M) ** K * 1_000_000)
+
+
 def test_bloom_rejects_bad_args(spark):
     df = _items(spark, ["x"])
     with pytest.raises(ValueError):
         SK.bloom_build(df, m_bits=0)
     with pytest.raises(ValueError):
         SK.bloom_build(df, k=0)
+    with pytest.raises(ValueError):
+        SK.bloom_fpr_micro(df, m_bits=10, k=0)
 
 
 # --------------------------------------------------------------- M121

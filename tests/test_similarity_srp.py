@@ -98,6 +98,27 @@ def test_srp_empty_vector_gets_zero_signature(spark):
         assert got[1] != 0, strategy
 
 
+def test_ivf_kmeans_centroids_recall(spark, sf_dir):
+    # IVF with trained (seeded k-means||) centroids: plan shape is the
+    # same bucket-probe join as the stride variant; recall@5 vs the
+    # exact brute-force baseline must be solid on the clustered fixture
+    # (stride centroids are arbitrary points; trained ones are density
+    # modes, so they should do at least as well within noise).
+    embs = load_table(spark, sf_dir, "embeddings")
+    queries = embs.limit(10)
+    exact = S.brute_force_topk(embs, queries, k=5)
+    cents = S.kmeans_centroids(embs, n_clusters=8, seed=42)
+    approx = S.ivf_topk(embs, queries, k=5, nprobe=3, centroids=cents)
+
+    def pairs(df):
+        return {(r.query_id, r.neighbor_id) for r in df.collect()}
+
+    e, a = pairs(exact), pairs(approx)
+    assert len(e) > 0
+    recall = len(e & a) / len(e)
+    assert recall >= 0.6, recall
+
+
 def test_srp_max_bucket_drops_degenerate_buckets(spark):
     # Identical vectors share every band bucket; the cap must zero the
     # candidate set instead of emitting the quadratic join.

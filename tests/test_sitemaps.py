@@ -5,6 +5,7 @@ the census in SQL at corpus scale."""
 
 from __future__ import annotations
 
+from batch_processing_analysis_spark.operators import robots as RB
 from batch_processing_analysis_spark.operators import sitemaps as SM
 
 URLSET = "\n".join([
@@ -99,6 +100,28 @@ def test_expand_sitemap_indexes(spark):
     shallow = {r["loc"] for r in SM.expand_sitemap_indexes(
         seeds, payloads, max_depth=1).collect()}
     assert shallow == {"https://a.com/x", "https://b.com/p0"}
+
+
+def test_robots_sitemap_directive(spark):
+    rb = spark.createDataFrame(
+        [("a.com", "\n".join([
+            "Sitemap: https://a.com/sitemap.xml",
+            "User-agent: *",
+            "Disallow: /x",
+            "sitemap: https://a.com/sitemap2.xml  # trailing comment",
+            "Sitemap:",
+        ])),
+         ("b.com", "User-agent: *\nDisallow: /")],
+        "domain string, robots_txt string")
+    got = sorted((r["domain"], r["sitemap_url"])
+                 for r in RB.robots_sitemaps(rb).collect())
+    assert got == [("a.com", "https://a.com/sitemap.xml"),
+                   ("a.com", "https://a.com/sitemap2.xml")]
+    # the group-blind sitemap parse must not disturb the group scan
+    pol = RB.parse_robots(rb)
+    assert {(r["domain"], r["agent"], r["pattern"])
+            for r in pol.collect()} == {("a.com", "*", "/x"),
+                                        ("b.com", "*", "/")}
 
 
 def test_no_python_in_plan(spark):

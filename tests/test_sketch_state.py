@@ -6,9 +6,12 @@ family. Pins:
   hash60 convention (the Bloom/CMS discipline — the DuckDB oracle
   twin reproduces the same positions because tests prove the
   convention, not because two Spark runs agree);
-- the histogram's ≤2^−s relative bucket-width guarantee + quantile
-  bracket vs the exact percentile, and drift from published state
-  equal to drift from a rescan;
+- EXACT merge identities: merge(sketch(A), sketch(B)) == sketch(A∪B)
+  row-for-row (max for HLL, sum for the histogram), including a
+  3-wave fold and HLL's duplicate-re-ingestion idempotence;
+- estimate accuracy brackets (HLL ≈1.04/√m; linear counting in the
+  small range) and the histogram's ≤2^−s relative bucket-width
+  guarantee + quantile bracket vs the exact percentile;
 - the documented edge policies: NULL exclusion (HLL), ≤0 clamp to
   the lo=0 bucket (histogram), parameter validation.
 """
@@ -23,7 +26,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_processing_analysis_spark.operators.sketches import (
+    hist_merge,
     hist_quantiles,
+    hll_estimate,
+    hll_merge,
     hll_registers,
     log_histogram,
 )
@@ -63,6 +69,73 @@ def test_hll_registers_match_python_replay(spark):
     assert got == want
 
 
+def test_hll_merge_equals_registers_on_union(spark):
+    a = spark.range(0, 3000).select(
+        F.concat(F.lit("a"), F.col("id")).alias("item"))
+    b = spark.range(0, 3000).select(
+        F.concat(F.lit("b"), F.col("id")).alias("item"))
+    merged = {(r["bucket"], r["r"]) for r in hll_merge(
+        hll_registers(a, "item", p=P),
+        hll_registers(b, "item", p=P)).collect()}
+    union = {(r["bucket"], r["r"]) for r in hll_registers(
+        a.unionByName(b), "item", p=P).collect()}
+    assert merged == union
+
+
+def test_hll_wave_fold_and_reingest_idempotence(spark):
+    full = spark.range(0, 9000).select(
+        F.concat(F.lit("t"), F.col("id")).alias("item"))
+    waves = [full.filter(F.col("item").substr(2, 9).cast("long") % 3 == i)
+             for i in range(3)]
+    folded = hll_registers(waves[0], "item", p=P)
+    for w in waves[1:]:
+        folded = hll_merge(folded, hll_registers(w, "item", p=P))
+    # re-ingest wave 0 — max is idempotent, the fold must not move
+    folded_dup = hll_merge(folded, hll_registers(waves[0], "item", p=P))
+    batch = {(r["bucket"], r["r"])
+             for r in hll_registers(full, "item", p=P).collect()}
+    assert {(r["bucket"], r["r"]) for r in folded.collect()} == batch
+    assert {(r["bucket"], r["r"]) for r in folded_dup.collect()} == batch
+
+
+def test_hll_estimate_accuracy_normal_range(spark):
+    n = 20_000
+    df = spark.range(0, n).select(
+        F.concat(F.lit("v"), F.col("id")).alias("item"))
+    est = hll_estimate(hll_registers(df, "item", p=P), p=P).collect()[0]
+    # σ ≈ 1.04/√256 = 6.5%; 3σ bracket with a little slack
+    assert abs(est["est"] - n) / n < 0.25
+    assert est["set_buckets"] + est["zeros"] == M
+
+
+def test_hll_estimate_linear_counting_small_range(spark):
+    n = 40
+    df = spark.range(0, n).select(
+        F.concat(F.lit("s"), F.col("id")).alias("item"))
+    est = hll_estimate(hll_registers(df, "item", p=P), p=P).collect()[0]
+    # linear counting is near-exact when zeros ≈ m
+    assert abs(est["est"] - n) / n < 0.10
+
+
+def test_hll_estimate_matches_python_denominator(spark):
+    items = [f"x{i}" for i in range(1000)]
+    df = spark.createDataFrame([(x,) for x in items], "item string")
+    est = hll_estimate(hll_registers(df, "item", p=P), p=P).collect()[0]
+    regs = _py_registers(items)
+    fp = W_BITS + 1
+    denom = sum(1 << (fp - r) for r in regs.values()) \
+        + (M - len(regs)) * (1 << fp)
+    assert est["denom_fp"] == denom
+
+
+def test_hll_rejects_bad_p(spark):
+    df = spark.range(1).select(F.lit("a").alias("item"))
+    with pytest.raises(ValueError, match=r"p must be in \[4, 16\]"):
+        hll_registers(df, "item", p=3)
+    with pytest.raises(ValueError, match=r"p must be in \[4, 16\]"):
+        hll_estimate(df, p=17)
+
+
 def test_log_histogram_buckets_match_python(spark):
     rng = random.Random(8)
     vals = (list(range(0, 70)) + [-5, -1, 0]
@@ -87,6 +160,18 @@ def test_log_histogram_relative_width_guarantee():
         assert v - lo <= max(lo >> s, 0)
         if v.bit_length() - 1 <= s:
             assert lo == v  # small values bucket exactly
+
+
+def test_hist_merge_equals_batch_three_waves(spark):
+    full = spark.range(0, 9000).select(
+        (F.col("id") * F.col("id") % 100_000).alias("v"))
+    waves = [full.filter(F.col("v") % 3 == i) for i in range(3)]
+    folded = log_histogram(waves[0], "v", s=4)
+    for w in waves[1:]:
+        folded = hist_merge(folded, log_histogram(w, "v", s=4))
+    batch = {(r["lo"], r["cnt"])
+             for r in log_histogram(full, "v", s=4).collect()}
+    assert {(r["lo"], r["cnt"]) for r in folded.collect()} == batch
 
 
 def test_hist_quantiles_bracket_exact_percentiles(spark):
@@ -127,6 +212,34 @@ def test_hist_quantiles_grouped_and_clamp_policy(spark):
     assert b50["q_lo"] == 0 and b50["n"] == 4
 
 
+def test_published_state_roundtrip_then_incremental_merge(spark, tmp_path):
+    """The 'publishable' claim, end to end: yesterday's registers /
+    histogram persist to parquet, today reads them back and folds in
+    a delta wave — result equals the batch sketch over the union."""
+    base = spark.range(0, 4000).select(
+        F.concat(F.lit("d"), F.col("id")).alias("item"),
+        (F.col("id") % 7919 + 1).alias("v"))
+    delta = spark.range(4000, 6000).select(
+        F.concat(F.lit("d"), F.col("id")).alias("item"),
+        (F.col("id") % 7919 + 1).alias("v"))
+
+    hll_path = str(tmp_path / "hll_registers")
+    hll_registers(base, "item", p=P).write.parquet(hll_path)
+    merged = hll_merge(spark.read.parquet(hll_path),
+                       hll_registers(delta, "item", p=P))
+    batch = hll_registers(base.unionByName(delta), "item", p=P)
+    assert ({(r["bucket"], r["r"]) for r in merged.collect()}
+            == {(r["bucket"], r["r"]) for r in batch.collect()})
+
+    hist_path = str(tmp_path / "hist_buckets")
+    log_histogram(base, "v", s=4).write.parquet(hist_path)
+    hmerged = hist_merge(spark.read.parquet(hist_path),
+                         log_histogram(delta, "v", s=4))
+    hbatch = log_histogram(base.unionByName(delta), "v", s=4)
+    assert ({(r["lo"], r["cnt"]) for r in hmerged.collect()}
+            == {(r["lo"], r["cnt"]) for r in hbatch.collect()})
+
+
 def test_hist_rejects_bad_args(spark):
     df = spark.range(1).select(F.col("id").alias("v"))
     with pytest.raises(ValueError, match="s must be in"):
@@ -138,6 +251,65 @@ def test_hist_rejects_bad_args(spark):
 # ---------------------------------------------------------------------------
 # M153: sketch-to-sketch census drift (VERDICT r8 stretch 8)
 # ---------------------------------------------------------------------------
+
+def test_hll_drift_from_state_equals_rescan(spark, tmp_path):
+    """Day-over-day replay: day-1 registers published to parquet, day-2
+    state = fold(day-1 state, delta registers) — NO rescan of day-1
+    raw data — must yield the exact drift report of the raw-scan form
+    (registers rebuilt from both full corpora)."""
+    from batch_processing_analysis_spark.operators.sketches import (
+        hll_drift,
+    )
+
+    day1 = spark.range(0, 3000).select(
+        (F.when(F.col("id") % 2 == 0, "web").otherwise("books"))
+        .alias("source"),
+        F.concat(F.lit("tok"), (F.col("id") % 900).cast("string"))
+        .alias("token"))
+    delta = spark.range(0, 2000).select(
+        (F.when(F.col("id") % 2 == 0, "web").otherwise("books"))
+        .alias("source"),
+        F.concat(F.lit("new"), F.col("id").cast("string"))
+        .alias("token"))
+
+    pub = str(tmp_path / "day1_registers")
+    hll_registers(day1, "token", p=P, group_cols=("source",)) \
+        .write.parquet(pub)
+    state_old = spark.read.parquet(pub)
+    state_new = hll_merge(
+        state_old,
+        hll_registers(delta, "token", p=P, group_cols=("source",)),
+        group_cols=("source",))
+
+    from_state = {tuple(r) for r in hll_drift(
+        state_old, state_new, p=P, group_cols=("source",)).collect()}
+    rescan = {tuple(r) for r in hll_drift(
+        hll_registers(day1, "token", p=P, group_cols=("source",)),
+        hll_registers(day1.unionByName(delta), "token", p=P,
+                      group_cols=("source",)),
+        p=P, group_cols=("source",)).collect()}
+    assert from_state == rescan and from_state
+    ratios = {r[0]: r[-1] for r in from_state}
+    # the delta roughly triples web/books vocabulary — drift visible
+    assert all(v > 1.5 for v in ratios.values()), ratios
+
+
+def test_hll_drift_added_removed_status(spark):
+    from batch_processing_analysis_spark.operators.sketches import (
+        hll_drift,
+    )
+
+    old = hll_registers(
+        spark.createDataFrame([("a", "x")], "source string, token string"),
+        "token", p=P, group_cols=("source",))
+    new = hll_registers(
+        spark.createDataFrame([("b", "y")], "source string, token string"),
+        "token", p=P, group_cols=("source",))
+    got = {r["source"]: (r["status"], r["distinct_ratio"])
+           for r in hll_drift(old, new, p=P,
+                              group_cols=("source",)).collect()}
+    assert got["a"][0] == "removed" and got["b"][0] == "added"
+    assert got["b"][1] == 0.0  # est_old 0 -> ratio reports 0 by policy
 
 
 def test_hist_drift_from_state_equals_rescan_and_m75_semantics(
@@ -152,9 +324,7 @@ def test_hist_drift_from_state_equals_rescan_and_m75_semantics(
     pub = str(tmp_path / "day1_hist")
     log_histogram(day1, "v", s=4).write.parquet(pub)
     state_old = spark.read.parquet(pub)
-    # fold the delta's buckets into the published state: counts add
-    state_new = (state_old.unionByName(log_histogram(delta, "v", s=4))
-                 .groupBy("lo").agg(F.sum("cnt").alias("cnt")))
+    state_new = hist_merge(state_old, log_histogram(delta, "v", s=4))
 
     from_state = {tuple(r) for r in hist_drift(state_old,
                                                state_new).collect()}

@@ -118,30 +118,3 @@ def test_manifest_publish_verify_and_tamper(spark, tmp_path):
         load_verified_shards(spark, path, shards=[2])
     # Untouched shards still verify.
     assert load_verified_shards(spark, path, shards=[0, 1]).count() == 20
-
-
-def test_compact_shards_preserves_digest_and_drops_files(spark, tmp_path):
-    import glob
-
-    from batch_processing_analysis_spark.sources.training_sink import (
-        compact_shards, load_verified_shards, publish_manifest,
-        write_training_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i % 2, i // 2, f"doc{i}") for i in range(40)],
-        "shard long, pos long, text string",
-    )
-    path = str(tmp_path / "frag")
-    # Fragmented layout: ≤3 records per file -> ~7 files per shard.
-    write_training_shards(df, path, max_records_per_file=3)
-    before = publish_manifest(spark, path)
-    n_before = len(glob.glob(f"{path}/shard=*/*.parquet"))
-    assert n_before >= 10
-
-    after = compact_shards(spark, path)
-    n_after = len(glob.glob(f"{path}/shard=*/*.parquet"))
-    assert n_after == 2  # one file per shard
-    assert after["shards"] == before["shards"]  # content+order identical
-    # Verified loader accepts the compacted directory.
-    assert load_verified_shards(spark, path).count() == 40
